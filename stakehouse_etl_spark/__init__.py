@@ -8,8 +8,9 @@ idiomatic Spark DataFrame library:
 - every reference table is a Parquet-backed DataFrame (SURVEY §1.2),
 - every reference operator (SURVEY §2) is a composable
   ``fn(DataFrame, ...) -> DataFrame``,
-- the three reference pipelines (extract / transform / serve,
-  SURVEY §3) are declarative DataFrame jobs in :mod:`plans`,
+- the reference pipelines (extract / transform, SURVEY §3) are
+  catalog queries in :mod:`queries`, and its serving endpoints are
+  parameterized DataFrame queries in :mod:`plans`,
 - incremental state (watermarks, bounded catch-up, backfill,
   SURVEY §2.9) lives in :mod:`streaming`,
 - beyond-reference, large-scale training-data operators

@@ -70,21 +70,6 @@ def calc_losses_py(balances_desc: list[float]) -> float:
     return float(-sum(d for d in deltas if d < 0))
 
 
-def positive_part(delta: Column) -> Column:
-    """Earnings contribution of one delta: max(delta, 0)."""
-    return F.greatest(delta, F.lit(0.0))
-
-
-def negative_part(delta: Column) -> Column:
-    """Loss contribution of one delta: −min(delta, 0) (non-negative)."""
-    return -F.least(delta, F.lit(0.0))
-
-
 def gwei_to_eth(col: Column) -> Column:
     """F4: gwei → ETH."""
     return col / F.lit(float(ONE_GWEI))
-
-
-def wei_to_eth(col: Column) -> Column:
-    """F4: wei → ETH."""
-    return col / F.lit(1e18)

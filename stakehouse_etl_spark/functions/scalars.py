@@ -1,4 +1,4 @@
-"""Scalar function library (SURVEY §2.8 F2–F10).
+"""Scalar function library (SURVEY §2.8 F2, F5, F7).
 
 All pure column expressions — evaluated JVM-side inside whole-stage
 codegen; no Python UDFs. Reference sites cited per function.
@@ -24,11 +24,6 @@ def slot_to_epoch(slot: Column) -> Column:
     return F.floor(slot / SLOTS_PER_EPOCH).cast("long")
 
 
-# --- F3: block -> epoch (src/index_validator_handler.py:52-54) ---
-def block_to_epoch(block: Column, genesis_block: int) -> Column:
-    return F.floor((block - genesis_block) / SLOTS_PER_EPOCH).cast("long")
-
-
 # --- F5: conditional scoring bands (src/api_handler.py:470-475,504-509) ---
 def health_score(balance_gwei: Column) -> Column:
     """Validator health: <31.75 ETH → 2 (critical), <32 ETH → 1, else 0."""
@@ -50,10 +45,6 @@ def redemption_band(rate: Column) -> Column:
 
 # --- F7: string ops (src/api_handler.py:594; src/index_validator_handler.py:85,90;
 #     src/utils/sqs.py:31-32) ---
-def lower_key(col: Column) -> Column:
-    return F.lower(col)
-
-
 def split_transfer_from(value: Column) -> Column:
     """'from-to' transfer-event encoding → from part."""
     return F.split(value, "-").getItem(0)
@@ -66,31 +57,3 @@ def split_transfer_to(value: Column) -> Column:
 def message_id(col: Column) -> Column:
     """sha256 hex digest (dedup id for message streams)."""
     return F.sha2(col.cast("string"), 256)
-
-
-# --- F8: date helpers (src/utils/apiUtils.py:52-53, src/apr_sync_handler.py:47) ---
-def date_days_ago(lag_days: int) -> Column:
-    return F.date_sub(F.current_date(), lag_days)
-
-
-def yesterday() -> Column:
-    return F.date_sub(F.current_date(), 1)
-
-
-# --- F9: null / default handling ---
-def with_default(col: Column, default: float = 0.0) -> Column:
-    return F.coalesce(col, F.lit(default))
-
-
-def clamp_nonneg(col: Column) -> Column:
-    """max(0, x) — e.g. net slashing after top-ups (src/api_handler.py:480)."""
-    return F.greatest(col, F.lit(0.0))
-
-
-# --- F10: JSON wire format (src/extract_handler.py:98,161) ---
-def to_message_json(*cols: Column) -> Column:
-    return F.to_json(F.struct(*cols))
-
-
-def from_message_json(col: Column, schema: str) -> Column:
-    return F.from_json(col, schema)

@@ -10,7 +10,7 @@ needs the *reconciliation-shaped* harness: recompute per-key totals
 from the warehouse, fetch the same totals from external sources,
 full-outer-join, classify, report.
 
-This module is that harness, env-gated like the PIL/Delta arms:
+This module is that harness:
 
 - a source is any location yielding JSON ``[{"key": ..., "value": N},
   ...]`` — an ``http(s)://`` endpoint (stdlib urllib, bounded

@@ -279,10 +279,9 @@ def write_cdc(
     """Apply one CDC batch (upserts + delete tombstones) to the table.
 
     Within the batch the LAST op per key (by ``seq_cols``, then an
-    ``op_col`` desc tiebreaker, then a payload-hash tiebreaker —
-    both mirrored in ``apply_cdc_delta`` so even full ties resolve
-    identically in both arms and across runs, never by physical row
-    order) decides: delete removes the key, anything
+    ``op_col`` desc tiebreaker, then a payload-hash tiebreaker — so
+    even full ties resolve identically across runs, never by physical
+    row order) decides: delete removes the key, anything
     else (including a NULL op — malformed change records upsert rather
     than silently vanishing) upserts the row. Same single-shuffle merge shape as
     :func:`write_upsert`, plus one anti-join for the tombstones — the
@@ -302,8 +301,7 @@ def write_cdc(
     # op_col (e.g. two equal-seq upserts with different payloads)
     # would otherwise resolve by physical row order (review r5). The
     # xxhash64 over the remaining columns in sorted-name order is
-    # content-deterministic across runs and arms; mirrored in
-    # apply_cdc_delta.
+    # content-deterministic across runs.
     payload_cols = sorted(
         c for c in batch.columns
         if c not in set(keys) | set(seq_cols) | {op_col}

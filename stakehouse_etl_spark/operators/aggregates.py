@@ -26,29 +26,6 @@ def exact_money_sum(col: str | Column, scale: int = 100) -> Column:
     return F.sum(F.round(c * scale).cast("long")) / float(scale)
 
 
-def exact_money_avg(col: str | Column, scale: int = 100) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(F.round(c * scale).cast("long")) / float(scale)) / F.count(c)
-
-
-def grouped_summary(
-    df: DataFrame,
-    keys: list[str],
-    sum_cols: list[str] | None = None,
-    avg_cols: list[str] | None = None,
-    money: bool = True,
-) -> DataFrame:
-    """A1–A7 composite: MAX/MIN/SUM/AVG/COUNT grouped by ``keys``."""
-    aggs: list[Column] = [F.count(F.lit(1)).alias("n_rows")]
-    for c in sum_cols or []:
-        expr = exact_money_sum(c) if money else F.sum(c)
-        aggs.append(expr.alias(f"sum_{c}"))
-    for c in avg_cols or []:
-        expr = exact_money_avg(c) if money else F.avg(c)
-        aggs.append(expr.alias(f"avg_{c}"))
-    return df.groupBy(*keys).agg(*aggs)
-
-
 def two_level_rollup(
     df: DataFrame,
     fine_keys: list[str],
@@ -71,11 +48,6 @@ def two_level_rollup(
     return fine.groupBy(*coarse_keys).agg(
         F.sum(f"{fine_agg}_{value}").alias(f"{fine_agg}_{value}")
     )
-
-
-def distinct_keys(df: DataFrame, cols: list[str]) -> DataFrame:
-    """A6: SELECT DISTINCT — hash aggregate, map-side partials first."""
-    return df.select(*cols).distinct()
 
 
 def group_collect(

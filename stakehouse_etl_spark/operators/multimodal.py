@@ -4,10 +4,10 @@ Design for image/audio/video at 100 TB (per the build brief): media
 lives as an opaque ``binary`` column plus a typed metadata struct;
 decode / feature-extract / resize / frame-sample run as Arrow-batched
 ``mapInPandas`` stages so bytes never round-trip through Python row
-objects. The actual codec calls are STUBBED here (no image/audio libs
-in this container — ``decode_media`` raises, ``fake_decode`` is the
-deterministic stand-in); the Spark-side plumbing — schema, partition
-flow, UDF signature, batch shape — is real and tested.
+objects. The codecs here are numpy BMP/WAV (fully specified byte
+layouts, below) plus the deterministic ``fake_decode`` stand-in; the
+Spark-side plumbing — schema, partition flow, UDF signature, batch
+shape — is real and tested.
 """
 
 from __future__ import annotations
@@ -47,68 +47,6 @@ def attach_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
         F.col(id_col).alias("media_id"),
         F.lit("blob").alias("kind"),
         F.encode(F.col(text_col), "UTF-8").alias("payload"),
-    )
-
-
-try:  # optional dependency: real image codec if the env provides it
-    from PIL import Image as _PIL_Image  # type: ignore
-
-    HAS_PIL = True
-except ImportError:  # pragma: no cover - env-dependent
-    _PIL_Image = None
-    HAS_PIL = False
-
-
-_DECODE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_channels", IntegerType()),
-        StructField("pixel_mean", LongType()),  # integer mean, engine-exact
-    ]
-)
-
-
-def decode_media(df: DataFrame, kind: str = "image") -> DataFrame:
-    """Real codec stage. When PIL is importable the image path runs a
-    genuine decode behind the SAME Arrow-batched ``mapInPandas``
-    contract as ``fake_decode`` (schema, batch shape, partition flow
-    identical — a deployment swap, not a rewrite). Audio/video codecs
-    (ffmpeg/librosa) are not available in any supported container, so
-    those kinds raise; tests skip-mark on ``HAS_PIL``."""
-    if kind != "image" or not HAS_PIL:
-        raise NotImplementedError(
-            f"no codec for kind={kind!r} in this environment "
-            f"(HAS_PIL={HAS_PIL}); use fake_decode for plumbing tests "
-            "and swap in the codec UDF at deployment"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"].to_numpy(), pdf["payload"]):
-                img = _PIL_Image.open(io.BytesIO(payload))
-                arr = np.asarray(img)
-                n_ch = 1 if arr.ndim == 2 else arr.shape[2]
-                rows.append(
-                    (
-                        int(mid),
-                        int(img.width),
-                        int(img.height),
-                        int(n_ch),
-                        int(arr.astype(np.int64).sum()) // max(arr.size, 1),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "n_channels", "pixel_mean"],
-            )
-
-    return df.select("media_id", "payload").mapInPandas(
-        decode, schema=_DECODE_SCHEMA
     )
 
 

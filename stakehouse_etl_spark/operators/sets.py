@@ -18,11 +18,6 @@ def union_distinct(*dfs: DataFrame) -> DataFrame:
     return union_all(*dfs).distinct()
 
 
-def difference(left: DataFrame, right: DataFrame, on: list[str]) -> DataFrame:
-    """U2: set difference on key columns → left_anti join."""
-    return left.join(right.select(*on), on=on, how="left_anti")
-
-
 def missing_in_sequence(
     present: DataFrame,
     key: str,

@@ -1,15 +1,18 @@
-"""Serving layer (SURVEY §3.3): every reference HTTP endpoint as a
-parameterized DataFrame query.
+"""Serving layer (SURVEY §3.3): the reference's HTTP endpoints as
+parameterized DataFrame queries.
 
 The reference serves ~22 endpoints (serverless.yaml:113-519) by
 building f-string SQL + Python loops per request
 (``src/api_handler.py``). Here each endpoint is a function
 ``fn(tables..., params...) -> DataFrame`` over the §1.2 reference-schema
-tables; an HTTP edge would ``collect()`` and JSON-wrap via
-``functions.scalars.to_message_json`` (K4). Dimension inputs that the
-reference fetches from subgraphs per-request (savETH index maps, LP
-positions, top-ups) arrive as small DataFrames — broadcast-joined, the
-J5 pattern.
+tables; an HTTP edge would ``collect()`` and JSON-wrap the rows with
+``to_json(struct(...))`` (K4, see ``k4_json_envelope``). Endpoints that
+are one filter over one table (/leaderboard, /validatorAprEpochs,
+/indexAPRAverage, the stakehouse membership flags) are a plain
+``df.filter`` and get no function here.
+Dimension inputs that the reference fetches from subgraphs
+per-request (savETH index maps, LP positions, top-ups) arrive as small
+DataFrames — broadcast-joined, the J5 pattern.
 
 Schemas used (SURVEY §1.2):
 
@@ -18,25 +21,19 @@ Schemas used (SURVEY §1.2):
 - membership: bls_key, epoch, indexes
 - index_apr:  indexes, epoch, apr, earnings, losses
 - earnings_interface: bls_key, earnings, losses
-- start_index: bls_key, lsd_validator, indexes
 - slot_withdrawals: validator, slot, amount, withdrawal_index
 - threat:     bls_key, dETHBacking, samePosition, dETHBalance
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.functions.financials import gwei_to_eth
 from stakehouse_etl_spark.functions.scalars import health_score, redemption_band
 from stakehouse_etl_spark.operators.joins import latest_per_key
 from stakehouse_etl_spark.operators.windows import top_k, top_k_per_group
-
-
-# --- /leaderboard core scan (src/api_handler.py:19-23) ---
-def daily_apr_for_date(daily_apr: DataFrame, date) -> DataFrame:
-    return daily_apr.filter(F.col("dates") == F.lit(date))
 
 
 # --- /validatorEpochWiseApr (src/api_handler.py:58-69) ---
@@ -46,16 +43,6 @@ def validator_epoch_apr(income: DataFrame, bls_key: str, epochs: int) -> DataFra
         income.filter(F.col("bls_key") == bls_key)
         .orderBy(F.desc("epoch"))
         .limit(epochs)
-    )
-
-
-# --- /validatorAprEpochs (src/api_handler.py:71-84) ---
-def validator_apr_between_epochs(
-    income: DataFrame, bls_key: str, epoch_lower: int, epoch_upper: int
-) -> DataFrame:
-    return income.filter(
-        (F.col("bls_key") == bls_key)
-        & F.col("epoch").between(epoch_lower, epoch_upper)
     )
 
 
@@ -75,15 +62,6 @@ def index_validators(membership: DataFrame, index: int) -> DataFrame:
     """Distinct keys currently (latest epoch) in an index."""
     latest = latest_per_key(membership, key="bls_key", order_col="epoch")
     return latest.filter(F.col("indexes") == index).select("bls_key").distinct()
-
-
-# --- /indexAPRAverage slice (src/api_handler.py:111-124) ---
-def index_apr_recent(index_apr: DataFrame, index: int, epochs: int) -> DataFrame:
-    return (
-        index_apr.filter(F.col("indexes") == index)
-        .orderBy(F.desc("epoch"))
-        .limit(epochs)
-    )
 
 
 # --- /indexdETHEarned (src/api_handler.py:133-138, J2) ---
@@ -139,11 +117,6 @@ def user_apr_by_epoch(income: DataFrame, bls_keys: list[str], epochs: int) -> Da
 # --- /userIncome earnings snapshot (src/api_handler.py:221-236) ---
 def validator_earnings(earnings_interface: DataFrame, bls_keys: list[str]) -> DataFrame:
     return earnings_interface.filter(F.col("bls_key").isin(bls_keys))
-
-
-# --- stakehouse membership flags (src/api_handler.py:238-247) ---
-def validator_index_stakehouse(start_index: DataFrame, bls_keys: list[str]) -> DataFrame:
-    return start_index.filter(F.col("bls_key").isin(bls_keys))
 
 
 # --- /validatorSlotWithdrawals (src/api_handler.py:249-254, O2) ---

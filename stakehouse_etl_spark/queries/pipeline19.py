@@ -445,10 +445,9 @@ class _IncomeTWSProcessor:
 
 # The transformWithState Python runner serializes state over protobuf;
 # the container ships no google.protobuf, so the query registers only
-# when the dependency exists (same optional-dependency boundary as the
-# PIL decode path in operators/multimodal.py). The operator code and
-# its oracle are complete either way — a deployment with protobuf gets
-# the query; tools/check and the driver see it only where it can run.
+# when the dependency exists. The operator code and its oracle are
+# complete either way — a deployment with protobuf gets the query;
+# tools/check and `__spark_entry__` callers see it only where it can run.
 try:  # optional dependency: TWS state serialization
     from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
 

@@ -290,7 +290,7 @@ def mm_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas feature extraction (numpy over raw
     bytes). Oracle: codepoint stats (payloads are ASCII here, so
     codepoint == byte — the decode step itself is the deployment-
-    stubbed codec, see operators.multimodal.decode_media)."""
+    stubbed codec, see operators.multimodal.fake_decode)."""
     docs = load_table(spark, sf_dir, "documents")
     return byte_features(attach_payload(docs))
 

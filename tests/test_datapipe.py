@@ -16,7 +16,6 @@ from stakehouse_etl_spark.operators.dedup import (
 from stakehouse_etl_spark.operators.multimodal import (
     attach_payload,
     byte_features,
-    decode_media,
     fake_decode,
 )
 from stakehouse_etl_spark.operators.similarity import ann_lsh_pairs, cosine_topk
@@ -134,8 +133,6 @@ def test_multimodal_byte_features_and_frames(spark):
         by_id.setdefault(r["media_id"], []).append(r)
     assert len(by_id[1]) == 2  # 128 bytes → two 64-byte frames
     assert len(by_id[2]) == 1
-    with pytest.raises(NotImplementedError):
-        decode_media(media, "audio")  # no audio codec in any env
 
 
 def test_byte_features_empty_and_mixed_payloads(spark):
@@ -152,22 +149,6 @@ def test_byte_features_empty_and_mixed_payloads(spark):
     assert (feats[2]["byte_sum"], feats[2]["byte_min"], feats[2]["byte_max"]) == (6, 1, 5)
     assert (feats[3]["n_bytes"], feats[3]["byte_sum"]) == (0, 0)
     assert (feats[4]["byte_min"], feats[4]["byte_max"]) == (255, 255)
-
-
-def test_decode_media_real_codec_when_available(spark):
-    PIL = pytest.importorskip("PIL")  # noqa: F841 — real codec path
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (4, 2), color=(10, 20, 30)).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(1, buf.getvalue())], "media_id long, payload binary"
-    )
-    row = decode_media(media, "image").collect()[0]
-    assert (row["width"], row["height"], row["n_channels"]) == (4, 2, 3)
-    assert row["pixel_mean"] == (10 + 20 + 30) // 3
 
 
 def test_url_normalize_kernel(spark):

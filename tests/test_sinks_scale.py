@@ -145,7 +145,7 @@ def test_cdc_null_op_upserts(spark, workdir):
 def test_cdc_equal_seq_tie_is_deterministic(spark, workdir):
     """A key carrying a U and a D with the SAME seq value resolves by
     the op-column tiebreaker (desc: 'U' > 'D'), not physical row order
-    (ADVICE r4) — so write_cdc and apply_cdc_delta agree run-to-run."""
+    (ADVICE r4) — so write_cdc resolves it the same way run-to-run."""
     for attempt in range(3):
         path = os.path.join(workdir, f"t{attempt}")
         # both physical orders of the tied pair

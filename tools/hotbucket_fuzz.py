@@ -36,10 +36,9 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
 from stakehouse_etl_spark.operators.dedup import (  # noqa: E402
-    _banded,
-    doc_shingles,
     incremental_minhash_dedup_indexed,
     lsh_candidates,
+    minhash_index_for,
     minhash_lsh_pairs,
 )
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
@@ -100,20 +99,7 @@ def main() -> int:
     # the union bucket is hot_n + 1000 ≫ cap, must drop; every batch
     # doc keeps.
     t0 = time.time()
-    sh = doc_shingles(docs.limit(1), "text", "doc_id", 3)
-    corpus_bands = _banded(
-        doc_shingles(hot, "text", "doc_id", 3), "doc_id"
-    )
-    corpus_sets = hot.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            )
-        ).alias("shingle_set"),
-    ).select(
-        "doc_id", "shingle_set", F.size("shingle_set").cast("long").alias("n_sh")
-    )
+    corpus_bands, corpus_sets = minhash_index_for(hot)
     batch = spark.range(10_000_000, 10_001_000).select(
         F.col("id").alias("doc_id"),
         F.lit(
@@ -121,17 +107,7 @@ def main() -> int:
             "of the wide river at dawn"
         ).alias("text"),
     )
-    batch_bands = _banded(doc_shingles(batch, "text", "doc_id", 3), "doc_id")
-    batch_sets = batch.select(
-        "doc_id",
-        F.array_sort(
-            F.array_distinct(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            )
-        ).alias("shingle_set"),
-    ).select(
-        "doc_id", "shingle_set", F.size("shingle_set").cast("long").alias("n_sh")
-    )
+    batch_bands, batch_sets = minhash_index_for(batch)
     kept = incremental_minhash_dedup_indexed(
         corpus_bands,
         corpus_sets,
@@ -146,7 +122,6 @@ def main() -> int:
         "expected_kept": 1000,
         "sec": round(time.time() - t0, 1),
     }
-    _ = sh  # silence unused in case of future edits
     out["ok"] = bool(n_hot_pairs == 0 and kept == 1000)
     print(json.dumps(out))
     return 0 if out["ok"] else 1

@@ -9,16 +9,6 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "== 0/15 optional-dependency probe (Delta arm, BASELINE.md blocker) =="
-python - <<'EOF'
-try:
-    import delta  # noqa: F401
-    print("delta-spark AVAILABLE - run the io/table_formats parity suite now")
-except ImportError as e:
-    print(f"delta-spark still unavailable ({e}); "
-          "Delta arm stays documented-blocked (BASELINE.md)")
-EOF
-
 echo "== 1/15 unit + property tests =="
 python -m pytest tests/ -q
 
