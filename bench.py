@@ -3,7 +3,8 @@
 Runs the bench-flagged catalog queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "sf": ..., "cpus": N of local[N],
+"default_parallelism": ...}.
 
 Execution is forced through the noop sink (full plan runs, nothing
 collected to the driver) — the honest way to time a distributed plan.
@@ -26,12 +27,11 @@ import os
 import re
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.queries.catalog import QUERIES  # noqa: E402
-from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
 
 # The seven queries of the FIRST recorded bench run (BASELINE.md) — the
@@ -146,6 +146,8 @@ def bench_line(record: dict) -> str:
             "unit": record["unit"],
             "queries": {k: round(v, 2) for k, v in record["queries"].items()},
             "sf": record["sf"],
+            "cpus": record["cpus"],
+            "default_parallelism": record["default_parallelism"],
         },
         separators=(",", ":"),
     )
@@ -167,20 +169,17 @@ def run() -> None:
         load_start = None
 
     spark = get_spark("bench")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    # The N of local[N]: the effective core count the timings ran on.
+    local = re.fullmatch(r"local\[(\d+)\]", sc.master)
+    cpus = int(local.group(1)) if local else None
 
-    # JVM/codegen warmup on a trivial plan so query 1 isn't charged for it.
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    # OS page-cache warmup: one cheap pass over each input table so the
-    # first query touching a file isn't charged for cold reads the later
-    # ones don't pay (BASELINE.md r1 recorded a 9 s warm-vs-cold gap on
-    # the same suite). count() reads footers + pages without shuffling.
-    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        try:
-            spark.read.parquet(p).count()
-        except Exception:
-            pass
+    # JVM/codegen warmup, then one cheap pass over each input table so
+    # the first query touching a file isn't charged for cold reads the
+    # later ones don't pay (BASELINE.md r1 recorded a 9 s warm-vs-cold
+    # gap on the same suite).
+    measure.warm(spark, sf_dir)
 
     bench_names = [n for n, q in QUERIES.items() if q.bench]
     watch = [w for w in WATCH if w in QUERIES]
@@ -189,15 +188,7 @@ def run() -> None:
     }
 
     def time_one(name: str) -> None:
-        t0 = time.perf_counter()
-        QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        samples[name].append(time.perf_counter() - t0)
-        # Release per-query persists (shingle tables etc.) so one
-        # query's cache doesn't distort the next query's timing.
-        release_tracked()
-        spark.catalog.clearCache()
+        samples[name].append(measure.run(spark, name, sf_dir).wall_s)
 
     for r in range(runs):
         for name in bench_names:
@@ -287,6 +278,8 @@ def run() -> None:
         "queries": timings,
         "suite_total_sec": total,
         "sf": sf,
+        "cpus": cpus,
+        "default_parallelism": sc.defaultParallelism,
         "runs": runs,
         "prev_round": prev_file,
         "regressions": regressions,

@@ -340,15 +340,6 @@ def fetch_mev_block_stats(
     return spark.createDataFrame([row], MEV_BLOCK_STATS_SCHEMA)
 
 
-PON_ELIGIBILITY_SCHEMA = StructType(
-    [
-        StructField("bls_key", StringType(), False),
-        StructField("effective_balance", LongType(), True),
-        StructField("slashed", BooleanType(), True),
-        StructField("eligible", BooleanType(), True),
-    ]
-)
-
 # 32 ETH in gwei — the reference's eligibility constant, inlined at
 # src/api_handler.py:863 as the string '32000000000'.
 PON_ELIGIBLE_BALANCE_GWEI = 32_000_000_000
@@ -442,7 +433,6 @@ __all__ = [
     "fetch_validator_performance",
     "fetch_mev_block_stats",
     "fetch_pon_eligibility",
-    "PON_ELIGIBILITY_SCHEMA",
     "PON_ELIGIBLE_BALANCE_GWEI",
     "slot_withdrawals_to_epoch",
     "default_transport",

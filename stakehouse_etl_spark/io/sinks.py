@@ -43,6 +43,8 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stakehouse_etl_spark.functions.financials import EPOCHS_PER_DAY
+
 _VERSION_COL = "__ingest_version"
 _STAGING_SUFFIX = ".__staging__"
 _OLD_SUFFIX = ".__old__"
@@ -431,7 +433,9 @@ def write_insert_ignore(
 
 
 def with_epoch_bucket(
-    df: DataFrame, time_col: str = "epoch", epochs_per_bucket: int = 225
+    df: DataFrame,
+    time_col: str = "epoch",
+    epochs_per_bucket: int = EPOCHS_PER_DAY,
 ) -> DataFrame:
     """Add the physical partition key for entity-time tables:
     ``epoch_bucket = epoch // N`` (default 225 = one day of beacon
@@ -448,7 +452,7 @@ def write_time_partitioned(
     path: str,
     keys: list[str],
     time_col: str = "epoch",
-    epochs_per_bucket: int = 225,
+    epochs_per_bucket: int = EPOCHS_PER_DAY,
 ) -> None:
     """K1 upsert into an epoch-bucket-partitioned layout: only the
     buckets present in ``incoming`` are merged and atomically swapped —

@@ -32,8 +32,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _table_path(sf_dir: str, name: str) -> str:
     plain = os.path.join(sf_dir, f"{name}.parquet")

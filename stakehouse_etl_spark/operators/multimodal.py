@@ -22,21 +22,8 @@ from pyspark.sql.types import (
     BinaryType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("n_frames", IntegerType()),
-    ]
 )
 
 

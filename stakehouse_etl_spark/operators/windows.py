@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.functions.financials import apr_expr
+from stakehouse_etl_spark.functions.financials import EPOCHS_PER_WEEK, apr_expr
 
 
 def _w(key: str | list[str], order: str) -> WindowSpec:
@@ -289,7 +289,7 @@ def trailing_delta(
     key: str = "bls_key",
     time: str = "epoch",
     value: str = "earnings",
-    window_len: int = 1575,
+    window_len: int = EPOCHS_PER_WEEK,
     min_rows: int = 9,
 ) -> DataFrame:
     """A10: first−last delta over a trailing ≤``window_len`` slice.

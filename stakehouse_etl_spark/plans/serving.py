@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.functions.financials import gwei_to_eth
+from stakehouse_etl_spark.functions.financials import EPOCHS_PER_WEEK, gwei_to_eth
 from stakehouse_etl_spark.functions.scalars import health_score, redemption_band
 from stakehouse_etl_spark.operators.joins import latest_per_key
 from stakehouse_etl_spark.operators.windows import top_k, top_k_per_group
@@ -237,7 +237,7 @@ def user_income(
     earnings_interface: DataFrame,
     threat: DataFrame,
     bls_keys: list[str],
-    epochs: int = 1575,
+    epochs: int = EPOCHS_PER_WEEK,
 ) -> DataFrame:
     """The most complex read path: per-epoch avg APR over the user's
     keys + latest earnings snapshot + threat defaults, joined into one

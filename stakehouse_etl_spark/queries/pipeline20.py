@@ -278,7 +278,6 @@ def dedup_semantic_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # BM25-style ranked retrieval (log-free idf ratio for exact parity)
 # ---------------------------------------------------------------------------
 BM25_QUERY_TERMS = ["table", "query", "join"]
-_BM25_TERMS_SQL = ", ".join(f"'{t}'" for t in BM25_QUERY_TERMS)
 
 
 @register(

@@ -38,14 +38,6 @@ from pyspark.sql import functions as F
 from stakehouse_etl_spark.io.sinks import write_upsert
 from stakehouse_etl_spark.operators.windows import cumulative_income
 
-STATE_COLS = (
-    "seed_epoch",
-    "seed_earnings",
-    "seed_losses",
-    "seed_epochs_since_active",
-)
-
-
 def high_water_marks(df: DataFrame, key: str = "bls_key", time: str = "epoch") -> DataFrame:
     """T1: per-key progress = MAX(time) observed (the reference derives
     watermarks from the data itself, src/extract_handler.py:54-60)."""

@@ -15,10 +15,13 @@ from stakehouse_etl_spark.queries.catalog import QUERIES
 
 WORST = 999.999
 FULL_KEYS = {
-    "metric", "value", "unit", "queries", "suite_total_sec", "sf", "runs",
-    "prev_round", "regressions", "loadavg_start", "loadavg_end",
+    "metric", "value", "unit", "queries", "suite_total_sec", "sf", "cpus",
+    "default_parallelism", "runs", "prev_round", "regressions",
+    "loadavg_start", "loadavg_end",
 }
-SPEC_KEYS = {"metric", "value", "unit", "queries", "sf"}
+SPEC_KEYS = {
+    "metric", "value", "unit", "queries", "sf", "cpus", "default_parallelism",
+}
 
 
 def _record(names: list[str], regressed: list[str]) -> dict:
@@ -29,6 +32,8 @@ def _record(names: list[str], regressed: list[str]) -> dict:
         "queries": {n: WORST for n in names},
         "suite_total_sec": WORST * len(names),
         "sf": 0.1,
+        "cpus": 999,
+        "default_parallelism": 999,
         "runs": 3,
         "prev_round": "BENCH_r99.json",
         "regressions": {

@@ -8,7 +8,10 @@ Spark-free static scan of the repository's ``.py`` and ``.sh`` files:
 - every public top-level function or class under ``functions/``,
   ``operators/``, ``plans/``, ``io/`` and ``streaming/`` is named at
   least once outside its own ``def``/``class`` statement, anywhere in
-  the repository (tests, tools, perfbench and its own module count).
+  the repository (tests, tools, perfbench and its own module count);
+- every public top-level constant (``Assign`` / ``AnnAssign`` target)
+  in those packages is read somewhere: a loaded name or an attribute.
+  Its own assignment target, an import and a string do not count.
 
 A reference is a Python identifier or attribute, an imported name, or
 a string constant equal to the name (``getattr`` / patch lookups and
@@ -38,6 +41,20 @@ def _repo_files(suffix: str) -> list[Path]:
         for p in ROOT.rglob(f"*{suffix}")
         if not any(part.startswith(".") for part in p.relative_to(ROOT).parts[:-1])
     )
+
+
+@functools.cache
+def _loads() -> set[str]:
+    """Names read anywhere in the repository's Python: loaded
+    identifiers and attribute names."""
+    out: set[str] = set()
+    for path in _repo_files(".py"):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                out.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                out.add(node.attr)
+    return out
 
 
 def _py_refs(path: Path) -> tuple[set[str], set[str]]:
@@ -121,3 +138,26 @@ def test_every_public_top_level_name_is_used():
                     continue
                 unused.append(f"{path.relative_to(ROOT)}:{node.name}")
     assert unused == [], "named nowhere else:\n" + "\n".join(unused)
+
+
+def test_every_public_top_level_constant_is_read():
+    unread = []
+    for pkg in SCANNED_PACKAGES:
+        for path in sorted((PKG / pkg).glob("*.py")):
+            for node in ast.parse(path.read_text()).body:
+                if isinstance(node, ast.Assign):
+                    targets = node.targets
+                elif isinstance(node, ast.AnnAssign):
+                    targets = [node.target]
+                else:
+                    continue
+                for t in targets:
+                    for name in ast.walk(t):
+                        if (
+                            isinstance(name, ast.Name)
+                            and isinstance(name.ctx, ast.Store)
+                            and not name.id.startswith("_")
+                            and name.id not in _loads()
+                        ):
+                            unread.append(f"{path.relative_to(ROOT)}:{name.id}")
+    assert unread == [], "read nowhere:\n" + "\n".join(unread)

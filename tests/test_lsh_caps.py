@@ -325,6 +325,20 @@ def test_cosine_topk_auto_dispatch(spark, monkeypatch):
     assert _auto_arrow(local, 10) in (True, False)
 
 
+def _assert_window_runs_before_collect(plan: str) -> None:
+    """The bucket-size Window feeds the collect_list aggregate. The plan
+    string prints parents first, so the node that runs first is the
+    lower line; both nodes must be present."""
+    lines = plan.splitlines()
+    collect = [i for i, ln in enumerate(lines) if "functions=[collect_list(" in ln]
+    window = [i for i, ln in enumerate(lines) if "+- Window [count(1)" in ln]
+    assert collect, "collect_list aggregate missing from the executed plan"
+    assert window, "bucket-size Window missing from the executed plan"
+    assert collect[0] < window[0], (
+        "the Window must run before (print below) the collect_list aggregate"
+    )
+
+
 def test_capped_bucket_collect_caps_before_collect(spark, hot_docs):
     """r12 (VERDICT r11 item 1): the capped arm must drop over-cap
     buckets with the SPILLABLE window count BEFORE collect_list builds
@@ -340,6 +354,7 @@ def test_capped_bucket_collect_caps_before_collect(spark, hot_docs):
         .toString()
     )
     assert "__bsz" in plan, "window cap missing from the capped arm"
+    _assert_window_runs_before_collect(plan)
     # The pair generator legitimately reads size(__ids) inside its
     # slice lambda; the hazard is specifically a FILTER on the
     # collected array's size (i.e. cap applied after materialization).
@@ -381,6 +396,7 @@ def test_incremental_bucket_collect_caps_before_collect(spark):
     import re
 
     assert "__bsz" in plan
+    _assert_window_runs_before_collect(plan)
     assert not re.search(r"Filter \(?size\(__ms", plan)
     # Semantics unchanged: hot bucket (7 > 5) dropped → batch doc kept.
     assert {r["doc_id"] for r in out.collect()} == {10}

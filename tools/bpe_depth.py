@@ -30,6 +30,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
 from stakehouse_etl_spark.queries.pipeline17 import (  # noqa: E402
     _bpe_train_merges,
@@ -42,8 +43,7 @@ def main(argv: list[str]) -> int:
     n_iters = int(argv[1]) if len(argv) > 1 else 16
     spark = get_spark("bpe_depth")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
+    measure.warm(spark, sf_dir)
 
     walls: list[float] = []
     t0 = time.perf_counter()

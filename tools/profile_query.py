@@ -1,164 +1,55 @@
 """Stage-level profile of one or more bench queries.
 
-Runs each query through the noop sink with the Spark event log on,
-then aggregates the log into a per-stage table: wall span, summed
-task time, shuffle read/write bytes, fetch wait, input bytes, spill —
-the numbers that say WHERE a query's seconds go (guide §1/§7 without
-a live UI; spark.ui is disabled in the engine session).
+Runs each query through the noop sink (after one warm run, so codegen
+compile and page-cache effects land outside the profiled run) and
+prints a per-stage table read from the in-process status store:
+summed task time, GC, shuffle read/write bytes, fetch wait, input
+bytes, spill — the numbers that say WHERE a query's seconds go (guide
+§1/§7 without a live UI or an event log; spark.ui is disabled in the
+engine session).
 
 Usage: python tools/profile_query.py <query> [query ...] [--sf DIR]
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from stakehouse_etl_spark.queries.catalog import QUERIES  # noqa: E402
-from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
 
-EVT_DIR = "/tmp/spark-events-profile"
+WARMUPS = 1
 
 
 def profile(names: list[str], sf_dir: str) -> None:
-    import shutil
-
-    shutil.rmtree(EVT_DIR, ignore_errors=True)
-    os.makedirs(EVT_DIR, exist_ok=True)
-    spark = get_spark(
-        "profile",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": EVT_DIR,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        try:
-            spark.read.parquet(p).count()
-        except Exception:
-            pass
-
-    warm = int(os.environ.get("SPARK_GRAFT_PROFILE_WARMUPS", "1"))
-    spans = {}
+    measure.warm(spark, sf_dir)
     for name in names:
-        sc = spark.sparkContext
-        # Warm runs under a non-profile description: codegen compile
-        # and page-cache effects land outside the profiled window, so
-        # the stage table reflects the steady state the bench medians
-        # measure.
-        for _ in range(warm):
-            sc.setJobDescription(f"warm:{name}")
-            QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            release_tracked()
-            spark.catalog.clearCache()
-        sc.setJobDescription(f"profile:{name}")
-        t0 = time.perf_counter()
-        QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        wall = time.perf_counter() - t0
-        sc.setJobDescription(None)
-        spans[name] = wall
-        release_tracked()
-        spark.catalog.clearCache()
-    spark.stop()
-
-    # Parse the event log (Spark 4 rolling layout: a directory with
-    # events_N_... files; fall back to a single-file layout).
-    logs = sorted(glob.glob(os.path.join(EVT_DIR, "*", "events_*"))) or [
-        p
-        for p in glob.glob(os.path.join(EVT_DIR, "*"))
-        if os.path.isfile(p)
-    ]
-    stages = {}   # sid -> dict
-    job_desc = {}  # jobId -> description
-    stage_job = {}  # sid -> jobId
-    import itertools
-
-    for line in itertools.chain.from_iterable(open(p) for p in logs):
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            t = ev.get("Event")
-            if t == "SparkListenerJobStart":
-                job_desc[ev["Job ID"]] = ev.get("Properties", {}).get(
-                    "spark.job.description", ""
-                )
-                for si in ev.get("Stage Infos", []):
-                    stage_job[si["Stage ID"]] = ev["Job ID"]
-            elif t == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                d = stages.setdefault(sid, {
-                    "name": si.get("Stage Name", ""), "tasks": 0,
-                    "run_ms": 0, "sh_read": 0, "sh_write": 0,
-                    "fetch_wait_ms": 0, "input": 0, "spill": 0,
-                    "gc_ms": 0,
-                })
-                d["name"] = si.get("Stage Name", "")
-                d["wall_ms"] = si.get("Completion Time", 0) - si.get(
-                    "Submission Time", 0
-                )
-                d["n_tasks"] = si.get("Number of Tasks", 0)
-            elif t == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                m = ev.get("Task Metrics") or {}
-                d = stages.setdefault(sid, {
-                    "name": "", "tasks": 0, "run_ms": 0, "sh_read": 0,
-                    "sh_write": 0, "fetch_wait_ms": 0, "input": 0,
-                    "spill": 0, "gc_ms": 0,
-                })
-                d["tasks"] += 1
-                d["run_ms"] += m.get("Executor Run Time", 0)
-                d["gc_ms"] += m.get("JVM GC Time", 0)
-                sr = m.get("Shuffle Read Metrics") or {}
-                d["sh_read"] += sr.get("Remote Bytes Read", 0) + sr.get(
-                    "Local Bytes Read", 0
-                )
-                d["fetch_wait_ms"] += sr.get("Fetch Wait Time", 0)
-                sw = m.get("Shuffle Write Metrics") or {}
-                d["sh_write"] += sw.get("Shuffle Bytes Written", 0)
-                im = m.get("Input Metrics") or {}
-                d["input"] += im.get("Bytes Read", 0)
-                d["spill"] += m.get("Disk Bytes Spilled", 0)
-
-    by_query: dict[str, list] = {}
-    for sid, d in sorted(stages.items()):
-        desc = job_desc.get(stage_job.get(sid, -1), "")
-        if desc.startswith("profile:"):
-            by_query.setdefault(desc[8:], []).append((sid, d))
-
-    for name in names:
-        print(f"\n=== {name}  wall={spans.get(name, 0):.2f}s ===")
-        rows = by_query.get(name, [])
-        rows.sort(key=lambda r: -r[1]["run_ms"])
+        for _ in range(WARMUPS):
+            measure.run(spark, name, sf_dir)
+        record = measure.run(spark, name, sf_dir)
+        rows = measure.stage_metrics(spark, record)
+        print(f"\n=== {name}  wall={record.wall_s:.2f}s ===")
+        rows.sort(key=lambda d: -d["run_s"])
         print(f"{'sid':>5} {'tasks':>5} {'run_s':>7} {'gc_s':>6} "
               f"{'shR_MB':>7} {'shW_MB':>7} {'fetch_s':>7} {'in_MB':>7} "
               f"{'spill_MB':>8}  name")
-        for sid, d in rows[:14]:
+        for d in rows[:14]:
             print(
-                f"{sid:>5} {d['tasks']:>5} {d['run_ms']/1000:>7.2f} "
-                f"{d['gc_ms']/1000:>6.2f} "
-                f"{d['sh_read']/1e6:>7.1f} {d['sh_write']/1e6:>7.1f} "
-                f"{d['fetch_wait_ms']/1000:>7.2f} {d['input']/1e6:>7.1f} "
-                f"{d['spill']/1e6:>8.1f}  {d['name'][:60]}"
+                f"{d['stage_id']:>5} {d['tasks']:>5} {d['run_s']:>7.2f} "
+                f"{d['gc_s']:>6.2f} "
+                f"{d['shuffle_read_bytes']/1e6:>7.1f} "
+                f"{d['shuffle_write_bytes']/1e6:>7.1f} "
+                f"{d['fetch_wait_s']:>7.2f} {d['input_bytes']/1e6:>7.1f} "
+                f"{d['spill_bytes']/1e6:>8.1f}  {d['name'][:60]}"
             )
-        tot = sum(d["run_ms"] for _, d in rows) / 1000
-        print(f"total task-seconds: {tot:.1f}")
+        print(f"total task-seconds: {sum(d['run_s'] for d in rows):.1f}")
+    spark.stop()
 
 
 if __name__ == "__main__":

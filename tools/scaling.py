@@ -38,12 +38,15 @@ Env knobs:
                              session. Mandatory for the sf10/sf30
                              rungs; the page cache still carries the
                              rung warm-read across processes.
-  SPARK_GRAFT_SCALING_SF10=1 adds the localdata/sf10 rung (minutes per
-                             query — opt-in).
-  SPARK_GRAFT_SCALING_SF30=1 adds the localdata/sf30 rung (~6 GB,
-                             3x sf10 — the r8 heavy-tier decade).
-  SPARK_GRAFT_SCALING_RUNGS  comma list (e.g. "sf3,sf10") restricting
-                             to named rungs for a top-rung-only pass.
+  SPARK_GRAFT_SCALING_RUNGS  comma list of rung keys to run, in that
+                             order. Shipped rungs are named by their
+                             basename ("sf0.1"); any existing
+                             localdata/<dir> by "local_<dir>" (e.g.
+                             "local_sf10,local_sf30", or the Zipf and
+                             64-file twins "local_zipf_sf1",
+                             "local_sf10x64"). A bare "sf0.1" selects
+                             only the shipped rung. Unset: the shipped
+                             rungs plus localdata/sf0.1, sf1 and sf3.
 Prints one JSON line {"queries": {name: {rung: sec, ...,
 "r10_local": r, "r3_local": r, "r3.3_local": r}}, "rungs": [...]}
 (r3.3_local appears when the sf10 rung ran; one measurement hazard to
@@ -53,16 +56,16 @@ predecessors — re-measure suspicious cells in a fresh session).
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.queries.catalog import QUERIES  # noqa: E402
-from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
 
 SHIPPED = [
@@ -70,30 +73,28 @@ SHIPPED = [
     "/root/testdata/sf0.01",
     "/root/testdata/sf0.1",
 ]
-LOCAL = [
-    os.path.join(REPO, "localdata", d) for d in ("sf0.1", "sf1", "sf3")
-]
-# sf10/sf30 are opt-in (SPARK_GRAFT_SCALING_SF10=1 / _SF30=1): the top
-# rungs cost minutes per query and not every ladder refresh needs them.
-if os.environ.get("SPARK_GRAFT_SCALING_SF10") == "1":
-    LOCAL.append(os.path.join(REPO, "localdata", "sf10"))
-if os.environ.get("SPARK_GRAFT_SCALING_SF30") == "1":
-    LOCAL.append(os.path.join(REPO, "localdata", "sf30"))
-# Multi-file twin of sf10 (VERDICT r10 stretch #8): same rows, each
-# table as 64 parquet files — the 100 TB shape, where fan_out's
-# metadata fast path passes scans through untouched instead of the
-# single-file repartition fallback. Generate with
-# `python tools/gen_testdata.py 10 --files=64`.
-if os.environ.get("SPARK_GRAFT_SCALING_SF10X64") == "1":
-    LOCAL.append(os.path.join(REPO, "localdata", "sf10x64"))
-# Zipf rungs (VERDICT r9 task 4): the non-saturated skewed-text corpus
-# — 10k-type Zipf vocabulary that grows its gram space with size — for
-# ladders whose uniform-corpus cells are confounded by vocabulary
-# saturation (the span family). Select via SPARK_GRAFT_SCALING_RUNGS
-# with the local_zipf_sf* keys.
-if os.environ.get("SPARK_GRAFT_SCALING_ZIPF") == "1":
-    for _z in ("zipf_sf1", "zipf_sf3", "zipf_sf10"):
-        LOCAL.append(os.path.join(REPO, "localdata", _z))
+LOCALDATA = os.path.join(REPO, "localdata")
+# The default local ladder. The larger rungs (sf10, sf30: minutes per
+# query), the 64-file sf10 twin (`gen_testdata.py 10 --files=64`, the
+# 100 TB file shape) and the Zipf corpora (`--zipf`, for ladders whose
+# uniform-corpus cells saturate the vocabulary) run only when named.
+DEFAULT_LOCAL = ("sf0.1", "sf1", "sf3")
+
+
+def select_rungs(
+    only: str | None, localdata: str = LOCALDATA
+) -> list[tuple[str, str]]:
+    """(key, dir) of the rungs to run. Shipped and localdata rungs share
+    the basename "sf0.1", so a localdata rung is keyed "local_<dir>"."""
+    rungs = {os.path.basename(d): d for d in SHIPPED}
+    listed = only and os.path.isdir(localdata)
+    for d in sorted(os.listdir(localdata)) if listed else DEFAULT_LOCAL:
+        if os.path.isdir(os.path.join(localdata, d)):
+            rungs[f"local_{d}"] = os.path.join(localdata, d)
+    if not only:
+        return list(rungs.items())
+    return [(k, rungs[k]) for k in (r.strip() for r in only.split(",")) if k in rungs]
+
 
 DEFAULT = [
     "w1_user_income",
@@ -111,24 +112,15 @@ DEFAULT = [
 # process (so JVM/codegen warmup is excluded by the min, same as the
 # shared-session mode), result on the last stdout line.
 _CELL_SNIPPET = """
-import json, sys, time
+import json, sys
 sys.path.insert(0, sys.argv[4])
+from stakehouse_etl_spark import measure
 from stakehouse_etl_spark.session import get_spark
-from stakehouse_etl_spark.caches import release_tracked
-from stakehouse_etl_spark.queries.catalog import QUERIES
 spark = get_spark("scaling_cell")
 spark.sparkContext.setLogLevel("ERROR")
-spark.range(1_000_000).selectExpr("sum(id)").collect()
+measure.warm(spark)
 name, sf_dir, n_runs = sys.argv[1], sys.argv[2], int(sys.argv[3])
-best = None
-for _ in range(n_runs):
-    t0 = time.perf_counter()
-    QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite").save()
-    el = time.perf_counter() - t0
-    best = el if best is None else min(best, el)
-    release_tracked()
-    spark.catalog.clearCache()
+best = min(measure.run(spark, name, sf_dir).wall_s for _ in range(n_runs))
 print("CELL_RESULT " + json.dumps({"best": best}))
 """
 
@@ -163,21 +155,7 @@ def main(argv: list[str]) -> int:
         names = [n for n, q in QUERIES.items() if q.bench]
     else:
         names = argv or DEFAULT
-    rungs = SHIPPED + [d for d in LOCAL if os.path.isdir(d)]
-    # SPARK_GRAFT_SCALING_RUNGS=sf3,sf10 restricts to named rungs so a
-    # top-rung-only refresh doesn't re-pay the full ladder.
-    only = os.environ.get("SPARK_GRAFT_SCALING_RUNGS")
-    if only:
-        keep = {r.strip() for r in only.split(",")}
-        # Match on the disambiguated output key (local_sf0.1 vs sf0.1),
-        # not the basename — shipped and localdata rungs share the
-        # basename "sf0.1", and a bare basename filter ran both
-        # (ADVICE r5). A bare "sf0.1" still selects only the shipped
-        # rung; the local twin needs the explicit "local_sf0.1".
-        def _key(d: str) -> str:
-            return ("local_" if d.startswith(REPO) else "") + os.path.basename(d)
-
-        rungs = [d for d in rungs if _key(d) in keep]
+    rungs = select_rungs(os.environ.get("SPARK_GRAFT_SCALING_RUNGS"))
     fresh = os.environ.get("SPARK_GRAFT_SCALING_FRESH") == "1"
     # Fresh mode exists to isolate each cell's heap; keeping a shared
     # full-heap outer JVM alive alongside each cell subprocess would
@@ -189,39 +167,30 @@ def main(argv: list[str]) -> int:
     if not fresh:
         spark = get_spark("scaling")
         spark.sparkContext.setLogLevel("ERROR")
-        spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     out: dict[str, dict[str, float]] = {}
-    for sf_dir in rungs:
-        key = ("local_" if sf_dir.startswith(REPO) else "") + os.path.basename(
-            sf_dir
-        )
+    for key, sf_dir in rungs:
         # warm the page cache per rung so rung-to-rung ratios compare
         # compute, not cold reads. In fresh mode there is no outer
         # JVM — plain sequential file reads touch the same pages.
-        import glob
-
-        for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-            try:
-                if spark is None:
-                    paths = (
-                        [p]
-                        if os.path.isfile(p)
-                        else [
-                            os.path.join(r, fn)
-                            for r, _d, fs in os.walk(p)
-                            for fn in fs
-                            if fn.endswith(".parquet")
-                        ]
-                    )
-                    for fp in paths:
-                        with open(fp, "rb") as fh:
-                            while fh.read(1 << 22):
-                                pass
-                else:
-                    spark.read.parquet(p).count()
-            except Exception:
-                pass
+        if spark is not None:
+            measure.warm(spark, sf_dir)
+        else:
+            for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+                paths = (
+                    [p]
+                    if os.path.isfile(p)
+                    else [
+                        os.path.join(r, fn)
+                        for r, _d, fs in os.walk(p)
+                        for fn in fs
+                        if fn.endswith(".parquet")
+                    ]
+                )
+                for fp in paths:
+                    with open(fp, "rb") as fh:
+                        while fh.read(1 << 22):
+                            pass
         # Best-of-N cells (SPARK_GRAFT_SCALING_RUNS, default 2):
         # single-shot timings at the local rungs are bimodal — the
         # same query in the same session swings ±70% with GC phase and
@@ -229,9 +198,7 @@ def main(argv: list[str]) -> int:
         # back-to-back). The MIN is the stable compute-bound estimate;
         # growth ratios computed from mins compare plans, not noise.
         n_runs = max(1, int(os.environ.get("SPARK_GRAFT_SCALING_RUNS", "2")))
-        fresh = os.environ.get("SPARK_GRAFT_SCALING_FRESH") == "1"
         for name in names:
-            q = QUERIES[name]
             if fresh:
                 print(
                     f"[scaling] {key} {name} (fresh JVM, best of "
@@ -263,22 +230,15 @@ def main(argv: list[str]) -> int:
                     flush=True,
                 )
                 continue
-            best = None
+            walls = []
             for run_i in range(n_runs):
                 print(
                     f"[scaling] {key} {name} run {run_i + 1}/{n_runs}",
                     file=sys.stderr,
                     flush=True,
                 )
-                t0 = time.perf_counter()
-                q.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-                release_tracked()
-                spark.catalog.clearCache()
-            out.setdefault(name, {})[key] = round(best, 3)
+                walls.append(measure.run(spark, name, sf_dir).wall_s)
+            out.setdefault(name, {})[key] = round(min(walls), 3)
     for name, row in out.items():
         if row.get("sf0.01") and row.get("sf0.1"):
             row["ratio_10x"] = round(row["sf0.1"] / row["sf0.01"], 2)
@@ -295,7 +255,7 @@ def main(argv: list[str]) -> int:
             row["r3_local_30"] = round(
                 row["local_sf30"] / row["local_sf10"], 2
             )
-    print(json.dumps({"queries": out, "rungs": rungs}))
+    print(json.dumps({"queries": out, "rungs": [d for _, d in rungs]}))
     if spark is not None:
         spark.stop()
     return 0

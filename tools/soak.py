@@ -30,6 +30,7 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.queries.soak import (  # noqa: E402
     _hourly_balances,
     run_soak_cycles,
@@ -42,7 +43,7 @@ def main(argv: list[str]) -> int:
     n_cycles = int(argv[1]) if len(argv) > 1 else 10
     spark = get_spark("soak")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    measure.warm(spark)
 
     cycles: list[dict] = []
 

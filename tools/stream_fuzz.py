@@ -49,6 +49,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql.streaming import StreamingQueryListener  # noqa: E402
 
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
 from stakehouse_etl_spark.queries.catalog import QUERIES  # noqa: E402
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
@@ -111,12 +112,7 @@ def main(argv: list[str]) -> int:
     # Codegen + page-cache warmup so batch 1 isn't additionally
     # charged for session bootstrap (it already pays the topology's
     # first-plan cost, which is why flatness skips it).
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    try:
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).count()
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
-    except Exception:
-        pass
+    measure.warm(spark, sf_dir)
 
     out: dict[str, dict] = {}
     for name in names:

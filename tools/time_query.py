@@ -1,8 +1,8 @@
 """Median-of-N timing for a subset of catalog queries (bench methodology).
 
-Same session, noop sink, warmup run excluded, per-query median over
-SPARK_GRAFT_TIME_RUNS (default 5). For A/B during optimization work —
-the committed pin stays bench.py's job.
+Same session, noop sink, cache cleared between runs, warmup run
+excluded, per-query median over RUNS (5) runs. For A/B during
+optimization work — the committed pin stays bench.py's job.
 
 Usage: python tools/time_query.py <query> [query ...] [--sf DIR]
 """
@@ -13,14 +13,14 @@ import json
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from stakehouse_etl_spark.queries.catalog import QUERIES  # noqa: E402
-from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
+
+RUNS = 5
 
 
 def main() -> None:
@@ -31,25 +31,14 @@ def main() -> None:
         sf_dir = args[i + 1]
         del args[i : i + 2]
     names = args
-    runs = int(os.environ.get("SPARK_GRAFT_TIME_RUNS", "5"))
     spark = get_spark("time-query")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-
-    def one(name: str) -> float:
-        spark.sparkContext.setJobDescription(f"time:{name}")
-        t0 = time.time()
-        QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.time() - t0
-        release_tracked()
-        return dt
+    measure.warm(spark)
 
     out = {}
     for name in names:
-        one(name)  # warmup (codegen, page cache)
-        samples = [one(name) for _ in range(runs)]
+        measure.run(spark, name, sf_dir)  # warmup (codegen, page cache)
+        samples = [measure.run(spark, name, sf_dir).wall_s for _ in range(RUNS)]
         out[name] = {
             "median": round(statistics.median(samples), 3),
             "min": round(min(samples), 3),

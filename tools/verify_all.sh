@@ -100,9 +100,7 @@ echo "== 15/15 sf30 heavy-tier ladder (opt-in: SPARK_GRAFT_VERIFY_SF30=1) =="
 if [[ "${SPARK_GRAFT_VERIFY_SF30:-}" == "1" ]]; then
     [[ -d localdata/sf10 ]] || python tools/gen_testdata.py 10
     [[ -d localdata/sf30 ]] || python tools/gen_testdata.py 30
-    SPARK_GRAFT_SCALING_FRESH=1 SPARK_GRAFT_SCALING_SF10=1 \
-    SPARK_GRAFT_SCALING_SF30=1 \
-    SPARK_GRAFT_SCALING_RUNGS=local_sf10,local_sf30 \
+    SPARK_GRAFT_SCALING_FRESH=1 SPARK_GRAFT_SCALING_RUNGS=local_sf10,local_sf30 \
     python tools/scaling.py corpus_drop_ledger pipeline_corpus_export \
         graph_kcore_peel mm_hamming_dedup ml_bpe_train_merges \
         ml_bpe_train_merges_deep stream_span_scrub stream_span_scrub_bucketed \

@@ -26,11 +26,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from stakehouse_etl_spark import measure  # noqa: E402
 from stakehouse_etl_spark.caches import release_tracked  # noqa: E402
 from stakehouse_etl_spark.queries.catalog import QUERIES  # noqa: E402
 from stakehouse_etl_spark.session import get_spark  # noqa: E402
@@ -47,7 +47,7 @@ def main(argv: list[str]) -> int:
     )
     spark = get_spark("zipf_compare")
     spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    measure.warm(spark)
 
     out: dict = {}
     for label, sf_dir in (("uniform", uni), ("zipf", zipf)):
@@ -59,16 +59,7 @@ def main(argv: list[str]) -> int:
         release_tracked()
         spark.catalog.clearCache()
         for name in WALL_QUERIES:
-            best = None
-            for _ in range(2):
-                t0 = time.perf_counter()
-                QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-                release_tracked()
-                spark.catalog.clearCache()
+            best = min(measure.run(spark, name, sf_dir).wall_s for _ in range(2))
             rec[f"wall_{name}_sec"] = round(best, 2)
         out[label] = rec
     print(json.dumps(out))
