@@ -167,6 +167,48 @@ class _JsonlCommit(WriterCommitMessage):
         self.filename = filename
 
 
+def _write_part(path: str, iterator) -> _JsonlCommit:
+    """Task side: write the partition's rows to ``part-<uuid>.jsonl.tmp``
+    and report the final name."""
+    import json as _json
+    import os as _os
+    import uuid as _uuid
+
+    _os.makedirs(path, exist_ok=True)
+    name = f"part-{_uuid.uuid4().hex}.jsonl"
+    tmp = _os.path.join(path, name + ".tmp")
+    with open(tmp, "w") as f:
+        for row in iterator:
+            f.write(_json.dumps(row.asDict()) + "\n")
+    return _JsonlCommit(name)
+
+
+def _commit_parts(path: str, messages, manifest_name: str) -> None:
+    """Job side: rename the reported parts final, then publish the
+    manifest listing them with one atomic rename."""
+    import os as _os
+
+    names = sorted(m.filename for m in messages if m is not None)
+    for name in names:
+        _os.rename(_os.path.join(path, name + ".tmp"), _os.path.join(path, name))
+    manifest = _os.path.join(path, manifest_name)
+    with open(manifest + ".tmp", "w") as f:
+        f.write("\n".join(names))
+    _os.rename(manifest + ".tmp", manifest)
+
+
+def _abort_parts(path: str, messages) -> None:
+    """Job side: drop the reported parts' ``.tmp`` files."""
+    import os as _os
+
+    for m in messages:
+        if m is not None:
+            try:
+                _os.remove(_os.path.join(path, m.filename + ".tmp"))
+            except FileNotFoundError:
+                pass
+
+
 class JsonLinesWriter(DataSourceWriter):
     """Task/job two-phase commit, the V2 writer contract: each task
     writes ``part-<uuid>.jsonl.tmp`` and reports the name in its
@@ -181,41 +223,13 @@ class JsonLinesWriter(DataSourceWriter):
         self.path = options["path"]
 
     def write(self, iterator) -> _JsonlCommit:
-        import json as _json
-        import os as _os
-        import uuid as _uuid
-
-        _os.makedirs(self.path, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex}.jsonl"
-        tmp = _os.path.join(self.path, name + ".tmp")
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-        return _JsonlCommit(name)
+        return _write_part(self.path, iterator)
 
     def commit(self, messages) -> None:
-        import os as _os
-
-        names = sorted(m.filename for m in messages if m is not None)
-        for name in names:
-            _os.rename(
-                _os.path.join(self.path, name + ".tmp"),
-                _os.path.join(self.path, name),
-            )
-        manifest = _os.path.join(self.path, "_MANIFEST")
-        with open(manifest + ".tmp", "w") as f:
-            f.write("\n".join(names))
-        _os.rename(manifest + ".tmp", manifest)
+        _commit_parts(self.path, messages, "_MANIFEST")
 
     def abort(self, messages) -> None:
-        import os as _os
-
-        for m in messages:
-            if m is not None:
-                try:
-                    _os.remove(_os.path.join(self.path, m.filename + ".tmp"))
-                except FileNotFoundError:
-                    pass
+        _abort_parts(self.path, messages)
 
 
 class JsonLinesDataSource(DataSource):
@@ -262,41 +276,13 @@ class JsonLinesStreamWriter(DataSourceStreamWriter):
         self.path = options["path"]
 
     def write(self, iterator) -> _JsonlCommit:
-        import json as _json
-        import os as _os
-        import uuid as _uuid
-
-        _os.makedirs(self.path, exist_ok=True)
-        name = f"part-{_uuid.uuid4().hex}.jsonl"
-        tmp = _os.path.join(self.path, name + ".tmp")
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(_json.dumps(row.asDict()) + "\n")
-        return _JsonlCommit(name)
+        return _write_part(self.path, iterator)
 
     def commit(self, messages, batchId: int) -> None:
-        import os as _os
-
-        names = sorted(m.filename for m in messages if m is not None)
-        for name in names:
-            _os.rename(
-                _os.path.join(self.path, name + ".tmp"),
-                _os.path.join(self.path, name),
-            )
-        manifest = _os.path.join(self.path, f"_MANIFEST.{batchId}")
-        with open(manifest + ".tmp", "w") as f:
-            f.write("\n".join(names))
-        _os.rename(manifest + ".tmp", manifest)
+        _commit_parts(self.path, messages, f"_MANIFEST.{batchId}")
 
     def abort(self, messages, batchId: int) -> None:
-        import os as _os
-
-        for m in messages:
-            if m is not None:
-                try:
-                    _os.remove(_os.path.join(self.path, m.filename + ".tmp"))
-                except FileNotFoundError:
-                    pass
+        _abort_parts(self.path, messages)
 
 
 def read_jsonl_stream_committed(spark, path: str, schema: str):

@@ -34,6 +34,12 @@ dims/state only. The only ``collect()`` calls in this module are
 partition *metadata* (distinct partition values / file listings of
 touched partitions), never row data; ``tests/test_sinks_scale.py``
 asserts that contract.
+
+Existence rule (:func:`read_existing`): a table is *absent* when its
+path is missing or *empty* — no data file, only ``_``/``.`` names such
+as the ``_SUCCESS`` a CDC write that deleted every row leaves. Any
+other table is read, and an *unreadable* one (truncated footer, schema
+conflict) raises instead of being replaced.
 """
 
 from __future__ import annotations
@@ -89,10 +95,36 @@ def _fs(spark: SparkSession, path: str):
     return fs, jvm.org.apache.hadoop.fs.Path
 
 
+def read_existing(spark: SparkSession, path: str) -> DataFrame | None:
+    """The table at ``path``, or None when it is absent (see the module
+    docstring). Existence is decided by driver-side filesystem calls,
+    so it runs no Spark job; a read error raises."""
+    fs, P = _fs(spark, path)
+    if not fs.exists(P(path)) or not _has_data_file(fs, P(path)):
+        return None
+    return spark.read.parquet(path)
+
+
+def _has_data_file(fs, jp) -> bool:
+    """Whether a data file lies under ``jp``, skipping the names Spark's
+    file index hides (a ``_`` dir counts only as a ``col=value``)."""
+    for st in fs.listStatus(jp):
+        name = st.getPath().getName()
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        if not st.isDirectory() or _has_data_file(fs, st.getPath()):
+            return True
+    return False
+
+
 def _checked_rename(fs, P, src: str, dst: str) -> None:
     """Hadoop ``FileSystem.rename`` signals most failures by returning
     FALSE, not raising — ignoring the result can end in deleting the
-    only copy of a table. Fail loud instead."""
+    only copy of a table. Fail loud instead. A missing destination
+    parent is created first (a rename into it would return FALSE)."""
+    parent = P(dst).getParent()
+    if parent is not None and not fs.exists(parent):
+        fs.mkdirs(parent)
     if not fs.rename(P(src), P(dst)):
         raise IOError(f"filesystem rename failed: {src} -> {dst}")
 
@@ -119,11 +151,7 @@ def _recover(spark: SparkSession, path: str, partition_depth: int = 0) -> None:
     undo_root = path.rstrip("/") + _UNDO_SUFFIX
     if partition_depth and fs.exists(P(undo_root)):
         for rel in _staged_partition_dirs(fs, P, undo_root, partition_depth):
-            dst = P(path + "/" + rel)
-            if not fs.exists(dst):
-                parent = dst.getParent()
-                if not fs.exists(parent):
-                    fs.mkdirs(parent)
+            if not fs.exists(P(path + "/" + rel)):
                 _checked_rename(fs, P, undo_root + "/" + rel, path + "/" + rel)
         fs.delete(P(undo_root), True)
 
@@ -138,9 +166,6 @@ def _swap_dir(spark: SparkSession, staging: str, path: str) -> None:
     old = path.rstrip("/") + _OLD_SUFFIX
     if fs.exists(P(old)):
         fs.delete(P(old), True)
-    parent = P(path).getParent()
-    if parent is not None and not fs.exists(parent):
-        fs.mkdirs(parent)
     if fs.exists(P(path)):
         _checked_rename(fs, P, path, old)
     _checked_rename(fs, P, staging, path)
@@ -176,7 +201,7 @@ def _publish(
     path: str,
     partition_cols: list[str] | None,
     table_exists: bool,
-    drop_dirs: list[str] | None = None,
+    drop_dirs: list[str],
 ) -> None:
     """Stage ``merged`` next to ``path`` and rename into place.
 
@@ -209,19 +234,11 @@ def _publish(
         fs.delete(P(undo_root), True)
     staged = _staged_partition_dirs(fs, P, staging, len(partition_cols))
     for rel in staged:
-        dst = P(path + "/" + rel)
-        if fs.exists(dst):
-            undo = P(undo_root + "/" + rel)
-            uparent = undo.getParent()
-            if not fs.exists(uparent):
-                fs.mkdirs(uparent)
+        if fs.exists(P(path + "/" + rel)):
             _checked_rename(fs, P, path + "/" + rel, undo_root + "/" + rel)
-        parent = dst.getParent()
-        if not fs.exists(parent):
-            fs.mkdirs(parent)
         _checked_rename(fs, P, staging + "/" + rel, path + "/" + rel)
     staged_set = set(staged)
-    for rel in drop_dirs or []:
+    for rel in drop_dirs:
         if rel not in staged_set:
             fs.delete(P(path + "/" + rel), True)
     fs.delete(P(staging), True)
@@ -298,7 +315,6 @@ def write_cdc(
     merged, and swapped, and partitions emptied by deletes are removed
     rather than left stale.
     """
-    _recover(spark, path, len(partition_cols or []))
     # Final payload-hash tiebreaker: two rows tied on seq_cols AND
     # op_col (e.g. two equal-seq upserts with different payloads)
     # would otherwise resolve by physical row order (review r5). The
@@ -322,43 +338,7 @@ def write_cdc(
     is_del = F.col(op_col).eqNullSafe(F.lit(delete_val))
     ups = compact.filter(~is_del).drop(op_col)
     dels = compact.filter(is_del)
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        existing = None
-
-    if existing is None:
-        _publish(spark, ups, path, partition_cols, table_exists=False)
-        return
-
-    if not partition_cols:
-        base = existing.join(dels.select(*keys), keys, "left_anti")
-        merged = _merge(base, ups, keys, keep="incoming")
-        _publish(spark, merged, path, None, table_exists=True)
-        return
-
-    # Partition metadata only: distinct partition tuples in the batch.
-    touched = compact.select(*partition_cols).distinct().collect()
-    existing_t = existing.filter(_partition_pred(partition_cols, touched))
-    # Published directory names of delete-touched partitions, so a
-    # partition whose rows are all deleted can be dropped by name.
-    del_parts = dels.select(*partition_cols).distinct().collect()
-    drop_dirs: list[str] = []
-    if del_parts:
-        files = (
-            existing.filter(_partition_pred(partition_cols, del_parts))
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
-        drop_dirs = sorted(
-            {_partition_dir_of(r["f"], len(partition_cols)) for r in files}
-        )
-    base = existing_t.join(dels.select(*keys), keys, "left_anti")
-    merged = _merge(base, ups, keys, keep="incoming")
-    _publish(
-        spark, merged, path, partition_cols, table_exists=True, drop_dirs=drop_dirs
-    )
+    _write_keyed(spark, ups, path, keys, "incoming", partition_cols, deletes=dels)
 
 
 def _write_keyed(
@@ -368,26 +348,39 @@ def _write_keyed(
     keys: list[str],
     keep: str,
     partition_cols: list[str] | None,
+    deletes: DataFrame | None = None,
 ) -> None:
+    """Recover, read the table (or None), prune it to the batch's
+    partitions, drop the ``deletes`` keys, merge ``incoming`` and
+    publish. The only collects are partition metadata."""
     _recover(spark, path, len(partition_cols or []))
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        existing = None
+    existing = read_existing(spark, path)
+    drop_dirs: list[str] = []
     if existing is not None and partition_cols:
         # Steady-state incremental write: read/merge/swap ONLY the
         # partitions present in the batch — bounded by batch span, not
-        # table history. The collect is partition metadata, not rows.
+        # table history.
         touched = incoming.select(*partition_cols).distinct().collect()
+        if deletes is not None:
+            del_parts = deletes.select(*partition_cols).distinct().collect()
+            touched = list(dict.fromkeys(touched + del_parts))
+            # Published directory names of delete-touched partitions, so
+            # a partition whose rows are all deleted can be dropped by name.
+            if del_parts:
+                files = (
+                    existing.filter(_partition_pred(partition_cols, del_parts))
+                    .select(F.input_file_name().alias("f"))
+                    .distinct()
+                    .collect()
+                )
+                drop_dirs = sorted(
+                    {_partition_dir_of(r["f"], len(partition_cols)) for r in files}
+                )
         existing = existing.filter(_partition_pred(partition_cols, touched))
+    if existing is not None and deletes is not None:
+        existing = existing.join(deletes.select(*keys), keys, "left_anti")
     merged = _merge(existing, incoming, keys, keep=keep)
-    _publish(
-        spark,
-        merged,
-        path,
-        partition_cols,
-        table_exists=existing is not None,
-    )
+    _publish(spark, merged, path, partition_cols, existing is not None, drop_dirs)
 
 
 def write_upsert(

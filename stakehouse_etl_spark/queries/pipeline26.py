@@ -17,6 +17,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from stakehouse_etl_spark.io.sinks import read_existing
 from stakehouse_etl_spark.io.sources import _table_path, load_table
 from stakehouse_etl_spark.operators.text import fan_out, tokens
 from stakehouse_etl_spark.queries.registry import register
@@ -337,11 +338,8 @@ def stream_topk_leaderboard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .orderBy(F.desc("cents"), F.asc("event_id"))
                 .limit(LEADER_K)
             )
-            try:
-                state = sp.read.parquet(state_dir)
-                merged = state.unionByName(part)
-            except Exception:
-                merged = part
+            state = read_existing(sp, state_dir)
+            merged = part if state is None else state.unionByName(part)
             top = (
                 merged.orderBy(F.desc("cents"), F.asc("event_id"))
                 .limit(LEADER_K)

@@ -30,11 +30,10 @@ query whose oracle is the full-history SQL).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from stakehouse_etl_spark.io import sinks
 from stakehouse_etl_spark.io.sinks import write_upsert
 from stakehouse_etl_spark.operators.windows import cumulative_income
 
@@ -61,11 +60,22 @@ def clamp_range(lo: int, hi: int, max_per_run: int) -> tuple[int, int]:
     return lo, min(hi, lo + max_per_run - 1)
 
 
-def read_state(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
+def _write_income(
+    spark: SparkSession,
+    income: DataFrame,
+    income_path: str,
+    key: str,
+    time: str,
+    epochs_per_bucket: int | None,
+) -> None:
+    """T5: idempotent upsert of income rows — flat, or into the
+    epoch-bucket partitioned layout when ``epochs_per_bucket`` is set."""
+    if epochs_per_bucket is None:
+        write_upsert(spark, income, income_path, keys=[key, time])
+    else:
+        sinks.write_time_partitioned(
+            spark, income, income_path, [key, time], time, epochs_per_bucket
+        )
 
 
 def incremental_income_run(
@@ -98,7 +108,7 @@ def incremental_income_run(
     table every run — fine for tests, wrong for a long-lived
     warehouse; the soak pipeline measures the difference).
     """
-    state = read_state(spark, state_path)
+    state = sinks.read_existing(spark, state_path)
 
     head = coupled_high_water_mark(
         *([balances] + ([withdrawals] if withdrawals is not None else [])), time=time
@@ -129,20 +139,7 @@ def incremental_income_run(
         income.unpersist()
         return income
 
-    # T5: idempotent upsert of the produced rows.
-    if epochs_per_bucket is not None:
-        from stakehouse_etl_spark.io.sinks import write_time_partitioned
-
-        write_time_partitioned(
-            spark,
-            income,
-            income_path,
-            keys=[key, time],
-            time_col=time,
-            epochs_per_bucket=epochs_per_bucket,
-        )
-    else:
-        write_upsert(spark, income, income_path, keys=[key, time])
+    _write_income(spark, income, income_path, key, time, epochs_per_bucket)
 
     # Advance runner state to the last computed row per key (carrying
     # forward untouched keys' state unchanged).
@@ -192,17 +189,5 @@ def backfill_income(
         stop_at_gap=False,
         money_scale=money_scale,
     ).filter((F.col(time) >= lo) & (F.col(time) <= hi))
-    if epochs_per_bucket is not None:
-        from stakehouse_etl_spark.io.sinks import write_time_partitioned
-
-        write_time_partitioned(
-            spark,
-            income,
-            income_path,
-            keys=[key, time],
-            time_col=time,
-            epochs_per_bucket=epochs_per_bucket,
-        )
-    else:
-        write_upsert(spark, income, income_path, keys=[key, time])
+    _write_income(spark, income, income_path, key, time, epochs_per_bucket)
     return income
