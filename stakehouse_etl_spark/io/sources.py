@@ -10,6 +10,12 @@ At 100 TB the fact tables would be written partitioned by a time bucket
 (e.g. ``epoch_bucket = epoch // 10_000``) so range predicates prune
 partitions; the loaders below accept either layout transparently
 (``spark.read.parquet`` on a partitioned root handles both).
+
+Stream sources go through ``load_table`` too: a streaming query lands
+the loaded frame with ``streaming.staging.land_batch`` and streams with
+that frame's schema, so the ``events.ts`` normalization below lives
+here alone and a table written as a directory of part files streams
+like a single file. ``_table_path`` stays private to this module.
 """
 
 from __future__ import annotations

@@ -877,15 +877,13 @@ def stream_incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes. Banding and set-building are deterministic, so stored rows
     equal what the recompute form derives — value-identical by
     construction, proved by the unchanged oracle."""
-    import shutil
     import tempfile
 
-    workdir = tempfile.mkdtemp(prefix="stream_dedup_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dedup_", ignore_cleanup_errors=True
+    ) as workdir:
         out = incremental_dedup_run(spark, sf_dir, workdir)
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def incremental_dedup_run(
@@ -914,7 +912,10 @@ def incremental_dedup_run(
         incremental_minhash_dedup_indexed,
         minhash_index_for,
     )
-    from stakehouse_etl_spark.streaming.staging import stage_id_range_batches
+    from stakehouse_etl_spark.streaming.staging import (
+        run_stream,
+        stage_id_range_batches,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -1031,20 +1032,9 @@ def incremental_dedup_run(
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    # Surface a foreachBatch failure as an exception (the injected
-    # crash, or any real one): processAllAvailable returns when the
-    # stream TERMINATES, including by error.
-    if q.exception() is not None:
-        raise q.exception()
+    # Surfaces a foreachBatch failure (the injected crash, or any real
+    # one) as an exception.
+    run_stream(stream.writeStream.foreachBatch(apply_batch), workdir)
     # Lazy frame over workdir state; the registered wrapper collects
     # before tearing the workdir down, resume harnesses read in place.
     return spark.read.parquet(kept_dir).select(
@@ -1081,7 +1071,6 @@ def stream_incremental_dedup_bucketed_q(
     restructure adds one. Value-identical throughout (same oracle,
     equivalence + cap-exactness pinned in tests/test_bucketed_index)."""
     import os
-    import shutil
     import tempfile
     import uuid
 
@@ -1090,116 +1079,114 @@ def stream_incremental_dedup_bucketed_q(
         incremental_minhash_dedup_probed,
         minhash_index_for,
     )
-    from stakehouse_etl_spark.streaming.staging import stage_id_range_batches
+    from stakehouse_etl_spark.streaming.staging import (
+        run_stream,
+        stage_id_range_batches,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    workdir = tempfile.mkdtemp(prefix="stream_dedup_bkt_")
     run_id = uuid.uuid4().hex[:12]
     bands_tbl = f"band_idx_{run_id}"
     sets_tbl = f"set_idx_{run_id}"
     prev_mode = spark.conf.get(
         "spark.sql.sources.partitionOverwriteMode", "static"
     )
-    try:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        src = stage_id_range_batches(docs, workdir)
-        kept_dir = os.path.join(workdir, "kept")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dedup_bkt_", ignore_cleanup_errors=True
+    ) as workdir:
+        try:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+            src = stage_id_range_batches(docs, workdir)
+            kept_dir = os.path.join(workdir, "kept")
 
-        def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-            s = batch_df.sparkSession
-            bno = int(batch_id) + 1
-            have_idx = s.catalog.tableExists(bands_tbl) and (
-                s.catalog.tableExists(sets_tbl)
+            def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
+                s = batch_df.sparkSession
+                bno = int(batch_id) + 1
+                have_idx = s.catalog.tableExists(bands_tbl) and (
+                    s.catalog.tableExists(sets_tbl)
+                )
+                if have_idx:
+                    corpus_bands = (
+                        s.table(bands_tbl)
+                        .filter(F.col("bno") < bno)
+                        .select("doc_id", "band_idx", "band_key")
+                    )
+                    corpus_sets = (
+                        s.table(sets_tbl)
+                        .filter(F.col("bno") < bno)
+                        .select("doc_id", "shingle_set", "n_sh")
+                    )
+                else:
+                    corpus_bands = s.createDataFrame(
+                        [], "doc_id long, band_idx int, band_key string"
+                    )
+                    corpus_sets = s.createDataFrame(
+                        [],
+                        "doc_id long, shingle_set array<string>, n_sh long",
+                    )
+                with cache_scope():
+                    batch_bands, batch_sets = minhash_index_for(batch_df)
+                    batch_bands = persist_tracked(batch_bands)
+                    batch_sets = persist_tracked(batch_sets)
+                    kept_ids = incremental_minhash_dedup_probed(
+                        corpus_bands,
+                        corpus_sets,
+                        batch_bands,
+                        batch_sets,
+                        batch_df.select("doc_id"),
+                    )
+                    kept_ids.write.mode("overwrite").parquet(
+                        os.path.join(kept_dir, f"bno={bno}")
+                    )
+                    kept_again = s.read.parquet(
+                        os.path.join(kept_dir, f"bno={bno}")
+                    )
+                    land_bands = (
+                        batch_bands.join(kept_again, "doc_id", "semi")
+                        .withColumn("bno", F.lit(bno))
+                    )
+                    land_sets = (
+                        batch_sets.join(kept_again, "doc_id", "semi")
+                        .withColumn("bno", F.lit(bno))
+                    )
+                    if not s.catalog.tableExists(bands_tbl):
+                        # EXTERNAL tables under the query's tempdir — the
+                        # managed default is the driver session's
+                        # warehouse dir, not assumed writable.
+                        land_bands.write.partitionBy("bno").bucketBy(
+                            32, "band_idx", "band_key"
+                        ).sortBy("band_idx", "band_key").option(
+                            "path", os.path.join(workdir, "bands_tbl")
+                        ).mode("overwrite").saveAsTable(bands_tbl)
+                    else:
+                        land_bands.select(
+                            "doc_id", "band_idx", "band_key", "bno"
+                        ).write.insertInto(bands_tbl, overwrite=True)
+                    if not s.catalog.tableExists(sets_tbl):
+                        land_sets.write.partitionBy("bno").bucketBy(
+                            32, "doc_id"
+                        ).sortBy("doc_id").option(
+                            "path", os.path.join(workdir, "sets_tbl")
+                        ).mode("overwrite").saveAsTable(sets_tbl)
+                    else:
+                        land_sets.select(
+                            "doc_id", "shingle_set", "n_sh", "bno"
+                        ).write.insertInto(sets_tbl, overwrite=True)
+
+            stream = (
+                spark.readStream.schema("doc_id long, text string")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
             )
-            if have_idx:
-                corpus_bands = (
-                    s.table(bands_tbl)
-                    .filter(F.col("bno") < bno)
-                    .select("doc_id", "band_idx", "band_key")
-                )
-                corpus_sets = (
-                    s.table(sets_tbl)
-                    .filter(F.col("bno") < bno)
-                    .select("doc_id", "shingle_set", "n_sh")
-                )
-            else:
-                corpus_bands = s.createDataFrame(
-                    [], "doc_id long, band_idx int, band_key string"
-                )
-                corpus_sets = s.createDataFrame(
-                    [],
-                    "doc_id long, shingle_set array<string>, n_sh long",
-                )
-            with cache_scope():
-                batch_bands, batch_sets = minhash_index_for(batch_df)
-                batch_bands = persist_tracked(batch_bands)
-                batch_sets = persist_tracked(batch_sets)
-                kept_ids = incremental_minhash_dedup_probed(
-                    corpus_bands,
-                    corpus_sets,
-                    batch_bands,
-                    batch_sets,
-                    batch_df.select("doc_id"),
-                )
-                kept_ids.write.mode("overwrite").parquet(
-                    os.path.join(kept_dir, f"bno={bno}")
-                )
-                kept_again = s.read.parquet(
-                    os.path.join(kept_dir, f"bno={bno}")
-                )
-                land_bands = (
-                    batch_bands.join(kept_again, "doc_id", "semi")
-                    .withColumn("bno", F.lit(bno))
-                )
-                land_sets = (
-                    batch_sets.join(kept_again, "doc_id", "semi")
-                    .withColumn("bno", F.lit(bno))
-                )
-                if not s.catalog.tableExists(bands_tbl):
-                    # EXTERNAL tables under the query's tempdir — the
-                    # managed default is the driver session's
-                    # warehouse dir, not assumed writable.
-                    land_bands.write.partitionBy("bno").bucketBy(
-                        32, "band_idx", "band_key"
-                    ).sortBy("band_idx", "band_key").option(
-                        "path", os.path.join(workdir, "bands_tbl")
-                    ).mode("overwrite").saveAsTable(bands_tbl)
-                else:
-                    land_bands.select(
-                        "doc_id", "band_idx", "band_key", "bno"
-                    ).write.insertInto(bands_tbl, overwrite=True)
-                if not s.catalog.tableExists(sets_tbl):
-                    land_sets.write.partitionBy("bno").bucketBy(
-                        32, "doc_id"
-                    ).sortBy("doc_id").option(
-                        "path", os.path.join(workdir, "sets_tbl")
-                    ).mode("overwrite").saveAsTable(sets_tbl)
-                else:
-                    land_sets.select(
-                        "doc_id", "shingle_set", "n_sh", "bno"
-                    ).write.insertInto(sets_tbl, overwrite=True)
-
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.read.parquet(kept_dir).select(
-            "doc_id", F.col("bno").cast("int").alias("batch_no")
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", prev_mode
-        )
-        spark.sql(f"DROP TABLE IF EXISTS {bands_tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {sets_tbl}")
-        shutil.rmtree(workdir, ignore_errors=True)
+            run_stream(stream.writeStream.foreachBatch(apply_batch), workdir)
+            out = spark.read.parquet(kept_dir).select(
+                "doc_id", F.col("bno").cast("int").alias("batch_no")
+            )
+            return spark.createDataFrame(out.collect(), out.schema)
+        finally:
+            spark.conf.set(
+                "spark.sql.sources.partitionOverwriteMode", prev_mode
+            )
+            spark.sql(f"DROP TABLE IF EXISTS {bands_tbl}")
+            spark.sql(f"DROP TABLE IF EXISTS {sets_tbl}")

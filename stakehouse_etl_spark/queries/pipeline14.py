@@ -12,7 +12,6 @@ exactly-once.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,6 +19,7 @@ from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import land_batch
 
 MICROS_PER_HOUR = 3_600_000_000
 
@@ -55,10 +55,10 @@ def stream_availablenow_restart_q(spark: SparkSession, sf_dir: str) -> DataFrame
     cut1 = (int(lo_us + span) // MICROS_PER_HOUR) * MICROS_PER_HOUR
     cut2 = (int(lo_us + 2 * span) // MICROS_PER_HOUR) * MICROS_PER_HOUR
 
-    workdir = tempfile.mkdtemp(prefix="availnow_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="availnow_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         table_path = os.path.join(workdir, "warehouse", "hourly_balances")
         ckpt = os.path.join(workdir, "ckpt")
 
@@ -67,12 +67,7 @@ def stream_availablenow_restart_q(spark: SparkSession, sf_dir: str) -> DataFrame
                 (F.unix_micros("ts") >= F.lit(lo_cut))
                 & (F.unix_micros("ts") < F.lit(hi_cut))
             )
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
             hourly = batch_df.groupBy(
@@ -112,8 +107,6 @@ def stream_availablenow_restart_q(spark: SparkSession, sf_dir: str) -> DataFrame
             "user_id", "epoch", "balance_cents"
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 @register(

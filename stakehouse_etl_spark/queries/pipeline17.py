@@ -1411,10 +1411,10 @@ def stream_snapshot_publish_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     that equality is the oracle.
     """
     import os
-    import shutil
     import tempfile
 
     from stakehouse_etl_spark.io.sinks import read_snapshot, write_snapshot
+    from stakehouse_etl_spark.streaming.staging import land_batch, run_stream
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
@@ -1423,10 +1423,10 @@ def stream_snapshot_publish_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hi = ev.agg(F.max("event_id")).collect()[0][0]
     cuts = [hi // 3, 2 * hi // 3]
-    workdir = tempfile.mkdtemp(prefix="stream_snap_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_snap_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         ranges = [
             (-(1 << 62), cuts[0]),
             (cuts[0], cuts[1]),
@@ -1436,14 +1436,7 @@ def stream_snapshot_publish_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             chunk = ev.filter(
                 (F.col("event_id") >= lo) & (F.col("event_id") < hb)
             ).select("user_id", "cents")
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         table = os.path.join(workdir, "warehouse", "user_totals")
 
@@ -1486,19 +1479,11 @@ def stream_snapshot_publish_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(publish)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        run_stream(stream.writeStream.foreachBatch(publish), workdir)
         out = read_snapshot(spark, table).select(
             "user_id", "n_events", "total_cents"
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

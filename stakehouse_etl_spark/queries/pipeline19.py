@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
@@ -24,6 +23,11 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import (
+    collect_stream,
+    land_batch,
+    run_stream,
+)
 
 _CUSUM_H = 100_000  # drift alarm threshold, integer cents
 
@@ -166,11 +170,10 @@ def stream_cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo_us, hi_us = row[0].timestamp() * 1e6, row[1].timestamp() * 1e6
     span = (hi_us - lo_us) / 3
 
-    workdir = tempfile.mkdtemp(prefix="cusum_src_")
-    qname = "cusum_" + uuid.uuid4().hex[:8]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="cusum_src_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         cut1, cut2 = int(lo_us + span), int(lo_us + 2 * span)
         ranges = [(-(1 << 62), cut1), (cut1, cut2), (cut2, (1 << 62))]
         for i, (lo_cut, hi_cut) in enumerate(ranges):
@@ -183,12 +186,7 @@ def stream_cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_micros("ts").alias("ts_us"),
                 "cents",
             )
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         stream = (
             spark.readStream.schema(
@@ -197,33 +195,20 @@ def stream_cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.groupBy("user_id")
-            .applyInPandasWithState(
-                _cusum_state_fn,
-                outputStructType=_CUSUM_OUTPUT_SCHEMA,
-                stateStructType=_CUSUM_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.NoTimeout,
-            )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
+        cusum = stream.groupBy("user_id").applyInPandasWithState(
+            _cusum_state_fn,
+            outputStructType=_CUSUM_OUTPUT_SCHEMA,
+            stateStructType=_CUSUM_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname).select(
+        return collect_stream(cusum, workdir, "append").select(
             "user_id",
             "event_id",
             "ts_us",
             "cusum",
             (F.col("cusum") > _CUSUM_H).alias("drift"),
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -523,48 +508,32 @@ def stream_income_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    workdir = tempfile.mkdtemp(prefix="tws_src_")
-    qname = "tws_" + uuid.uuid4().hex[:8]
     try:
-        src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        cut1, cut2 = int(lo_us + span), int(lo_us + 2 * span)
-        ranges = [(-(1 << 62), cut1), (cut1, cut2), (cut2, (1 << 62))]
-        for i, (lo_cut, hi_cut) in enumerate(ranges):
-            chunk = ev.filter(
-                (F.unix_micros("ts") >= F.lit(lo_cut))
-                & (F.unix_micros("ts") < F.lit(hi_cut))
-            ).select("user_id", F.unix_micros("ts").alias("ts_us"), "cents")
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+        with tempfile.TemporaryDirectory(
+            prefix="tws_src_", ignore_cleanup_errors=True
+        ) as workdir:
+            src = os.path.join(workdir, "src")
+            cut1, cut2 = int(lo_us + span), int(lo_us + 2 * span)
+            ranges = [(-(1 << 62), cut1), (cut1, cut2), (cut2, (1 << 62))]
+            for i, (lo_cut, hi_cut) in enumerate(ranges):
+                chunk = ev.filter(
+                    (F.unix_micros("ts") >= F.lit(lo_cut))
+                    & (F.unix_micros("ts") < F.lit(hi_cut))
+                ).select("user_id", F.unix_micros("ts").alias("ts_us"), "cents")
+                land_batch(chunk, src, i)
 
-        stream = (
-            spark.readStream.schema("user_id long, ts_us long, cents long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = (
-            stream.groupBy("user_id")
-            .transformWithStateInPandas(
+            stream = (
+                spark.readStream.schema("user_id long, ts_us long, cents long")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+            )
+            income = stream.groupBy("user_id").transformWithStateInPandas(
                 proc_cls(),
                 outputStructType=_TWS_OUTPUT_SCHEMA,
                 outputMode="append",
                 timeMode="none",
             )
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
+            return collect_stream(income, workdir, "append")
     finally:
         if prev_provider:
             spark.conf.set(
@@ -572,7 +541,6 @@ def stream_income_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         else:
             spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -607,28 +575,18 @@ def s1_datasource_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.dataSource.register(BeaconBalancesStreamSource)
     except Exception:
         pass
-    workdir = tempfile.mkdtemp(prefix="s1_stream_")
-    qname = "s1ds_" + uuid.uuid4().hex[:8]
-    try:
-        q = (
-            spark.readStream.format("beacon_balances_stream")
-            .option("lo", 100)
-            .option("hi", 104)
-            .option("step", 2)
-            .option("n_keys", 50)
-            .load()
-            .writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    stream = (
+        spark.readStream.format("beacon_balances_stream")
+        .option("lo", 100)
+        .option("hi", 104)
+        .option("step", 2)
+        .option("n_keys", 50)
+        .load()
+    )
+    with tempfile.TemporaryDirectory(
+        prefix="s1_stream_", ignore_cleanup_errors=True
+    ) as workdir:
+        return collect_stream(stream, workdir, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -725,10 +683,11 @@ def stream_datasource_e2e_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.dataSource.register(ds)
         except Exception:
             pass
-    workdir = tempfile.mkdtemp(prefix="ds_e2e_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ds_e2e_", ignore_cleanup_errors=True
+    ) as workdir:
         path = os.path.join(workdir, "balances")
-        q = (
+        run_stream(
             spark.readStream.format("beacon_balances_stream")
             .option("lo", 100)
             .option("hi", 104)
@@ -736,15 +695,10 @@ def stream_datasource_e2e_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("n_keys", 50)
             .load()
             .writeStream.format("warehouse_jsonl")
-            .option("path", path)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
+            .option("path", path),
+            workdir,
         )
-        q.processAllAvailable()
-        q.stop()
         back = read_jsonl_stream_committed(
             spark, path, "bls_key string, epoch long, balance long"
         )
         return spark.createDataFrame(back.collect(), back.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

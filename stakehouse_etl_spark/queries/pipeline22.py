@@ -12,15 +12,14 @@ state streaming.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.io.sources import _table_path, load_table
+from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import collect_stream, land_batch
 
 MICROS_PER_DAY = 86_400_000_000
 
@@ -358,36 +357,17 @@ def stream_dedup_within_watermark_q(
     after the TTL would re-emit; that is the documented trade)."""
     ev = load_table(spark, sf_dir, "events")
 
-    workdir = tempfile.mkdtemp(prefix="stream_ddw_")
-    qname = "sddw_" + uuid.uuid4().hex[:8]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ddw_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        for i, half in enumerate(
-            (
-                ev.filter(F.col("event_id") % 2 == 0),
-                ev.filter(F.col("event_id") % 2 == 1),
-            )
-        ):
-            tmp = os.path.join(workdir, f"half{i}")
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-        raw_schema = spark.read.parquet(src).schema
+        land_batch(ev.filter(F.col("event_id") % 2 == 0), src, 0)
+        land_batch(ev.filter(F.col("event_id") % 2 == 1), src, 1)
         stream = (
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
         deduped = (
             stream.select(
                 (F.col("event_id") % 1000).alias("dedup_key"), F.col("ts")
@@ -395,22 +375,9 @@ def stream_dedup_within_watermark_q(
             .withWatermark("ts", "10 days")
             .dropDuplicatesWithinWatermark(["dedup_key"])
         )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname).select("dedup_key")
-        rows = out.collect()
-        # the stream must emit each key EXACTLY once — a re-emission
-        # means the watermark TTL evicted live state
-        materialized = spark.createDataFrame(rows, out.schema)
-        return materialized.groupBy("dedup_key").agg(
-            F.count(F.lit(1)).cast("long").alias("n_emitted")
-        )
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        emitted = collect_stream(deduped, workdir, "append")
+    # the stream must emit each key EXACTLY once — a re-emission
+    # means the watermark TTL evicted live state
+    return emitted.groupBy("dedup_key").agg(
+        F.count(F.lit(1)).cast("long").alias("n_emitted")
+    )

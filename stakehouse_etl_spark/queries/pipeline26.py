@@ -12,15 +12,15 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sinks import read_existing
-from stakehouse_etl_spark.io.sources import _table_path, load_table
+from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.operators.text import fan_out, tokens
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import land_batch, run_stream
 
 CHUNK_TOKS = 8
 
@@ -302,28 +302,15 @@ def stream_topk_leaderboard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal the batch top-{LEADER_K} (the oracle)."""
     ev = load_table(spark, sf_dir, "events")
 
-    workdir = tempfile.mkdtemp(prefix="stream_topk_")
-    qname = "stopk_" + uuid.uuid4().hex[:8]
-    state_dir = os.path.join(workdir, "state")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_topk_", ignore_cleanup_errors=True
+    ) as workdir:
+        state_dir = os.path.join(workdir, "state")
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
-        for i, half in enumerate(
-            (
-                ev.filter(F.col("event_id") % 2 == 0),
-                ev.filter(F.col("event_id") % 2 == 1),
-            )
-        ):
-            tmp = os.path.join(workdir, f"half{i}")
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
-        raw_schema = spark.read.parquet(src).schema
+        land_batch(ev.filter(F.col("event_id") % 2 == 0), src, 0)
+        land_batch(ev.filter(F.col("event_id") % 2 == 1), src, 1)
         stream = (
-            spark.readStream.schema(raw_schema)
+            spark.readStream.schema(ev.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
@@ -349,17 +336,9 @@ def stream_topk_leaderboard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "overwrite"
             ).parquet(state_dir)
 
-        q = (
-            stream.writeStream.foreachBatch(fold_topk)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        run_stream(stream.writeStream.foreachBatch(fold_topk), workdir)
 
         final = spark.read.parquet(state_dir)
         w = Window.orderBy(F.desc("cents"), F.asc("event_id"))
         out = final.withColumn("rnk", F.row_number().over(w).cast("long"))
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

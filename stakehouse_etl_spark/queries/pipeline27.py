@@ -12,13 +12,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.io.sources import _table_path, load_table
+from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import land_batch, run_stream
 
 MICROS_PER_HOUR = 3_600_000_000
 
@@ -134,48 +134,40 @@ def stream_rocksdb_state_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         windowed_event_aggregate,
     )
 
-    load_table(spark, sf_dir, "events")  # pins timestamp read confs
+    ev = load_table(spark, sf_dir, "events")
 
     conf_key = "spark.sql.streaming.stateStore.providerClass"
     old = spark.conf.get(conf_key, None)
-    workdir = tempfile.mkdtemp(prefix="stream_rocks_")
-    qname = "rocks_" + uuid.uuid4().hex[:8]
     try:
         spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(
-            _table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet")
-        )
-        raw_schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        with tempfile.TemporaryDirectory(
+            prefix="stream_rocks_", ignore_cleanup_errors=True
+        ) as workdir:
+            src = os.path.join(workdir, "src")
+            land_batch(ev, src, 0)
+            stream = spark.readStream.schema(ev.schema).parquet(src)
+            agg = windowed_event_aggregate(stream)
+            # Complete mode hands every trigger the whole result table;
+            # the last one is the final answer. foreachBatch rather than
+            # collect_stream because the check below needs the query.
+            final: list = []
+
+            def keep(batch: DataFrame, _batch_id: int) -> None:
+                final[:] = batch.collect()
+
+            q = run_stream(
+                agg.writeStream.outputMode("complete").foreachBatch(keep), workdir
             )
-        agg = windowed_event_aggregate(stream)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        progress = q.lastProgress
-        q.stop()
         # the state operator must have run with rows in state
-        ops = (progress or {}).get("stateOperators") or []
+        ops = (q.lastProgress or {}).get("stateOperators") or []
         # Runtime contract, not a debug assert: must survive `python -O`.
         if not (ops and ops[0].get("numRowsTotal", 0) > 0):
             raise RuntimeError(
                 "streaming state operator did not materialize state"
             )
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
+        return spark.createDataFrame(final, agg.schema)
     finally:
         if old is None:
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, old)
-        shutil.rmtree(workdir, ignore_errors=True)

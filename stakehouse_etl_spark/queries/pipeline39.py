@@ -11,17 +11,16 @@ trend estimation.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.io.sources import _table_path, load_table
+from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.operators.text import fan_out
 from stakehouse_etl_spark.operators.windows import skew_resistant_rank
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import land_batch, run_stream
 
 
 # ---------------------------------------------------------------------------
@@ -50,20 +49,13 @@ def stream_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     processAllAvailable), so the merged counters equal the batch
     aggregate — that equivalence is the oracle.
     """
-    load_table(spark, sf_dir, "events")  # pins the nanosAsLong conf
-
-    workdir = tempfile.mkdtemp(prefix="stream_obs_")
-    qname = "obs_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(_table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet"))
-        raw_schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+    ev = load_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_obs_", ignore_cleanup_errors=True
+    ) as workdir:
+        src = os.path.join(workdir, "src")
+        land_batch(ev, src, 0)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
         observed = stream.select(
             F.round(F.col("value") * 100).cast("long").alias("cents"),
             F.unix_micros("ts").alias("ts_us"),
@@ -74,18 +66,10 @@ def stream_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts_us").cast("long").alias("min_ts_us"),
             F.max("ts_us").cast("long").alias("max_ts_us"),
         )
-        q = (
-            observed.writeStream.outputMode("append")
-            .format("noop")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
+        q = run_stream(
+            observed.writeStream.outputMode("append").format("noop"), workdir
         )
-        q.processAllAvailable()
         progresses = list(q.recentProgress)
-        q.stop()
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
     n_rows = 0
     sum_cents = 0

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import land_batch, run_stream
 
 # ---------------------------------------------------------------------------
 # Bloom-style hashed-bucket join prefilter (no false negatives)
@@ -187,22 +188,17 @@ def stream_cdc_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from stakehouse_etl_spark.io.sinks import write_cdc
 
-    workdir = tempfile.mkdtemp(prefix="stream_cdc_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_cdc_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         cuts = [(lo - 1, lo + span), (lo + span, lo + 2 * span), (lo + 2 * span, hi + 1)]
         for i, (lo_cut, hi_cut) in enumerate(cuts):
             chunk = ev.filter(
                 (F.col("seq_us") > F.lit(lo_cut)) & (F.col("seq_us") <= F.lit(hi_cut))
             )
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
             # File mtime orders the micro-batches (change order).
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         table_path = os.path.join(workdir, "warehouse", "snapshot")
 
@@ -221,18 +217,10 @@ def stream_cdc_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        run_stream(stream.writeStream.foreachBatch(apply_batch), workdir)
         out = spark.read.parquet(table_path).select(
             "user_id",
             F.col("cents").alias("last_cents"),
             F.col("seq_us").alias("last_seq_us"),
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)

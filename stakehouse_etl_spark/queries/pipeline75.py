@@ -270,15 +270,18 @@ def stream_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``incremental_minhash_dedup`` band-index pattern,
     operators/dedup.py:616)."""
     import os
-    import shutil
     import tempfile
 
-    from stakehouse_etl_spark.streaming.staging import stage_id_range_batches
+    from stakehouse_etl_spark.streaming.staging import (
+        run_stream,
+        stage_id_range_batches,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
-    workdir = tempfile.mkdtemp(prefix="stream_span_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_span_", ignore_cleanup_errors=True
+    ) as workdir:
         # Shared scaffold (streaming/staging.py): one mtime-ordered
         # single-file chunk per intended micro-batch (the oracle's
         # tercile batch_no CASE is written for the default 3;
@@ -358,20 +361,12 @@ def stream_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        run_stream(stream.writeStream.foreachBatch(apply_batch), workdir)
         out = spark.read.parquet(out_dir).select(
             "doc_id", "n_tokens", "n_kept", "n_scrubbed", "cleaned_fp",
             "batch_no",
         )
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 def _compact_every(default: int = 8) -> int:
@@ -502,18 +497,18 @@ def stream_span_scrub_bucketed_q(
     index; the compacted bid is ``-batch_id``, strictly below every
     probe's ``bid < batch_id`` filter, and covers only PRE-batch bids
     so a re-executed batch never probes its own grams."""
-    import shutil
     import tempfile
     import uuid
 
-    workdir = tempfile.mkdtemp(prefix="stream_span_bkt_")
     tbl = f"gram_idx_{uuid.uuid4().hex[:12]}"
-    try:
-        out = span_scrub_bucketed_run(spark, sf_dir, workdir, tbl)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(workdir, ignore_errors=True)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_span_bkt_", ignore_cleanup_errors=True
+    ) as workdir:
+        try:
+            out = span_scrub_bucketed_run(spark, sf_dir, workdir, tbl)
+            return spark.createDataFrame(out.collect(), out.schema)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
 
 
 def _ensure_gram_table(spark: SparkSession, tbl: str, workdir: str) -> None:
@@ -559,7 +554,10 @@ def span_scrub_bucketed_run(
     exists for)."""
     import os
 
-    from stakehouse_etl_spark.streaming.staging import stage_id_range_batches
+    from stakehouse_etl_spark.streaming.staging import (
+        run_stream,
+        stage_id_range_batches,
+    )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     prev_mode = spark.conf.get(
@@ -632,20 +630,9 @@ def span_scrub_bucketed_run(
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # Surface a foreachBatch failure as an exception (the injected
-        # crash, or any real one): processAllAvailable returns when the
-        # stream TERMINATES, including by error.
-        if q.exception() is not None:
-            raise q.exception()
+        # Surfaces a foreachBatch failure (the injected crash, or any
+        # real one) as an exception.
+        run_stream(stream.writeStream.foreachBatch(apply_batch), workdir)
         return spark.read.parquet(out_dir).select(
             "doc_id", "n_tokens", "n_kept", "n_scrubbed", "cleaned_fp",
             "batch_no",

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.streaming.staging import collect_stream, land_batch
 
 # ---------------------------------------------------------------------------
 # Small-file compaction
@@ -116,10 +117,10 @@ def stream_append_eviction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = (lo + hi) // 2
     sentinel_us = hi + 4 * _HOUR_US
 
-    workdir = tempfile.mkdtemp(prefix="stream_evict_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_evict_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         batches = [
             ev.filter(F.unix_micros("ts") >= mid),  # stream head first
             ev.filter(F.unix_micros("ts") < mid),  # old data arrives late
@@ -128,16 +129,8 @@ def stream_append_eviction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
         for i, chunk in enumerate(batches):
-            tmp = os.path.join(workdir, f"c{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
-        import uuid
-
-        qname = "evict_" + uuid.uuid4().hex[:8]
         stream = (
             spark.readStream.schema("event_id long, ts timestamp")
             .option("maxFilesPerTrigger", 1)
@@ -151,19 +144,7 @@ def stream_append_eviction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.unix_micros("win.start").alias("win_start_us"), "n_events"
             )
         )
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(agg, workdir, "append")
 
 
 # ---------------------------------------------------------------------------

@@ -15,15 +15,19 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.io.sources import _table_path, load_table
+from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.operators.multimodal import attach_payload, byte_features
 from stakehouse_etl_spark.queries.registry import register
 from stakehouse_etl_spark.streaming.incremental import incremental_income_run
+from stakehouse_etl_spark.streaming.staging import (
+    collect_stream,
+    land_batch,
+    run_stream,
+)
 from stakehouse_etl_spark.streaming.structured import windowed_event_aggregate
 
 MICROS_PER_HOUR = 3_600_000_000
@@ -53,38 +57,14 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Complete output mode: with a bounded source every window closes by
     end-of-stream, so the final table equals the batch result.)
     """
-    load_table(spark, sf_dir, "events")  # ensures nanosAsLong conf is set
-
-    workdir = tempfile.mkdtemp(prefix="stream_src_")
-    qname = "wincounts_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(_table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet"))
-
-        # Raw file schema (ts is a nanos long under the conf); the
-        # stream converts exactly like the batch loader does.
-        raw_schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        agg = windowed_event_aggregate(stream)
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        # Materialize before the temp source dir is deleted.
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+    ev = load_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_src_", ignore_cleanup_errors=True
+    ) as workdir:
+        src = os.path.join(workdir, "src")
+        land_batch(ev, src, 0)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
+        return collect_stream(windowed_event_aggregate(stream), workdir, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -130,11 +110,10 @@ def stream_stateful_income(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo_us, hi_us = row[0].timestamp() * 1e6, row[1].timestamp() * 1e6
     span = (hi_us - lo_us) / 3
 
-    workdir = tempfile.mkdtemp(prefix="stateful_src_")
-    qname = "stateinc_" + uuid.uuid4().hex[:8]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stateful_src_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         cut1, cut2 = int(lo_us + span), int(lo_us + 2 * span)
         ranges = [  # half-open, disjoint, exhaustive
             (-(1 << 62), cut1),
@@ -146,34 +125,14 @@ def stream_stateful_income(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.unix_micros("ts") >= F.lit(lo_cut))
                 & (F.unix_micros("ts") < F.lit(hi_cut))
             )
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp) if f.endswith(".parquet")
-            )
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         stream = (
             spark.readStream.schema("user_id long, ts timestamp, value double")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            streaming_cumulative_income(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(streaming_cumulative_income(stream), workdir, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -383,34 +342,15 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. The oracle materializes the same two-window membership
     with an integer-micros cross join (window starts are the two hour
     marks at ts//1h and ts//1h − 1)."""
-    load_table(spark, sf_dir, "events")  # ensures nanosAsLong conf is set
-
-    workdir = tempfile.mkdtemp(prefix="stream_slide_")
-    qname = "slidecounts_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(_table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet"))
-        raw_schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+    ev = load_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_slide_", ignore_cleanup_errors=True
+    ) as workdir:
+        src = os.path.join(workdir, "src")
+        land_batch(ev, src, 0)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
         agg = windowed_event_aggregate(stream, window="2 hours", slide="1 hour")
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(agg, workdir, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -451,38 +391,19 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the lag/cumsum gap-session rendering; note Spark's
     session boundary is a closed gap (new session at delta == gap),
     hence ``>=`` in the oracle where ts_sessionize uses ``>``."""
-    load_table(spark, sf_dir, "events")  # ensures nanosAsLong conf is set
+    from stakehouse_etl_spark.streaming.structured import (
+        session_window_aggregate,
+    )
 
-    workdir = tempfile.mkdtemp(prefix="stream_sess_")
-    qname = "sesswin_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(_table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet"))
-        raw_schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
-        from stakehouse_etl_spark.streaming.structured import (
-            session_window_aggregate,
-        )
-
+    ev = load_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_sess_", ignore_cleanup_errors=True
+    ) as workdir:
+        src = os.path.join(workdir, "src")
+        land_batch(ev, src, 0)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
         agg = session_window_aggregate(stream, gap="4 hours")
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(agg, workdir, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -507,23 +428,17 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference serving join, J5, in streaming form). Static side is
     planned once and broadcast to every trigger; no state is needed
     for the join itself."""
-    load_table(spark, sf_dir, "events")  # ensures nanosAsLong conf is set
+    ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
 
-    workdir = tempfile.mkdtemp(prefix="stream_enrich_")
-    qname = "enrich_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(_table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet"))
-        raw_schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(raw_schema).parquet(src)
-        if dict(stream.dtypes).get("ts") == "bigint":
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.expr("ts div 1000"))
-            )
+    with tempfile.TemporaryDirectory(
+        prefix="stream_enrich_", ignore_cleanup_errors=True
+    ) as workdir:
+        src = os.path.join(workdir, "src")
+        land_batch(ev, src, 0)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
         agg = (
             stream.join(F.broadcast(cust), "user_id")
             .groupBy(F.col("c_mktsegment").alias("segment"))
@@ -534,19 +449,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("sum_value"),
             )
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(agg, workdir, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -575,22 +478,18 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     once the purchase-side watermark passes click_ts + 1 h; without
     the time bound the join state grows forever). Inner matches emit
     as they arrive, so the bounded run equals the batch join exactly."""
-    load_table(spark, sf_dir, "events")  # ensures nanosAsLong conf is set
-
-    workdir = tempfile.mkdtemp(prefix="stream_ssj_")
-    qname = "ssjoin_" + uuid.uuid4().hex[:8]
-    try:
-        src = os.path.join(workdir, "events")
-        os.makedirs(src)
-        shutil.copy(_table_path(sf_dir, "events"), os.path.join(src, "part-0.parquet"))
-        raw_schema = spark.read.parquet(src).schema
+    ev = load_table(spark, sf_dir, "events")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ssj_", ignore_cleanup_errors=True
+    ) as workdir:
+        src = os.path.join(workdir, "src")
+        land_batch(ev, src, 0)
 
         def read_side(kind: str, alias: str) -> DataFrame:
-            s = spark.readStream.schema(raw_schema).parquet(src)
-            if dict(s.dtypes).get("ts") == "bigint":
-                s = s.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
             return (
-                s.filter(F.col("event_type") == kind)
+                spark.readStream.schema(ev.schema)
+                .parquet(src)
+                .filter(F.col("event_type") == kind)
                 .select(
                     F.col("user_id").alias(f"{alias}_user"),
                     F.col("ts").alias(f"{alias}_ts"),
@@ -617,19 +516,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "purchase_value"
             ),
         )
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(joined, workdir, "append")
 
 
 # ---------------------------------------------------------------------------
@@ -656,23 +543,13 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_total = docs.count()
 
-    workdir = tempfile.mkdtemp(prefix="stream_dedup_")
-    qname = "sdedup_" + uuid.uuid4().hex[:8]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dedup_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         # Two deterministic halves -> two triggers (mtime-ordered).
-        for i, half in enumerate(
-            (docs.filter(F.col("doc_id") % 2 == 0),
-             docs.filter(F.col("doc_id") % 2 == 1))
-        ):
-            tmp = os.path.join(workdir, f"half{i}")
-            half.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
-
+        land_batch(docs.filter(F.col("doc_id") % 2 == 0), src, 0)
+        land_batch(docs.filter(F.col("doc_id") % 2 == 1), src, 1)
         stream = (
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", 1)
@@ -682,20 +559,14 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream.select(normalized_fingerprint(F.col("text")).alias("fingerprint"))
             .dropDuplicates(["fingerprint"])
         )
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        assert n_total >= out.count()  # state suppressed cross-batch dups
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        out = collect_stream(deduped, workdir, "append")
+    # Runtime contract, not a debug assert: must survive `python -O`.
+    # State suppressed cross-batch dups, so at most one row per doc
+    # (``out`` is driver-side: collecting it runs no Spark job).
+    n_out = len(out.collect())
+    if n_out > n_total:
+        raise RuntimeError(f"stream_dedup_exact: {n_out} fingerprints from {n_total} docs")
+    return out
 
 
 # ---------------------------------------------------------------------------
@@ -725,10 +596,10 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo_us, hi_us = row[0].timestamp() * 1e6, row[1].timestamp() * 1e6
     span = (hi_us - lo_us) / 3
 
-    workdir = tempfile.mkdtemp(prefix="stream_upsert_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_upsert_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         # Cuts aligned to hour-bucket boundaries: each (user, epoch)
         # hour lands wholly in one micro-batch, so the newest-wins
         # upsert never overwrites an earlier batch's partial max (the
@@ -743,12 +614,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.unix_micros("ts") >= F.lit(lo_cut))
                 & (F.unix_micros("ts") < F.lit(hi_cut))
             )
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         table_path = os.path.join(workdir, "warehouse", "hourly_balances")
 
@@ -769,17 +635,9 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            stream.writeStream.foreachBatch(upsert_batch)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        run_stream(stream.writeStream.foreachBatch(upsert_batch), workdir)
         out = spark.read.parquet(table_path).select("user_id", "epoch", "balance")
         return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -841,11 +699,10 @@ def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo_us, hi_us = row[0].timestamp() * 1e6, row[1].timestamp() * 1e6
     span = (hi_us - lo_us) / 3
 
-    workdir = tempfile.mkdtemp(prefix="funnel_src_")
-    qname = "funnel_" + uuid.uuid4().hex[:8]
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="funnel_src_", ignore_cleanup_errors=True
+    ) as workdir:
         src = os.path.join(workdir, "src")
-        os.makedirs(src)
         cut1, cut2 = int(lo_us + span), int(lo_us + 2 * span)
         ranges = [  # half-open, disjoint, exhaustive
             (-(1 << 62), cut1),
@@ -857,12 +714,7 @@ def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.unix_micros("ts") >= F.lit(lo_cut))
                 & (F.unix_micros("ts") < F.lit(hi_cut))
             )
-            tmp = os.path.join(workdir, f"chunk{i}")
-            chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            dst = os.path.join(src, f"{i}.parquet")
-            shutil.copy(os.path.join(tmp, part), dst)
-            os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+            land_batch(chunk, src, i)
 
         stream = (
             spark.readStream.schema(
@@ -871,17 +723,4 @@ def stream_funnel_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        q = (
-            streaming_funnel(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", os.path.join(workdir, "ckpt"))
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        out = spark.table(qname)
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
+        return collect_stream(streaming_funnel(stream), workdir, "append")

@@ -1,18 +1,27 @@
-"""File-source staging for the foreachBatch test loops.
+"""The bounded-stream scaffold every streaming catalog query runs on.
 
-The streaming corpus-maintenance queries (``stream_incremental_dedup``,
-``stream_span_scrub``, ``stream_snapshot_publish``, …) feed Structured
-Streaming's file source from a staged directory of single-file parquet
-chunks — one file per intended micro-batch, mtime-ordered so
-``maxFilesPerTrigger=1`` replays them in batch order. Review r8: two
-queries carried this ~25-line scaffold verbatim; any fix to the
-batching scheme (cut-edge handling, file ordering) had to be applied
-twice. It lives here once.
+A catalog streaming query feeds Structured Streaming's file source from
+a staged directory of single-file parquet chunks and drives it to
+completion. Three functions hold that scaffold:
 
-The batch count defaults to 3 (the DuckDB oracles unroll exactly 3
-greedy stages); ``SPARK_GRAFT_STREAM_BATCHES`` exists for the
-long-horizon fuzz harness only (tools/stream_fuzz.py --batches,
-VERDICT r7 task 2) — the correctness gates always run the default.
+- ``land_batch(df, src, i)`` lands ``df`` as the single file
+  ``src/<i>.parquet`` with mtime ``1_000_000 + i``, so the file source
+  (with ``maxFilesPerTrigger=1`` where a query wants one batch per
+  chunk) replays chunks in ``i`` order.
+- ``run_stream(writer, workdir)`` starts a query with its checkpoint
+  at ``workdir/ckpt``, drains everything available, always stops it,
+  and re-raises the query's own failure.
+- ``collect_stream(df, workdir, output_mode)`` runs ``df`` into a
+  memory sink and returns its rows as a driver-side DataFrame. The
+  sink's temp view never outlives the query: it is dropped before
+  ``collect_stream`` returns, whether the stream succeeded or not.
+
+``stage_id_range_batches`` cuts a frame into id-range chunks through
+``land_batch`` for the corpus-maintenance loops. Its batch count
+defaults to 3 (the DuckDB oracles unroll exactly 3 greedy stages);
+``SPARK_GRAFT_STREAM_BATCHES`` exists for the long-horizon fuzz harness
+only (tools/stream_fuzz.py --batches) — the correctness gates always
+run the default.
 """
 
 from __future__ import annotations
@@ -20,14 +29,65 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
 def stream_batch_count(default: int = 3) -> int:
     """The micro-batch count for the staged file source."""
     return int(os.environ.get("SPARK_GRAFT_STREAM_BATCHES", str(default)))
+
+
+def land_batch(df: DataFrame, src: str, i: int) -> None:
+    """Write ``df`` as the single file ``src/<i>.parquet`` with mtime
+    ``1_000_000 + i``. Spark writes the chunk into
+    a sibling ``chunk<i>`` directory first; the part file is then
+    renamed into ``src``, so the source never lists a half-written
+    file, and the scratch directory is removed."""
+    tmp = os.path.join(os.path.dirname(src), f"chunk{i}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    os.makedirs(src, exist_ok=True)
+    dst = os.path.join(src, f"{i}.parquet")
+    os.replace(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp)
+    os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+
+
+def run_stream(writer: DataStreamWriter, workdir: str) -> StreamingQuery:
+    """Start ``writer`` with its checkpoint under ``workdir/ckpt``,
+    process everything available, stop, and re-raise the query's
+    failure (a foreachBatch error included). The stopped query is
+    returned so callers can read ``lastProgress`` / ``recentProgress``."""
+    q = writer.option("checkpointLocation", os.path.join(workdir, "ckpt")).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    if q.exception() is not None:
+        raise q.exception()
+    return q
+
+
+def collect_stream(df: DataFrame, workdir: str, output_mode: str) -> DataFrame:
+    """Run streaming ``df`` into a memory sink under a fresh name and
+    return its rows as a driver-side DataFrame. The sink's temp view is
+    dropped on the way out, so repeated runs leave the session's views
+    as they found them."""
+    spark = df.sparkSession
+    name = "stream_" + uuid.uuid4().hex
+    try:
+        run_stream(
+            df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+            workdir,
+        )
+        out = spark.table(name)
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def stage_id_range_batches(
@@ -91,7 +151,6 @@ def stage_id_range_batches(
         # No manifest: the prior staging never completed, so no stream
         # (and no checkpoint) ever read it — safe to rebuild cleanly.
         shutil.rmtree(src)
-    os.makedirs(src, exist_ok=True)
     for i in range(1, n_b + 1):
         lo, hi = edges[i - 1], edges[i]
         chunk = df
@@ -99,12 +158,7 @@ def stage_id_range_batches(
             chunk = chunk.filter(F.col(id_col) > lo)
         if hi is not None:
             chunk = chunk.filter(F.col(id_col) <= hi)
-        tmp = os.path.join(workdir, f"chunk{i}")
-        chunk.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        dst = os.path.join(src, f"{i}.parquet")
-        shutil.copy(os.path.join(tmp, part), dst)
-        os.utime(dst, (1_000_000 + i, 1_000_000 + i))
+        land_batch(chunk, src, i)
     # Written last: certifies completion. The leading underscore keeps
     # Spark's file listing (and therefore the streaming file source)
     # from treating it as data.
