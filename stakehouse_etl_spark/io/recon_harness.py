@@ -51,15 +51,13 @@ SOURCE_SCHEMA = StructType(
 )
 
 
-def load_source_totals(
-    spark: SparkSession, location: str, timeout_sec: int = 30
-) -> DataFrame:
+def load_source_totals(spark: SparkSession, location: str) -> DataFrame:
     """Per-key totals from an external source: ``[{"key": k,
     "value": v}, ...]`` JSON at an http(s) URL or local file path.
     Values land as integer cents (LongType) — the reconciliation
     contract is exact integer compare with an explicit ``tol``."""
     if location.startswith(("http://", "https://")):
-        with urllib.request.urlopen(location, timeout=timeout_sec) as r:
+        with urllib.request.urlopen(location, timeout=30) as r:
             body = json.loads(r.read().decode("utf-8"))
     else:
         with open(location, encoding="utf-8") as f:

@@ -416,13 +416,10 @@ def write_insert_ignore(
     incoming: DataFrame,
     path: str,
     keys: list[str],
-    partition_cols: list[str] | None = None,
 ) -> None:
     """K2: INSERT IGNORE → oldest-wins merge + staged write + atomic
-    rename. Same partition-stability contract as :func:`write_upsert`:
-    with ``partition_cols``, the dedup-by-key only sees the batch's
-    own partitions, so keys must determine their partition."""
-    _write_keyed(spark, incoming, path, keys, "existing", partition_cols)
+    rename into an unpartitioned table."""
+    _write_keyed(spark, incoming, path, keys, "existing", None)
 
 
 def with_epoch_bucket(
@@ -462,9 +459,8 @@ def write_bucketed(
     keys: list[str],
     n_buckets: int,
     path: str | None = None,
-    sort_by: list[str] | None = None,
 ) -> None:
-    """Hash-bucketed (and per-file sorted) warehouse table: the
+    """Hash-bucketed (and per-file sorted by ``keys``) warehouse table: the
     co-located-join layout. Two tables bucketed by the same key with
     the same bucket count join with NO exchange on either side — at
     100 TB, pre-bucketing the fact tables on their join key (e.g.
@@ -475,7 +471,7 @@ def write_bucketed(
         df.write.format("parquet")
         .mode("overwrite")
         .bucketBy(n_buckets, *keys)
-        .sortBy(*(sort_by or keys))
+        .sortBy(*keys)
     )
     if path:
         writer = writer.option("path", path)

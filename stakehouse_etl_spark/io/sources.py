@@ -93,14 +93,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one table. Plain ``spark.read.parquet`` — no schema fudging,
     so Parquet statistics, pushdown and vectorized decoding all apply.
 
-    One normalization: the synthetic ``events`` table stores ``ts`` as
-    parquet TIMESTAMP(NANOS), which Spark only reads via the
-    ``nanosAsLong`` escape hatch. We convert to a microsecond
+    One normalization: the synthetic ``events`` table may store ``ts``
+    as parquet TIMESTAMP(NANOS), which Spark only reads via the
+    ``nanosAsLong`` escape hatch (set by ``session.get_spark`` and
+    ``session.apply_engine_conf``). We convert to a microsecond
     timestamp with exact integer division (``div`` — a double round
     trip would corrupt: nanos ≈ 1.7e18 > 2^53), truncating exactly as
     DuckDB does, so both engines see identical instants.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(_table_path(sf_dir, name))
     from pyspark.sql import functions as F
 
@@ -109,9 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register each table as a temp view so queries can use spark.sql."""
-    for name in names:
+    for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)

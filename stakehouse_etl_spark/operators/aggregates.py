@@ -14,16 +14,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def exact_money_sum(col: str | Column, scale: int = 100) -> Column:
-    """Order-independent sum of a fixed-point-decimal double column.
+def exact_money_sum(col: str | Column) -> Column:
+    """Order-independent sum of a 2-decimal money double column.
 
-    ``sum(round(x*scale)::bigint)/scale`` — integer addition is exact
+    ``sum(round(x*100)::bigint)/100`` — integer addition is exact
     and associative, so partial/final aggregation order (and a 1000×
     scale-up) cannot change the result. The single final division is
     performed once on an exact integer.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(F.round(c * scale).cast("long")) / float(scale)
+    return F.sum(F.round(c * 100).cast("long")) / 100.0
 
 
 def two_level_rollup(
@@ -50,18 +50,12 @@ def two_level_rollup(
     )
 
 
-def group_collect(
-    df: DataFrame, key: str, collect_col: str, sort_result: bool = True
-) -> DataFrame:
+def group_collect(df: DataFrame, key: str, collect_col: str) -> DataFrame:
     """A8: the reference's sorted-stream ``itertools.groupby``
     (``src/utils/apiUtils.py:56``) → grouped ``collect_list``.
 
-    ``sort_result`` sorts each collected list for deterministic output
+    Each collected list is sorted for deterministic output
     (``collect_list`` order is partition-dependent otherwise).
     """
     collected = df.groupBy(key).agg(F.collect_list(collect_col).alias(collect_col + "s"))
-    if sort_result:
-        collected = collected.withColumn(
-            collect_col + "s", F.sort_array(F.col(collect_col + "s"))
-        )
-    return collected
+    return collected.withColumn(collect_col + "s", F.sort_array(F.col(collect_col + "s")))

@@ -29,7 +29,7 @@ intermediate dataset instead.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.caches import persist_tracked
@@ -37,7 +37,6 @@ from stakehouse_etl_spark.operators.text import (
     fan_out,
     hash32,
     normalized_fingerprint,
-    shingles,
     shingles_from_toks,
     tokens,
 )
@@ -172,7 +171,6 @@ def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold_pct: int = 20,
 ) -> DataFrame:
     """Tier 2: exact n-gram Jaccard over a shingle self-join.
@@ -185,7 +183,7 @@ def jaccard_pairs(
     # Three consumers (counts + both join sides) — persist or the
     # tokenize/shingle/md5 subtree runs 3× (same trap as in
     # minhash_lsh_pairs).
-    sh = persist_tracked(doc_shingles(df, text_col, id_col, k))
+    sh = persist_tracked(doc_shingles(df, text_col, id_col))
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -247,11 +245,11 @@ def _per_doc_state(sh: DataFrame, id_col: str) -> DataFrame:
 
 
 def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 3
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Per-doc MinHash signature: min over shingles of (a·h+b) mod p
     for each of the 16 permutations. h is the cross-engine 32-bit hash."""
-    return _signatures_from_shingles(doc_shingles(df, text_col, id_col, k), id_col)
+    return _signatures_from_shingles(doc_shingles(df, text_col, id_col), id_col)
 
 
 def _banded(sh: DataFrame, id_col: str) -> DataFrame:
@@ -372,19 +370,17 @@ def lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     max_bucket: int | None = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Unverified LSH candidate pairs (for recall evaluation of the
     banding scheme against the exact join)."""
-    return _band_candidates(doc_shingles(df, text_col, id_col, k), id_col, max_bucket)
+    return _band_candidates(doc_shingles(df, text_col, id_col), id_col, max_bucket)
 
 
 def lsh_bucket_stats(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     max_bucket: int = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Observability for the band-bucket cap: per band index, the
@@ -392,7 +388,7 @@ def lsh_bucket_stats(
     buckets, and the candidate-pair mass those drops avoided
     (Σ b·(b−1)/2 over dropped buckets). This is the number a 100 TB
     dedup run monitors to tune bands×rows and the cap."""
-    banded = _banded(doc_shingles(df, text_col, id_col, k), id_col)
+    banded = _banded(doc_shingles(df, text_col, id_col), id_col)
     sizes = banded.groupBy("band_idx", "band_key").agg(
         F.count(F.lit(1)).alias("bsz")
     )
@@ -417,7 +413,6 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold_pct: int = 20,
     max_bucket: int | None = LSH_MAX_BUCKET,
 ) -> DataFrame:
@@ -441,7 +436,7 @@ def minhash_lsh_pairs(
     # shuffles per run. MEMORY_AND_DISK: spills at scale; at 100 TB
     # you would persist this as a real intermediate table anyway.
     per_doc = persist_tracked(
-        _per_doc_state(doc_shingles(df, text_col, id_col, k), id_col)
+        _per_doc_state(doc_shingles(df, text_col, id_col), id_col)
     )
     candidates = _candidates_from_banded(
         _banded_from_sig(per_doc, id_col), id_col, max_bucket
@@ -497,7 +492,6 @@ def near_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold_pct: int = 20,
     tier: str = "lsh",
     max_bucket: int | None = LSH_MAX_BUCKET,
@@ -521,11 +515,9 @@ def near_dup_pairs(
     without downstream changes.
     """
     if tier == "lsh":
-        return minhash_lsh_pairs(
-            df, text_col, id_col, k, threshold_pct, max_bucket
-        )
+        return minhash_lsh_pairs(df, text_col, id_col, threshold_pct, max_bucket)
     if tier == "exact":
-        return jaccard_pairs(df, text_col, id_col, k, threshold_pct)
+        return jaccard_pairs(df, text_col, id_col, threshold_pct)
     raise ValueError(f"unknown near-dup tier: {tier!r}")
 
 
@@ -533,7 +525,6 @@ def prefix_filter_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold_pct: int = 70,
     max_prefix_df: int | None = None,
     n_part: int | None = None,
@@ -648,7 +639,7 @@ def prefix_filter_jaccard_pairs(
         .withColumn("__pf_toks", tokens(F.col(text_col)))
         .select(
             F.col(id_col),
-            shingles_from_toks(F.col("__pf_toks"), k).alias("__sh_arr"),
+            shingles_from_toks(F.col("__pf_toks")).alias("__sh_arr"),
         ),
         level=cache_level,
     )
@@ -914,7 +905,6 @@ def containment_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold_pct: int = 80,
     max_df: int | None = None,
 ) -> DataFrame:
@@ -934,7 +924,7 @@ def containment_pairs(
     scale sweep, not for the ground-truth arm (default None keeps the
     exact oracle contract).
     """
-    sh = persist_tracked(doc_shingles(df, text_col, id_col, k))
+    sh = persist_tracked(doc_shingles(df, text_col, id_col))
     counts = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     joinable = sh
     if max_df is not None:
@@ -1065,7 +1055,6 @@ def minhash_index_for(
     batch: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """The per-batch (bands, sets) pair a stored MinHash index is built
     from: ``bands`` = (id, band_idx, band_key) LSH band rows, ``sets``
@@ -1074,7 +1063,7 @@ def minhash_index_for(
     :func:`incremental_minhash_dedup_indexed` batch-sized — the r8
     9-batch sf10 fuzz measured the recompute-the-corpus form growing
     7.9 → 13.6 s/batch as the stored corpus reached 8× batch size."""
-    sh = persist_tracked(doc_shingles(batch, text_col, id_col, k))
+    sh = persist_tracked(doc_shingles(batch, text_col, id_col))
     bands = _banded(sh, id_col)
     sets = sh.groupBy(id_col).agg(
         F.sort_array(F.collect_list("shingle")).alias("shingle_set"),
@@ -1395,9 +1384,7 @@ def incremental_minhash_dedup(
     batch: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    k: int = 3,
     threshold_pct: int = 20,
-    max_bucket: int | None = LSH_MAX_BUCKET,
 ) -> DataFrame:
     """Incremental dedup — the PRODUCTION shape of corpus maintenance:
     a new crawl ``batch`` deduped against the already-kept ``corpus``
@@ -1422,10 +1409,8 @@ def incremental_minhash_dedup(
     r8: the two forms previously carried ~50 duplicated lines whose
     silent divergence the default-shape oracle could not catch).
     """
-    corpus_bands, corpus_sets = minhash_index_for(
-        corpus, text_col, id_col, k
-    )
-    batch_bands, batch_sets = minhash_index_for(batch, text_col, id_col, k)
+    corpus_bands, corpus_sets = minhash_index_for(corpus, text_col, id_col)
+    batch_bands, batch_sets = minhash_index_for(batch, text_col, id_col)
     return incremental_minhash_dedup_indexed(
         corpus_bands,
         corpus_sets,
@@ -1434,5 +1419,4 @@ def incremental_minhash_dedup(
         batch.select(id_col),
         id_col=id_col,
         threshold_pct=threshold_pct,
-        max_bucket=max_bucket,
     )

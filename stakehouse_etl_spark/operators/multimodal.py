@@ -325,8 +325,8 @@ _WAV_DECODE_SCHEMA = StructType(
 )
 
 
-def _wav_encode_one(mid: int, n: int, rate: int = 16000) -> bytes:
-    """A real RIFF/WAVE file: fmt chunk (PCM, mono, 16-bit) + data
+def _wav_encode_one(mid: int, n: int) -> bytes:
+    """A real RIFF/WAVE file: fmt chunk (PCM, mono, 16-bit, 16 kHz) + data
     chunk of int16-LE samples, plus a junk LIST chunk so decoders must
     actually WALK chunks rather than assume fixed offsets."""
     import struct
@@ -334,7 +334,7 @@ def _wav_encode_one(mid: int, n: int, rate: int = 16000) -> bytes:
     i = np.arange(n, dtype=np.int64)
     samples = (((i * 13 + mid * 7) % 65536) - 32768).astype("<i2")
     data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, 16000, 16000 * 2, 2, 16)
     junk = b"spark-graft metadata"
     chunks = (
         b"fmt " + struct.pack("<I", len(fmt)) + fmt
@@ -436,17 +436,15 @@ _BMP_HIST_SCHEMA = StructType(
 )
 
 
-def bmp_channel_histogram(media: DataFrame, bins: int = 16) -> DataFrame:
+def bmp_channel_histogram(media: DataFrame) -> DataFrame:
     """Decode→analyze on the real BMP path: per-image per-channel
     16-bin value histograms (bin = value div 16), Arrow-batched and
     fully vectorized (one ``np.bincount`` per channel per image —
     no per-pixel Python). Emits only non-empty bins, so the output
-    is ≤ images × bins rows regardless of resolution; the global
+    is ≤ images × 16 rows regardless of resolution; the global
     rollup is a downstream groupBy. Same header validation as
     ``decode_bmp`` (multimodal.py:327) — malformed input raises."""
     import struct
-
-    width = 256 // bins
 
     def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -478,7 +476,7 @@ def bmp_channel_histogram(media: DataFrame, bins: int = 16) -> DataFrame:
                 img = buf.reshape(abs(h), w, 3)
                 hists = [
                     np.bincount(
-                        (img[:, :, ch].ravel() // width), minlength=bins
+                        (img[:, :, ch].ravel() // 16), minlength=16
                     )
                     for ch in (2, 1, 0)  # R, G, B
                 ]

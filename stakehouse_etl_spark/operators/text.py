@@ -152,8 +152,8 @@ def distinct_token_count(text: Column) -> Column:
     return F.size(F.array_distinct(tokens(text)))
 
 
-def stopword_count(text: Column, stopwords: tuple[str, ...] = STOPWORDS_EN) -> Column:
-    words = list(stopwords)
+def stopword_count(text: Column) -> Column:
+    words = list(STOPWORDS_EN)
     return F.size(F.filter(tokens(text), lambda t: t.isin(words)))
 
 

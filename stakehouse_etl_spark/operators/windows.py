@@ -188,28 +188,24 @@ def cumulative_income(
     return out
 
 
-def gap_flags(
-    df: DataFrame, key: str = "bls_key", time: str = "epoch", step: int = 1
-) -> DataFrame:
-    """W2 standalone: flag rows whose predecessor is more than ``step``
+def gap_flags(df: DataFrame, key: str = "bls_key", time: str = "epoch") -> DataFrame:
+    """W2 standalone: flag rows whose predecessor is more than one epoch
     behind, and the first gap position per key.
 
     Reference: ``src/validator_income_handler.py:109-111`` raises
     "Backfiller Needed" and abandons the key for the run.
     """
     w = _w(key, time)
-    gap = (F.col(time) - F.lag(time).over(w)) > step
+    gap = (F.col(time) - F.lag(time).over(w)) > 1
     return df.withColumn("is_gap", F.coalesce(gap, F.lit(False))).withColumn(
         "first_gap_at",
         F.min(F.when(gap, F.col(time))).over(Window.partitionBy(key)),
     )
 
 
-def truncate_at_gap(
-    df: DataFrame, key: str = "bls_key", time: str = "epoch", step: int = 1
-) -> DataFrame:
+def truncate_at_gap(df: DataFrame, key: str = "bls_key", time: str = "epoch") -> DataFrame:
     """W2: drop rows at/after the first sequence gap of each key."""
-    flagged = gap_flags(df, key, time, step)
+    flagged = gap_flags(df, key, time)
     return (
         flagged.filter(
             F.col("first_gap_at").isNull() | (F.col(time) < F.col("first_gap_at"))
@@ -251,15 +247,16 @@ def spike_filter(
     return df.withColumn("__spike", is_spike).filter(~F.col("__spike")).drop("__spike")
 
 
-def top_k(df: DataFrame, order_col: str | Column, k: int = 7, ascending: bool = False) -> DataFrame:
-    """W4: global top-k (leaderboards, ``src/api_handler.py:304-310``).
+def top_k(df: DataFrame, order_col: str | Column, k: int = 7) -> DataFrame:
+    """W4: global top-k, largest first (leaderboards,
+    ``src/api_handler.py:304-310``).
 
     ``orderBy().limit(k)`` — Spark plans this as TakeOrderedAndProject:
     each task keeps a k-row heap, only k·partitions rows reach the
     driver. No full sort at any scale.
     """
     col = F.col(order_col) if isinstance(order_col, str) else order_col
-    return df.orderBy(col.asc() if ascending else col.desc()).limit(k)
+    return df.orderBy(col.desc()).limit(k)
 
 
 def top_k_per_group(
@@ -321,13 +318,16 @@ def trailing_delta(
     )
 
 
+_CUMSUM_CHUNKS = 32
+
+
 def skew_resistant_cumsum(
     df: DataFrame,
     key: str,
     time: str,
     value: str,
     out: str = "cum_value",
-    n_chunks: int = 32,
+    n_chunks: int = _CUMSUM_CHUNKS,
 ) -> DataFrame:
     """Running total per key that survives a HOT KEY (one key holding a
     large share of all rows).
@@ -427,21 +427,17 @@ def adaptive_cumsum(
     time: str,
     value: str,
     out: str = "cum_value",
-    n_chunks: int = 32,
-    hot_share: float | None = None,
-    sample_fraction: float = 0.01,
-    seed: int = 42,
 ) -> DataFrame:
     """ONE entry point for per-key running totals: picks the plain
     single-window plan or :func:`skew_resistant_cumsum` from a cheap
     sampled key histogram (VERDICT r2 task 5 — callers should not have
     to know their key distribution up front).
 
-    Dispatch rule: sample ``sample_fraction`` of the key column
-    (seeded — deterministic dispatch), count rows per key, and if the
-    hottest key's share exceeds ``hot_share`` (default ``1/n_chunks``,
-    the point where one window partition would dominate a single task)
-    route to the chunked decomposition; otherwise the plain window
+    Dispatch rule: sample 1% of the key column (seeded — deterministic
+    dispatch), count rows per key, and if the hottest key's share
+    exceeds ``1/n_chunks`` of :func:`skew_resistant_cumsum` (the point
+    where one window partition would dominate a single task) route to
+    the chunked decomposition; otherwise the plain window
     (one shuffle, no extra agg/join) wins. The probe is one tiny
     two-scalar aggregate job over the sampled key column only —
     O(sample) work, a bounded 1-row collect, the same cost class as
@@ -457,9 +453,6 @@ def adaptive_cumsum(
     the tie in ANY implementation (plain or chunked), so callers break
     ties in the time tuple (the catalog convention).
     """
-    if hot_share is None:
-        hot_share = 1.0 / n_chunks
-
     def _histogram(keys_df):
         return (
             keys_df.groupBy(key)
@@ -468,7 +461,7 @@ def adaptive_cumsum(
             .first()
         )
 
-    probe = _histogram(df.select(key).sample(fraction=sample_fraction, seed=seed))
+    probe = _histogram(df.select(key).sample(fraction=0.01, seed=42))
     if probe is None or probe["tot"] is None or probe["tot"] < 5_000:
         # Sample too small for the share estimate to clear sampling
         # noise at a 1/n_chunks threshold — the input is small enough
@@ -480,12 +473,10 @@ def adaptive_cumsum(
         probe is not None
         and probe["tot"] is not None
         and probe["tot"] > 0
-        and probe["mx"] / probe["tot"] > hot_share
+        and probe["mx"] / probe["tot"] > 1.0 / _CUMSUM_CHUNKS
     )
     if hot:
-        return skew_resistant_cumsum(
-            df, key=key, time=time, value=value, out=out, n_chunks=n_chunks
-        )
+        return skew_resistant_cumsum(df, key=key, time=time, value=value, out=out)
     w = Window.partitionBy(key).orderBy(time).rowsBetween(
         Window.unboundedPreceding, 0
     )

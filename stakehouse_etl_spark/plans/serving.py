@@ -197,8 +197,9 @@ def index_redemption_rate(
     topups: DataFrame | None = None,
 ) -> DataFrame:
     """Redemption rate of an index:
-    ((24e9·n) + dETH) / ((8e9·n) − slashing + topups), banded.
-    ``slashing``/``topups``: optional (bls_key, amount) dims."""
+    ((24e9·n) + dETH) / ((8e9·n) − max(0, slashing − topups)), banded
+    (``src/api_handler.py:480``). ``slashing``/``topups``: optional
+    (bls_key, amount) dims."""
     latest_member = latest_per_key(membership, key="bls_key", order_col="epoch")
     members = latest_member.filter(F.col("indexes") == index).select("bls_key")
     latest_income = latest_per_key(income, key="bls_key", order_col="epoch").join(

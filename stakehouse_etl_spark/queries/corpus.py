@@ -11,7 +11,7 @@ DuckDB CTE chain, recursive closure included.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table

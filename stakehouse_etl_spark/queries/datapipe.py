@@ -237,7 +237,7 @@ sig AS (
 )"""
 
 
-def _minhash_bands_sql(max_bucket: int = LSH_MAX_BUCKET) -> str:
+def _minhash_bands_sql() -> str:
     """``bands`` CTE with the same over-cap bucket drop the Spark
     operator applies (QUALIFY on the band-group count)."""
     selects = []
@@ -254,12 +254,12 @@ def _minhash_bands_sql(max_bucket: int = LSH_MAX_BUCKET) -> str:
         + f"""),
 bands AS (
   SELECT * FROM bands0
-  QUALIFY count(*) OVER (PARTITION BY band_idx, band_key) <= {max_bucket}
+  QUALIFY count(*) OVER (PARTITION BY band_idx, band_key) <= {LSH_MAX_BUCKET}
 )"""
     )
 
 
-def _lsh_jaccard_cte(max_bucket: int = LSH_MAX_BUCKET) -> str:
+def _lsh_jaccard_cte() -> str:
     """Drop-in replacement for ``_JACCARD_CTE`` (same ``i``/``j``
     output shape) whose intersection join is restricted to capped
     MinHash-LSH band candidates — the scale-safe near-dup tier the
@@ -269,7 +269,7 @@ def _lsh_jaccard_cte(max_bucket: int = LSH_MAX_BUCKET) -> str:
     tier='lsh': identical signatures, identical QUALIFY bucket cap,
     candidates-only intersection."""
     return f"""{_minhash_sig_sql()},
-{_minhash_bands_sql(max_bucket)},
+{_minhash_bands_sql()},
 cand AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b
   FROM bands a JOIN bands b USING (band_idx, band_key)
@@ -704,14 +704,12 @@ UNION ALL SELECT doc_id, 3 FROM k3
 """
 
 
-def _dedup_compact_every(default: int = 8) -> int:
+def _dedup_compact_every() -> int:
     """Compaction cadence (batches) for the plain stored-index arm;
     0 disables."""
     import os
 
-    return int(
-        os.environ.get("SPARK_GRAFT_DEDUP_COMPACT_EVERY", str(default))
-    )
+    return int(os.environ.get("SPARK_GRAFT_DEDUP_COMPACT_EVERY", "8"))
 
 
 def _compact_maybe_fail(point: str, bno_cur: int) -> None:

@@ -353,10 +353,7 @@ def s1_datasource_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from stakehouse_etl_spark.io.datasource import BeaconBalancesDataSource
 
-    try:
-        spark.dataSource.register(BeaconBalancesDataSource)
-    except Exception:
-        pass  # already registered in this session
+    spark.dataSource.register(BeaconBalancesDataSource)
     return (
         spark.read.format("beacon_balances")
         .option("lo", 100)
@@ -571,10 +568,7 @@ def s1_datasource_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from stakehouse_etl_spark.io.datasource import BeaconBalancesStreamSource
 
-    try:
-        spark.dataSource.register(BeaconBalancesStreamSource)
-    except Exception:
-        pass
+    spark.dataSource.register(BeaconBalancesStreamSource)
     stream = (
         spark.readStream.format("beacon_balances_stream")
         .option("lo", 100)
@@ -620,10 +614,7 @@ def k6_datasource_writer_roundtrip_q(
         read_jsonl_committed,
     )
 
-    try:
-        spark.dataSource.register(JsonLinesDataSource)
-    except Exception:
-        pass
+    spark.dataSource.register(JsonLinesDataSource)
     agg = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -679,10 +670,7 @@ def stream_datasource_e2e_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     for ds in (BeaconBalancesStreamSource, JsonLinesDataSource):
-        try:
-            spark.dataSource.register(ds)
-        except Exception:
-            pass
+        spark.dataSource.register(ds)
     with tempfile.TemporaryDirectory(
         prefix="ds_e2e_", ignore_cleanup_errors=True
     ) as workdir:

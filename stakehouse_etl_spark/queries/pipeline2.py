@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table
-from stakehouse_etl_spark.operators.similarity import int_dot, quantize
+from stakehouse_etl_spark.operators.similarity import quantize
 from stakehouse_etl_spark.operators.text import (
     fan_out,
     hash32,

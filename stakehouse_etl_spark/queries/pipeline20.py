@@ -22,10 +22,6 @@ from stakehouse_etl_spark.operators.similarity import (
 )
 from stakehouse_etl_spark.operators.text import fan_out, hash64, tokens
 from stakehouse_etl_spark.queries.datapipe import _QUANT_EMB, _TOKS
-from stakehouse_etl_spark.queries.pipeline2 import (
-    _KM_ASSIGN_CTE,
-    _kmeans_assign_df,
-)
 from stakehouse_etl_spark.queries.registry import register
 
 _HASH64 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
@@ -100,17 +96,6 @@ def _scaled_assign(emb: DataFrame, n: int, k: int) -> DataFrame:
       corpus scales beyond one BLAS call the assignment graduates to
       the hierarchical/IVF path (operators/similarity.py).
     """
-    import os
-
-    try:
-        thresh = int(
-            os.environ.get(
-                "SPARK_GRAFT_SEM_ARROW_CELLS", str(_SEM_ASSIGN_ARROW_CELLS)
-            )
-        )
-    except ValueError:
-        # Fail-safe (ADVICE r6): malformed override → calibrated default.
-        thresh = _SEM_ASSIGN_ARROW_CELLS
     cents = emb.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"), F.col("q").alias("cq")
     )
@@ -127,7 +112,7 @@ def _scaled_assign(emb: DataFrame, n: int, k: int) -> DataFrame:
     # here would silently miscalibrate the cap if the table's dim
     # changed).
     arrow_ok = (k * EMB_DIM) <= _SEM_CENTROID_CELL_CAP
-    if n * k >= thresh and arrow_ok:
+    if n * k >= _SEM_ASSIGN_ARROW_CELLS and arrow_ok:
         import numpy as np
 
         c_rows = sorted(cents.collect(), key=lambda r: r["centroid_id"])

@@ -16,7 +16,6 @@ remain the deployment swap for compressed formats).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.operators.multimodal import (

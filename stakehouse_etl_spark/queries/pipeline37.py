@@ -12,11 +12,15 @@ joins, keyword extraction.
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table, register_views
 from stakehouse_etl_spark.queries.registry import register
+from stakehouse_etl_spark.session import apply_engine_conf
 
 # ---------------------------------------------------------------------------
 # Portable texts (identical string runs on both engines)
@@ -75,6 +79,12 @@ def _mk37(sql: str):
     return run
 
 
+_CHILD_SESSIONS: weakref.WeakKeyDictionary[SparkSession, SparkSession] = (
+    weakref.WeakKeyDictionary()
+)
+_CHILD_LOCK = threading.Lock()
+
+
 def _run_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sql_portable_recursive with query-scoped single-partition shuffles.
 
@@ -93,15 +103,19 @@ def _run_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured worse — numbers in OPTIMIZATION_r12.md). The conf is
     scoped to a child session (same SparkContext, nothing leaks to the
     caller); engine-critical confs are re-pinned via apply_engine_conf
-    because a new session inherits only builder-time conf.
+    because a new session inherits only builder-time conf. Each parent
+    session gets one child, reused by every call, so repeated runs do
+    not pile up sessions and their temp views. The lock keeps one
+    call's view registration from racing another's ``sql``.
     """
-    from stakehouse_etl_spark.session import apply_engine_conf
-
-    scoped = spark.newSession()
-    apply_engine_conf(scoped)
-    scoped.conf.set("spark.sql.shuffle.partitions", "1")
-    register_views(scoped, sf_dir)
-    return scoped.sql(_PORTABLE37["sql_portable_recursive"])
+    with _CHILD_LOCK:
+        scoped = _CHILD_SESSIONS.get(spark)
+        if scoped is None:
+            scoped = apply_engine_conf(spark.newSession())
+            scoped.conf.set("spark.sql.shuffle.partitions", "1")
+            _CHILD_SESSIONS[spark] = scoped
+        register_views(scoped, sf_dir)
+        return scoped.sql(_PORTABLE37["sql_portable_recursive"])
 
 
 for _name, _sql in _PORTABLE37.items():

@@ -10,7 +10,7 @@ experimentation statistics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stakehouse_etl_spark.io.sources import load_table

@@ -40,7 +40,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from stakehouse_etl_spark.caches import persist_tracked
 from stakehouse_etl_spark.io.sources import load_table
 from stakehouse_etl_spark.queries.pipeline73 import (
     _GRAMS_CTE,
@@ -369,13 +368,11 @@ def stream_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(out.collect(), out.schema)
 
 
-def _compact_every(default: int = 8) -> int:
+def _compact_every() -> int:
     """Compaction cadence for the bucketed gram index (batches)."""
     import os
 
-    return int(
-        os.environ.get("SPARK_GRAFT_SPAN_COMPACT_EVERY", str(default))
-    )
+    return int(os.environ.get("SPARK_GRAFT_SPAN_COMPACT_EVERY", "8"))
 
 
 def _compact_gram_index(s, tbl: str, bno0: int, workdir: str) -> None:

@@ -94,7 +94,6 @@ def run_soak_cycles(
     balances: DataFrame,
     warehouse: str,
     n_cycles: int = N_CYCLES,
-    epochs_per_bucket: int = EPOCHS_PER_BUCKET,
     cycle_hook=None,
 ) -> DataFrame:
     """The soak loop; returns the final (indexes, epoch) rollup read
@@ -112,7 +111,7 @@ def run_soak_cycles(
         raise ValueError(
             "run_soak_cycles: empty balance input — nothing to soak"
         )
-    n_buckets_total = hi // epochs_per_bucket - lo // epochs_per_bucket + 1
+    n_buckets_total = hi // EPOCHS_PER_BUCKET - lo // EPOCHS_PER_BUCKET + 1
     span = max((hi - lo) // n_cycles, 1)
     cuts = [lo + span * (i + 1) for i in range(n_cycles - 1)] + [hi]
 
@@ -123,7 +122,7 @@ def run_soak_cycles(
             state_path=state_path,
             income_path=income_path,
             money_scale=100,
-            epochs_per_bucket=epochs_per_bucket,
+            epochs_per_bucket=EPOCHS_PER_BUCKET,
         )
         census = _file_census(income_path)
         if len(census) > n_buckets_total:

@@ -12,6 +12,37 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Confs that oracle parity depends on; all are runtime-settable, so
+# apply_engine_conf pins them on a session this engine did not build.
+_RUNTIME_CONF = {
+    # Spark timestamps are session-TZ, DuckDB's are UTC-naive.
+    "spark.sql.session.timeZone": "UTC",
+    # Parquet timestamps without isAdjustedToUTC must still read as
+    # TIMESTAMP (LTZ, UTC session) — NTZ breaks unix_micros()/window()
+    # parity with the DuckDB oracle's naive-UTC timestamps.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Parquet TIMESTAMP(NANOS) columns read as longs;
+    # io.sources.load_table converts ``events.ts`` exactly.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.adaptive.enabled": "true",
+    # r12 (guide §2.2 — fewer, larger reduce partitions): size
+    # post-shuffle partitions by bytes (advisoryPartitionSizeInBytes)
+    # instead of pinning them to the default parallelism. The
+    # default (true) keeps every tiny post-shuffle stage at ~core
+    # count tasks, so iteration-heavy paths (incremental sinks,
+    # multi-cycle warehouse loops) paid 32-task scheduling on
+    # KB-sized stages. Size-based coalescing is scale-adaptive by
+    # definition: big shuffles still split at the advisory size,
+    # tiny ones collapse. Interleaved same-session A/B at sf0.1
+    # (3 rounds, medians): t2_bounded_catchup 0.92x, stream_cdc
+    # 0.93x, j3 0.88x, ts_sessionize 0.89x, pipeline_corpus_clean
+    # 0.95x, w1_skew_hotkey 0.95x; worst case dedup_span_inventory
+    # 1.05x (noise band). CPU-heavy map tiers are unaffected: they
+    # run behind explicit fan_out/repartition(n) exchanges, which
+    # AQE never coalesces.
+    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "false",
+}
+
 
 def get_spark(
     app_name: str = "stakehouse-etl-spark",
@@ -30,33 +61,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # r12 (guide §2.2 — fewer, larger reduce partitions): size
-        # post-shuffle partitions by bytes (advisoryPartitionSizeInBytes)
-        # instead of pinning them to the default parallelism. The
-        # default (true) keeps every tiny post-shuffle stage at ~core
-        # count tasks, so iteration-heavy paths (incremental sinks,
-        # multi-cycle warehouse loops) paid 32-task scheduling on
-        # KB-sized stages. Size-based coalescing is scale-adaptive by
-        # definition: big shuffles still split at the advisory size,
-        # tiny ones collapse. Interleaved same-session A/B at sf0.1
-        # (3 rounds, medians): t2_bounded_catchup 0.92x, stream_cdc
-        # 0.93x, j3 0.88x, ts_sessionize 0.89x, pipeline_corpus_clean
-        # 0.95x, w1_skew_hotkey 0.95x; worst case dedup_span_inventory
-        # 1.05x (noise band). CPU-heavy map tiers are unaffected: they
-        # run behind explicit fan_out/repartition(n) exchanges, which
-        # AQE never coalesces.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            "false",
-        )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # Parquet timestamps without isAdjustedToUTC must still read as
-        # TIMESTAMP (LTZ, UTC session) — NTZ breaks unix_micros()/window()
-        # parity with the DuckDB oracle's naive-UTC timestamps.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Broadcast joins for dimension tables up to 64 MB; at 100 TB the
         # fact side never broadcasts but dims (region/nation/index maps) do.
@@ -72,34 +78,15 @@ def get_spark(
         .config("spark.rdd.compress", "true")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**_RUNTIME_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply engine-critical runtime confs to an externally-created session.
-
-    The driver harness owns its own SparkSession; the only conf we must
-    pin for oracle parity is the session timezone (Spark timestamps are
-    session-TZ, DuckDB's are UTC-naive).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass  # conf may not exist on older Spark; LTZ is then the default
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    except Exception:
-        pass  # may be fixed at session start on some deployments
-    try:
-        # Same size-based post-shuffle coalescing as get_spark (r12);
-        # runtime-settable, purely physical.
-        spark.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            "false",
-        )
-    except Exception:
-        pass
+    """Pin the engine's runtime confs (``_RUNTIME_CONF``) on a session
+    this engine did not build: the driver harness's own session, or a
+    ``newSession()`` child, which starts from builder-time conf only."""
+    for k, v in _RUNTIME_CONF.items():
+        spark.conf.set(k, v)
     return spark

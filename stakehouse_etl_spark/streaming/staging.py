@@ -36,9 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
-def stream_batch_count(default: int = 3) -> int:
+def stream_batch_count() -> int:
     """The micro-batch count for the staged file source."""
-    return int(os.environ.get("SPARK_GRAFT_STREAM_BATCHES", str(default)))
+    return int(os.environ.get("SPARK_GRAFT_STREAM_BATCHES", "3"))
 
 
 def land_batch(df: DataFrame, src: str, i: int) -> None:
@@ -94,10 +94,10 @@ def stage_id_range_batches(
     df: DataFrame,
     workdir: str,
     id_col: str = "doc_id",
-    n_batches: int | None = None,
 ) -> str:
-    """Land ``df`` as ``n_batches`` mtime-ordered single-file parquet
-    chunks under ``workdir/src`` and return that source directory.
+    """Land ``df`` as :func:`stream_batch_count` mtime-ordered
+    single-file parquet chunks under ``workdir/src`` and return that
+    source directory.
 
     Chunk ``i`` holds the rows whose ``id_col`` falls in the i-th
     id-range tercile (half-open ``(lo, hi]`` cuts at ``mx * i // n``),
@@ -106,10 +106,10 @@ def stage_id_range_batches(
     ``maxFilesPerTrigger=1`` + latestFirst=false default replays them
     as batches 0..n-1 in order.
     """
-    n_b = n_batches if n_batches is not None else stream_batch_count()
+    n_b = stream_batch_count()
     if n_b < 1:
         raise ValueError(
-            f"stage_id_range_batches: n_batches must be >= 1, got {n_b} "
+            f"stage_id_range_batches: the batch count must be >= 1, got {n_b} "
             f"(check SPARK_GRAFT_STREAM_BATCHES)"
         )
     mx = df.agg(F.max(id_col)).collect()[0][0]

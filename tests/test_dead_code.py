@@ -1,4 +1,5 @@
-"""Guard: no module nothing imports, no public name nothing uses.
+"""Guard: no module nothing imports, no public name nothing uses, no
+option nothing sets.
 
 Spark-free static scan of the repository's ``.py`` and ``.sh`` files:
 
@@ -12,7 +13,11 @@ Spark-free static scan of the repository's ``.py`` and ``.sh`` files:
   a package ``__init__.py`` does not — a re-export alone is no use);
 - every public top-level constant (``Assign`` / ``AnnAssign`` target)
   in those packages is read somewhere: a loaded name or an attribute.
-  Its own assignment target, an import and a string do not count.
+  Its own assignment target, an import and a string do not count;
+- every parameter with a non-string default of a package function that
+  some call names is passed by some call, and every ``SPARK_GRAFT_*``
+  variable the package reads is named outside the package;
+- every top-level import of a package module is read by that module.
 
 A reference is a Python identifier or attribute, an imported name, or
 a string constant equal to the name (``getattr`` / patch lookups and
@@ -164,3 +169,125 @@ def test_every_public_top_level_constant_is_read():
                         ):
                             unread.append(f"{path.relative_to(ROOT)}:{name.id}")
     assert unread == [], "read nowhere:\n" + "\n".join(unread)
+
+
+def _is_str_default(node: ast.expr) -> bool:
+    return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+
+def _options(fn: ast.FunctionDef | ast.AsyncFunctionDef, method: bool):
+    """(name, positional index or None) of every parameter of ``fn``
+    whose default is not a string. A method's index counts from the
+    first argument after ``self``/``cls``."""
+    a = fn.args
+    positional = a.posonlyargs + a.args
+    static = any(
+        isinstance(d, ast.Name) and d.id == "staticmethod" for d in fn.decorator_list
+    )
+    skip = 1 if method and not static and positional else 0
+    out = []
+    for i, (arg, default) in enumerate(
+        zip(positional[len(positional) - len(a.defaults):], a.defaults),
+        start=len(positional) - len(a.defaults),
+    ):
+        if not _is_str_default(default):
+            out.append((arg.arg, i - skip))
+    for arg, default in zip(a.kwonlyargs, a.kw_defaults):
+        if default is not None and not _is_str_default(default):
+            out.append((arg.arg, None))
+    return out
+
+
+@functools.cache
+def _calls() -> dict[str, list[ast.Call]]:
+    """Every call in the repository's Python, keyed by the called name
+    (``f(...)`` and ``x.f(...)`` both key ``f``)."""
+    out: dict[str, list[ast.Call]] = {}
+    for path in _repo_files(".py"):
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name:
+                    out.setdefault(name, []).append(node)
+    return out
+
+
+def _passes(call: ast.Call, name: str, index: int | None) -> bool:
+    if any(isinstance(a, ast.Starred) for a in call.args):
+        return True
+    if any(k.arg is None or k.arg == name for k in call.keywords):
+        return True
+    return index is not None and index < len(call.args)
+
+
+def test_every_option_is_set_somewhere():
+    """A parameter with a non-string default is an option: some call
+    in the repository must pass it, or it is a constant. A function no
+    call names directly (a catalog entry, a callback) is not checked.
+    Every ``SPARK_GRAFT_*`` variable the package reads must be named in
+    a ``.py`` or ``.sh`` file outside the package."""
+    unset = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        methods = {
+            id(fn)
+            for cls in ast.walk(tree)
+            if isinstance(cls, ast.ClassDef)
+            for fn in cls.body
+        }
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            calls = _calls().get(fn.name, [])
+            if not calls:
+                continue
+            for name, index in _options(fn, id(fn) in methods):
+                if not any(_passes(c, name, index) for c in calls):
+                    unset.append(f"{path.relative_to(ROOT)}:{fn.name}({name})")
+
+    outside = set()
+    for path in _repo_files(".py") + _repo_files(".sh"):
+        if PKG not in path.parents:
+            outside |= set(re.findall(r"SPARK_GRAFT_\w+", path.read_text()))
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and re.fullmatch(r"SPARK_GRAFT_\w+", node.value)
+                and node.value not in outside
+            ):
+                unset.append(f"{path.relative_to(ROOT)}:{node.value}")
+    assert unset == [], "set by nothing:\n" + "\n".join(unset)
+
+
+def test_every_module_import_is_read():
+    """A top-level import in a package module is read by that module: a
+    loaded name (the base of an attribute chain is one) or an
+    ``__all__`` entry. ``__init__.py`` re-exports and ``from
+    __future__`` are exempt."""
+    unread = []
+    for path in sorted(PKG.rglob("*.py")):
+        if path.name == "__init__.py":
+            continue
+        tree = ast.parse(path.read_text())
+        loaded = {
+            n.id
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+        }
+        for node in tree.body:
+            if isinstance(node, ast.Assign) and any(
+                isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
+            ):
+                loaded |= set(ast.literal_eval(node.value))
+        for node in tree.body:
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    if bound not in loaded:
+                        unread.append(f"{path.relative_to(ROOT)}:{bound}")
+    assert unread == [], "imported, never read:\n" + "\n".join(unread)

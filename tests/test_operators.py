@@ -95,6 +95,22 @@ def test_cumulative_income_seeded_resume_equals_full(spark):
     assert got == want
 
 
+def test_cumulative_income_bootstrap_from_activation_epoch(spark):
+    """W1 bootstrap (src/validator_income_handler.py:141): a new key's
+    ``epochs_since_active`` starts at ``first_epoch − activation_epoch``;
+    a key with no activation row starts at 0."""
+    bal = spark.createDataFrame(
+        [("a", 10, 32.0), ("a", 11, 32.5), ("a", 12, 32.25),
+         ("b", 3, 32.0), ("b", 4, 31.75)],
+        "bls_key string, epoch long, balance double",
+    )
+    act = spark.createDataFrame([("a", 4)], "bls_key string, activation_epoch long")
+    out = cumulative_income(bal, activation_epochs=act, compute_apr=False)
+    assert rows(out, "bls_key", "epoch", "epochs_since_active") == [
+        ("a", 10, 6.0), ("a", 11, 7.0), ("a", 12, 8.0), ("b", 3, 0.0), ("b", 4, 1.0),
+    ]
+
+
 def test_truncate_at_gap(spark):
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), ("a", 4), ("a", 5), ("b", 7), ("b", 8)],

@@ -33,6 +33,16 @@ def test_semantic_prune_keeps_cluster_minimum(spark, sf_dir):
         assert lowest["kept"] is True
 
 
+def test_semantic_prune_arrow_arm_equals_expression_arm(spark, sf_dir, monkeypatch):
+    """The Arrow matmul assignment arm only dispatches at n·k ≥ 5M;
+    forced on at sf0.001, it gives the expression arm's rows."""
+    from stakehouse_etl_spark.queries import pipeline20
+
+    want = sorted(dedup_semantic_prune_q(spark, sf_dir).collect())
+    monkeypatch.setattr(pipeline20, "_SEM_ASSIGN_ARROW_CELLS", 1)
+    assert sorted(dedup_semantic_prune_q(spark, sf_dir).collect()) == want
+
+
 def test_bm25_scores_rank_monotone(spark, sf_dir):
     rows = text_bm25_topk_q(spark, sf_dir).collect()
     assert len(rows) == 10

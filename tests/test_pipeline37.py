@@ -30,6 +30,16 @@ def test_recursive_cum_equals_window(spark):
     assert [r["q"] for r in out] == sorted(r["q"] for r in out)
 
 
+def test_recursive_reuses_one_child_session(spark):
+    from stakehouse_etl_spark.queries.catalog import QUERIES
+
+    fn = QUERIES["sql_portable_recursive"].fn
+    a, b = fn(spark, SF), fn(spark, SF)
+    assert a.sparkSession is b.sparkSession
+    assert a.sparkSession is not spark
+    assert a.sparkSession.conf.get("spark.sql.shuffle.partitions") == "1"
+
+
 def test_not_in_null_semantics(spark):
     from stakehouse_etl_spark.queries.catalog import QUERIES
 

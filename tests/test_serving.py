@@ -142,6 +142,25 @@ def test_index_redemption_rate(spark, tables):
     assert out.band == "Red"
 
 
+def test_index_redemption_rate_slashing_and_topups(spark, tables):
+    """F6 with the slashing/top-up dims: the denominator is
+    ``8e9·n − max(0, slashing − topups)`` over the index's members
+    (src/api_handler.py:480,498-502)."""
+    income, membership = tables[0], tables[1]
+    slashing = spark.createDataFrame(
+        [("a", 0.1e9), ("b", 0.5e9), ("c", 4.0e9)], "bls_key string, amount double"
+    )
+    topups = spark.createDataFrame(
+        [("a", 0.3e9), ("b", 0.2e9)], "bls_key string, amount double"
+    )
+    # index 10 = {b}: deth 1.5e9, slashing 0.5e9 − topups 0.2e9 = 0.3e9
+    out = serving.index_redemption_rate(membership, income, 10, slashing, topups)
+    assert out.collect()[0].redemption_rate == pytest.approx(25.5e9 / 7.7e9)
+    # index 20 = {a}: topups exceed slashing, so nothing is subtracted
+    out = serving.index_redemption_rate(membership, income, 20, slashing, topups)
+    assert out.collect()[0].redemption_rate == pytest.approx(26.0e9 / 8e9)
+
+
 def test_index_names_merged(spark):
     solo = spark.createDataFrame(
         [(1, "solo-1"), (2, "solo-2"), (3, "solo-3")], "indexes long, name string"

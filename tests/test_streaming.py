@@ -167,6 +167,81 @@ def test_backfill_repairs_gap(spark, workdir):
     assert g == w and len(g) == 10
 
 
+def _wd_panel(spark):
+    """Two keys over epochs 1..9 (``b`` from 3) with withdrawals that
+    move the cumulative earnings."""
+    bal = spark.createDataFrame(
+        [("a", e, 32.0 + 0.25 * (e % 4)) for e in range(1, 10)]
+        + [("b", e, 31.5 + 0.5 * (e % 3)) for e in range(3, 10)],
+        "bls_key string, epoch long, balance double",
+    )
+    wd = spark.createDataFrame(
+        [("a", 2, 0.75), ("a", 5, 1.25), ("b", 4, 0.5), ("a", 8, 0.25), ("b", 9, 2.0)],
+        "bls_key string, epoch long, values_withdrawals double",
+    )
+    return bal, wd
+
+
+def _income_rows(df):
+    return {
+        (r["bls_key"], r["epoch"]): (r["earnings"], r["losses"], r["epochs_since_active"])
+        for r in df.collect()
+    }
+
+
+def test_incremental_with_withdrawals_equals_batch(spark, workdir):
+    """T1/T3: three incremental cuts plus a replay of the last, each
+    with the withdrawals known at that cut, give the batch result."""
+    bal, wd = _wd_panel(spark)
+    state_path = os.path.join(workdir, "state")
+    income_path = os.path.join(workdir, "income")
+    for cut in (3, 6, 9, 9):
+        incremental_income_run(
+            spark,
+            bal.filter(F.col("epoch") <= cut),
+            state_path,
+            income_path,
+            withdrawals=wd.filter(F.col("epoch") <= cut),
+            money_scale=100,
+        )
+    want = cumulative_income(bal, wd, stop_at_gap=True, money_scale=100)
+    got = _income_rows(spark.read.parquet(income_path))
+    assert got == _income_rows(want) and len(got) == 16
+
+
+def test_withdrawals_head_clamps_income_head(spark, workdir):
+    """T1 cross-feed clamp (src/validator_income_handler.py:179,201):
+    income never passes the slower of the balances and withdrawals
+    heads; the next run, with withdrawals caught up, completes it."""
+    bal, wd = _wd_panel(spark)
+    state_path = os.path.join(workdir, "state")
+    income_path = os.path.join(workdir, "income")
+    out = incremental_income_run(
+        spark, bal, state_path, income_path,
+        withdrawals=wd.filter(F.col("epoch") <= 5), money_scale=100,
+    )
+    assert out.agg(F.max("epoch")).collect()[0][0] == 5
+    assert spark.read.parquet(income_path).agg(F.max("epoch")).collect()[0][0] == 5
+    incremental_income_run(
+        spark, bal, state_path, income_path, withdrawals=wd, money_scale=100
+    )
+    want = cumulative_income(bal, wd, stop_at_gap=True, money_scale=100)
+    assert _income_rows(spark.read.parquet(income_path)) == _income_rows(want)
+
+
+def test_backfill_with_withdrawals_equals_batch(spark, workdir):
+    """T4 over [lo, hi] with withdrawals: the written rows are the batch
+    recompute's rows in that range."""
+    bal, wd = _wd_panel(spark)
+    income_path = os.path.join(workdir, "income")
+    backfill_income(spark, bal, income_path, 4, 7, withdrawals=wd, money_scale=100)
+    want = cumulative_income(
+        bal.filter(F.col("epoch") <= 7), wd, stop_at_gap=False, money_scale=100
+    ).filter(F.col("epoch") >= 4)
+    got = _income_rows(spark.read.parquet(income_path))
+    assert got == _income_rows(want) and len(got) == 8
+
+
 def test_streaming_watermark_drops_too_late_rows(spark, workdir):
     """T4 late-data contract: a row older than the watermark must not
     mutate a finalized window. Batch 2 advances the watermark to 01:30
