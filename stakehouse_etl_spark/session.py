@@ -85,8 +85,9 @@ def get_spark(
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Pin the engine's runtime confs (``_RUNTIME_CONF``) on a session
-    this engine did not build: the driver harness's own session, or a
-    ``newSession()`` child, which starts from builder-time conf only."""
+    this engine did not build: the session passed to
+    ``__spark_entry__``, or a ``newSession()`` child, which starts from
+    builder-time conf only."""
     for k, v in _RUNTIME_CONF.items():
         spark.conf.set(k, v)
     return spark
