@@ -49,30 +49,6 @@ HEADLINE = (
 
 REGRESSION_RATIO = 1.2
 
-# Watchlist (VERDICT r5 task #3, extended r7 per VERDICT r6 task #2):
-# queries whose medians drifted >15% across rounds in UNTOUCHED code
-# get a deeper sample — 10 runs instead of 3 — and the output carries
-# their full distribution so the round artifact itself settles
-# noise-vs-real instead of a judge re-deriving it. r7 adds the four
-# rows the r6 round flagged (all in the uniform ~1.2-1.3× whole-suite
-# shift attributed to host load); the q3/q5 pair stays for one more
-# round of history.
-# r9 adds sim_ivf_topk: the r9 quiet-host run put its 3-sample median
-# at 2.72 s vs the 1.1-1.7 s steady band (solo probe: 6.4 s cold then
-# 1.68/1.54/1.37/1.11) — the catalog reorder moved it away from a
-# plan-warming neighbor, so pass 1's cold-codegen sample dominates a
-# 3-sample median. 10 samples wash that out.
-WATCH = (
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "tpch_q4_order_priority",
-    "tpch_q18_large_orders",
-    "j11_range_join_bucketed",
-    "dedup_span_inventory",
-    "sim_ivf_topk",
-)
-WATCH_RUNS = 10
-
 
 def _prev_round_queries(sf: float | None) -> tuple[str | None, dict]:
     """Most recent BENCH_r*.json recorded at the SAME sf, or (None, {}).
@@ -124,19 +100,17 @@ def _prev_round_queries(sf: float | None) -> tuple[str | None, dict]:
 def bench_line(record: dict) -> str:
     """The printed JSON line for a full bench record.
 
-    The full record (incl. the watch distributions) lands in a repo
-    file; the PRINTED line must stay parseable under the caller's
-    bounded stdout capture (measured: last 2000 chars — r7's line,
-    bloated by the watch runs arrays, overflowed it and the round
-    recorded parsed=null). The line keeps the spec fields + the small
-    scalars and drops the watch detail. Past 1900 chars (a busy host
-    filling the regressions map) it falls back to the spec minimum:
-    the queries map is required by the line's contract, so it is
-    shrunk, not dropped — compact separators and 2-decimal timings keep
-    it ~31 bytes/query, inside the window for the bench-flagged set
-    (``tests/test_bench_line.py`` pins the worst case).
+    The full record lands in a repo file; the PRINTED line must stay
+    parseable under the caller's bounded stdout capture (measured: last
+    2000 chars — r7's line overflowed it and the round recorded
+    parsed=null). Past 1900 chars (a busy host filling the regressions
+    map) it falls back to the spec minimum: the queries map is required
+    by the line's contract, so it is shrunk, not dropped — compact
+    separators and 2-decimal timings keep it ~31 bytes/query, inside
+    the window for the bench-flagged set (``tests/test_bench_line.py``
+    pins the worst case).
     """
-    line = json.dumps({k: v for k, v in record.items() if k != "watch"})
+    line = json.dumps(record)
     if len(line) <= 1900:
         return line
     return json.dumps(
@@ -182,45 +156,16 @@ def run() -> None:
     measure.warm(spark, sf_dir)
 
     bench_names = [n for n, q in QUERIES.items() if q.bench]
-    watch = [w for w in WATCH if w in QUERIES]
-    samples: dict[str, list[float]] = {
-        n: [] for n in {*bench_names, *watch}
-    }
-
-    def time_one(name: str) -> None:
-        samples[name].append(measure.run(spark, name, sf_dir).wall_s)
+    samples: dict[str, list[float]] = {n: [] for n in bench_names}
 
     for r in range(runs):
         for name in bench_names:
-            time_one(name)
+            samples[name].append(measure.run(spark, name, sf_dir).wall_s)
         print(
             f"bench pass {r + 1}/{runs}: "
             f"{round(sum(samples[n][-1] for n in bench_names), 2)} s",
             file=sys.stderr,
         )
-    # Watched queries: top up to WATCH_RUNS total samples, genuinely
-    # interleaved ROUND-ROBIN across the watch list (ADVICE r6: a
-    # per-query back-to-back loop shares warm OS/page-cache state and
-    # biases the topped-up samples relative to the rotated first 3).
-    while any(len(samples[n]) < WATCH_RUNS for n in watch):
-        for name in watch:
-            if len(samples[name]) < WATCH_RUNS:
-                time_one(name)
-    watch_stats = {
-        name: {
-            "n": len(samples[name]),
-            "min": round(min(samples[name]), 3),
-            "max": round(max(samples[name]), 3),
-            "median": round(statistics.median(samples[name]), 3),
-            "mean": round(statistics.fmean(samples[name]), 3),
-            "stdev": round(statistics.stdev(samples[name]), 3)
-            if len(samples[name]) > 1
-            else 0.0,
-            "runs": [round(s, 3) for s in samples[name]],
-        }
-        for name in watch
-    }
-
     timings = {
         n: round(statistics.median(samples[n]), 3) for n in bench_names
     }
@@ -283,7 +228,6 @@ def run() -> None:
         "runs": runs,
         "prev_round": prev_file,
         "regressions": regressions,
-        "watch": watch_stats,
         "loadavg_start": load_start,
         "loadavg_end": load_end,
     }

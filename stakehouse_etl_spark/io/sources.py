@@ -51,42 +51,28 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     for near-unique-key aggregations, dispatch thresholds, guard
     bounds. At warehouse scale this is the catalog/metadata-service
     lookup every real engine does before planning; locally it is
-    pyarrow reading ``num_rows`` per footer."""
+    pyarrow reading ``num_rows`` per footer, the partitioned
+    (subdirectory) layout included.
+
+    0 when there is no footer to read (missing path, no ``.parquet``
+    file) or a read fails with an ``OSError``: the sizing decision then
+    takes its minimum instead of crashing the query, and the scan
+    itself reports the real error, or reads whatever layout Spark can
+    resolve."""
     import pyarrow.parquet as pq
 
     path = _table_path(sf_dir, name)
-    if os.path.isfile(path):
-        return pq.read_metadata(path).num_rows
-    # Recurse: the partitioned (time-bucket subdirectory) layout the
-    # module docstring promises must count too — a top-level-only scan
-    # silently returned 0 there, collapsing every footer-sized sizing
-    # decision to its minimum (ADVICE r8).
-    total = 0
-    n_footers = 0
-    for root, _dirs, files in os.walk(path):
-        for entry in sorted(files):
-            if entry.endswith(".parquet"):
-                total += pq.read_metadata(os.path.join(root, entry)).num_rows
-                n_footers += 1
-    if n_footers == 0:
-        raise FileNotFoundError(
-            f"table_num_rows: no parquet footers under {path!r} — "
-            f"refusing to report 0 rows for a sizing decision"
-        )
-    return total
-
-
-def table_num_rows_or(sf_dir: str, name: str, default: int) -> int:
-    """Sized-or-default form of :func:`table_num_rows` for PLANNING
-    decisions (partition counts, dispatch thresholds): a footerless or
-    missing layout degrades to ``default`` instead of crashing the
-    query — the actual scan will then surface the real error, or read
-    whatever layout Spark itself can resolve (ADVICE r9: pipeline41
-    called the raising form unguarded while pipeline3 fell back)."""
     try:
-        return table_num_rows(sf_dir, name)
-    except (FileNotFoundError, OSError):
-        return default
+        if os.path.isfile(path):
+            return pq.read_metadata(path).num_rows
+        return sum(
+            pq.read_metadata(os.path.join(root, entry)).num_rows
+            for root, _dirs, files in os.walk(path)
+            for entry in files
+            if entry.endswith(".parquet")
+        )
+    except OSError:
+        return 0
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -32,7 +32,6 @@ SESSION_GAP_US = 4 * 3600 * 1_000_000
 # ---------------------------------------------------------------------------
 @register(
     "ts_sessionize",
-    tags=("timeseries", "W1", "session"),
     bench=True,
     oracle=f"""
 WITH e AS (
@@ -92,7 +91,6 @@ def ts_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_gap_fill_interpolate",
-    tags=("timeseries", "T4", "U3"),
     oracle=f"""
 WITH b AS (
   SELECT user_id, epoch_us(ts) // {MICROS_PER_HOUR} AS epoch,
@@ -154,7 +152,6 @@ def ts_gap_fill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_tfidf_top_terms",
-    tags=("text", "tfidf"),
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, unnest({_TOKS}) AS term FROM documents
@@ -229,7 +226,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_cube_region_segment",
-    tags=("A7", "cube"),
     oracle="""
 SELECT r_name, c_mktsegment, CAST(count(*) AS BIGINT) AS n,
        CAST(sum(CAST(round(c_acctbal * 100) AS BIGINT)) AS BIGINT) / 100.0
@@ -266,7 +262,6 @@ def a_cube_region_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_percentile_kernel",
-    tags=("A4", "window", "percentile"),
     oracle="""
 WITH s AS (
   SELECT o_orderpriority AS priority,
@@ -352,7 +347,6 @@ def a_percentile_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_cc_clusters",
-    tags=("dedup", "graph", "iterative"),
     oracle=f"""
 WITH RECURSIVE {_SHINGLES_CTE}, {_lsh_jaccard_cte()},
 edges AS (
@@ -388,7 +382,6 @@ def dedup_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w_rank_kernel",
-    tags=("W4", "window", "rank"),
     oracle="""
 SELECT c_custkey, c_mktsegment,
        CAST(rank() OVER w AS BIGINT) AS rnk,
@@ -434,7 +427,6 @@ def w_rank_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_pivot_event_types",
-    tags=("A7", "pivot"),
     oracle="""
 SELECT user_id,
        CAST(coalesce(sum(CASE WHEN event_type = 'click'
@@ -480,7 +472,6 @@ def a_pivot_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_unpivot_metrics",
-    tags=("A7", "unpivot"),
     oracle="""
 SELECT o_orderkey, metric, val FROM (
   SELECT o_orderkey, 'totalprice' AS metric, o_totalprice AS val FROM orders
@@ -512,7 +503,6 @@ def a_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "arr_posexplode_stats",
-    tags=("array", "similarity"),
     oracle="""
 WITH x AS (
   SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -550,7 +540,6 @@ def arr_posexplode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_stats_kernel",
-    tags=("A4", "stats"),
     oracle="""
 WITH s AS (
   SELECT l_returnflag,
@@ -630,7 +619,6 @@ def a_stats_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_mode_kernel",
-    tags=("A6", "mode"),
     oracle="""
 WITH c AS (
   SELECT l_returnflag, CAST(round(l_quantity) AS BIGINT) AS q,
@@ -671,7 +659,6 @@ def a_mode_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_histogram_fixed_width",
-    tags=("A5", "histogram"),
     oracle="""
 WITH v AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v_c FROM orders

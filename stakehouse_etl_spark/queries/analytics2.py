@@ -41,7 +41,6 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_funnel_conversion",
-    tags=("timeseries", "funnel", "window"),
     bench=True,
     oracle="""
 WITH s AS (
@@ -139,7 +138,6 @@ def ts_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_cohort_retention",
-    tags=("timeseries", "cohort", "aggregate"),
     oracle=f"""
 WITH s AS (
   SELECT user_id, epoch_us(ts) // {WEEK_US} AS week FROM events
@@ -186,7 +184,6 @@ def ts_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_scd2_history",
-    tags=("timeseries", "scd2", "window"),
     oracle="""
 WITH s AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -250,7 +247,6 @@ def ts_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j11_range_join_bucketed",
-    tags=("join", "range", "bucketed"),
     bench=True,
     oracle=f"""
 WITH s AS (
@@ -326,7 +322,6 @@ MIX_BUDGET = 1_000_000  # target training tokens to apportion
 
 @register(
     "corpus_mix_allocation",
-    tags=("corpus", "mixing", "aggregate"),
     oracle=f"""
 WITH t AS (
   SELECT source, CAST(sum(len({_TOKS})) AS BIGINT) AS n_tok

@@ -48,7 +48,6 @@ deg AS (SELECT a, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1)
 
 @register(
     "graph_pagerank_2iter",
-    tags=("graph", "pagerank", "iterative"),
     oracle=f"""
 WITH {_PR_EDGES_CTE},
 r1 AS (
@@ -132,7 +131,6 @@ def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_rolling_1h_range",
-    tags=("timeseries", "window", "range-frame"),
     oracle=f"""
 WITH s AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -177,7 +175,6 @@ def ts_rolling_1h_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_group_ols_trend",
-    tags=("ml", "regression", "aggregate"),
     oracle="""
 WITH s AS (
   SELECT user_id, epoch_us(ts) AS ts_us, event_id,
@@ -255,7 +252,6 @@ def ml_group_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_vocab_overlap",
-    tags=("text", "jaccard", "diagnostics"),
     oracle=f"""
 WITH t AS (SELECT source, {_TOKS} AS toks FROM documents),
 v AS (SELECT DISTINCT source, unnest(toks) AS tok FROM t),
@@ -326,7 +322,6 @@ TREE_MAX_DEPTH = 30  # covers 2^30 nodes; ancestors beyond collapse to root 0
 
 @register(
     "graph_tree_rollup",
-    tags=("graph", "hierarchy", "rollup"),
     oracle=f"""
 WITH RECURSIVE t AS (
   SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents

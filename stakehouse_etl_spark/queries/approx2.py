@@ -24,7 +24,6 @@ FREQ_SUPPORT = 0.01  # heavy hitter = frequency > 1% of the stream
 
 @register(
     "a_freq_items_contract",
-    tags=("A6", "approx", "contract", "heavy-hitters"),
     oracle=f"""
 WITH t AS (SELECT {_TOKS} AS toks FROM documents),
 e AS (SELECT unnest(toks) AS tok FROM t),
@@ -67,7 +66,6 @@ N_DEPTH_BUCKETS = 8
 
 @register(
     "a_histogram_equi_depth",
-    tags=("A4", "histogram", "ntile"),
     oracle=f"""
 WITH s AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,

@@ -136,31 +136,21 @@ if len(QUERIES) < EXPECTED_MIN_QUERIES:
         f"{EXPECTED_MIN_QUERIES}"
     )
 
-# The grading driver samples the FIRST 50 queries() entries; this
-# prefix guarantees that sample covers every SURVEY §2 family (S/K/P/
-# J/A/W/O/U/F/T) and every beyond-§2 pipeline family (text, dedup
-# ladder, similarity, multimodal, corpus pipeline, connected
-# components, streaming).
+# The grading driver samples the FIRST 50 queries() entries. This
+# prefix fixes that sample; every other query follows in registration
+# order. The 50 together cover every SURVEY §2 family (S/K/P/J/A/W/O/
+# U/F/T) and every beyond-§2 pipeline family (text, dedup ladder,
+# similarity, multimodal, corpus pipeline, streaming). The list is
+# built in three parts, in this order:
 #
-# ROTATION (VERDICT r7 task #1, unchanged policy): a small standing
-# spine so the driver sample always covers the core §2 families, then
-# changed-code-first, then never-driver-checked. Round 10: 7 anchors
-# (unchanged from r9 — all driver-green across prior rounds) + 5
-# changed-code repeats (BOTH prefix-filter arms: the operator gained
-# the posting-mass tier dispatch, the sparse saturated path, and the
-# empty-candidate short-circuit; all THREE streaming index arms:
-# plain dedup gained periodic band/set-index compaction, the probed
-# bucketed dedup gained the counted over-cap broadcast guard, and the
-# bucketed span scrub was split into a crash-resumable core with
-# compaction disk reclaim) + 38 FIRST-TIME entries spread across the
-# portable-SQL / set-op / scalar / sink / join / window / aggregate /
-# time-series / ML / DQ / graph / corpus / dedup / streaming /
-# similarity / layout / multimodal / incremental families. Cumulative
-# external coverage target: >= 283/396 hashed (151 never-checked
-# remain before this round; ~2 more rounds close the catalog).
-# Queries rotated out stay under the local full-catalog gate
-# (tools/check.py, EXPECTED_MIN_QUERIES entries, same DuckDB
-# value-hash methodology).
+# 1. a standing spine of core anchors, kept from round to round;
+# 2. changed-code-first: queries whose code changed since the driver
+#    last hashed them;
+# 3. never-driver-checked queries, spread across families, until the
+#    driver has hashed the whole catalog.
+#
+# A query rotated out stays under the local full-catalog gate
+# (tools/check.py, same DuckDB value-hash methodology).
 DRIVER_PRIORITY = [
     # --- §2 spine (7 anchors, all driver-green r1–r10) ---
     "w1_user_income",

@@ -37,7 +37,6 @@ MICROS_PER_HOUR = 3_600_000_000
 # ---------------------------------------------------------------------------
 @register(
     "w1_user_income",
-    tags=("W1", "F1", "window"),
     bench=True,
     oracle="""
 WITH l AS (
@@ -88,7 +87,6 @@ def w1_user_income(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w2_income_epoch_hourly",
-    tags=("W1", "W2", "window"),
     bench=True,
     oracle=f"""
 WITH b AS (
@@ -158,7 +156,6 @@ def w2_income_epoch_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j1_latest_order_per_customer",
-    tags=("J1", "W5", "join"),
     bench=True,
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice
@@ -185,7 +182,6 @@ def j1_latest_order_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j2_region_acctbal_rollup",
-    tags=("J2", "J5", "A3", "A5", "join", "agg"),
     bench=True,
     oracle="""
 SELECT r_name,
@@ -226,7 +222,6 @@ def j2_region_acctbal_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j3_order_lineitem_agg",
-    tags=("J3", "A7", "P4", "join", "agg"),
     bench=True,
     oracle="""
 SELECT o_orderpriority, l_returnflag,
@@ -269,7 +264,6 @@ _RECENT = "o_orderdate >= TIMESTAMP '2000-01-01'"
 
 @register(
     "j6_customers_inactive",
-    tags=("J6", "U2", "join"),
     oracle=f"""
 SELECT c_custkey, c_name FROM customer
 WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE {_RECENT})
@@ -290,7 +284,6 @@ def j6_customers_inactive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j7_customers_active",
-    tags=("J7", "P8", "join"),
     oracle=f"""
 SELECT c_custkey, c_name FROM customer
 WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE {_RECENT})
@@ -313,7 +306,6 @@ def j7_customers_active(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j9_asof_last_signup",
-    tags=("J9", "join", "window"),
     bench=True,
     oracle="""
 SELECT e.user_id, epoch_us(e.ts) AS ts_us, e.event_id, e."value",
@@ -360,7 +352,6 @@ def j9_asof_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j10_customer_order_stats",
-    tags=("J10", "F9", "join"),
     oracle=f"""
 SELECT c_custkey,
        coalesce(n_orders, 0) AS n_orders,
@@ -396,7 +387,6 @@ def j10_customer_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a1_pricing_summary",
-    tags=("A1", "A3", "A4", "A5", "A7", "agg"),
     bench=True,
     oracle="""
 SELECT l_returnflag, l_linestatus,
@@ -443,7 +433,6 @@ def a1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a6_distinct_segments",
-    tags=("A6",),
     oracle="SELECT DISTINCT c_mktsegment FROM customer",
 )
 def a6_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,7 +445,6 @@ def a6_distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a9_daily_rollup",
-    tags=("A9", "agg"),
     oracle="""
 WITH fine AS (
   SELECT user_id, CAST(ts AS DATE) AS day,
@@ -489,7 +477,6 @@ def a9_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a10_trailing_delta",
-    tags=("A10", "W5", "agg", "window"),
     oracle="""
 WITH s AS (
   SELECT user_id, ts, "value",
@@ -524,7 +511,6 @@ def a10_trailing_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w3_spike_filter",
-    tags=("W3", "window"),
     oracle="""
 WITH n AS (
   SELECT user_id, ts, "value",
@@ -555,7 +541,6 @@ def w3_spike_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w4_top7_customers",
-    tags=("W4", "O1", "sort"),
     oracle="""
 SELECT o_custkey,
        sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS total_spend
@@ -578,7 +563,6 @@ def w4_top7_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w5_recent_orders_per_customer",
-    tags=("W5", "window"),
     oracle="""
 SELECT o_custkey, o_orderkey, o_totalprice, rn AS rank
 FROM (
@@ -607,7 +591,6 @@ def w5_recent_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 @register(
     "o2_pagination",
-    tags=("O2", "P5", "sort"),
     oracle="""
 SELECT o_orderkey, o_custkey, o_totalprice
 FROM orders WHERE o_orderkey > 500
@@ -628,7 +611,6 @@ def o2_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "u1_union_nations",
-    tags=("U1", "U3", "setop"),
     oracle="""
 SELECT c_nationkey AS nationkey FROM customer
 UNION
@@ -652,7 +634,6 @@ def u1_union_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "u3_missing_days",
-    tags=("U3", "J6", "setop"),
     oracle="""
 SELECT u.user_id, CAST(g.d AS BIGINT) AS day_idx
 FROM (SELECT DISTINCT user_id FROM events) u
@@ -683,7 +664,6 @@ def u3_missing_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f_scalar_kernel",
-    tags=("F2", "F3", "F5", "F7", "F8", "scalar"),
     oracle="""
 SELECT o_orderkey,
        o_orderkey * 32 - 1 AS epoch_end_slot,

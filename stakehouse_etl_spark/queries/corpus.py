@@ -38,7 +38,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "text_repetition_metrics",
-    tags=("text", "repetition", "quality"),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 base AS (
@@ -118,7 +117,6 @@ _LONGNUM_RE = r"[0-9]{4,}"
 
 @register(
     "text_pii_redact",
-    tags=("text", "pii", "F7"),
     oracle=f"""
 SELECT doc_id,
        CAST(len(regexp_extract_all(text, '{_EMAIL_RE}')) AS BIGINT) AS n_emails,
@@ -163,7 +161,6 @@ _QUALITY_KEEP = """
 
 @register(
     "pipeline_corpus_clean",
-    tags=("pipeline", "dedup", "text", "graph"),
     bench=True,
     oracle=f"""
 WITH RECURSIVE t AS (
@@ -281,7 +278,6 @@ def pipeline_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "split_train_holdout",
-    tags=("split", "sampling", "dedup"),
     oracle="""
 WITH h AS (
   SELECT doc_id, lang,
@@ -328,7 +324,6 @@ def split_train_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_approx_distinct_bounded",
-    tags=("A6", "approx"),
     oracle="""
 SELECT event_type,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
@@ -363,7 +358,6 @@ def a_approx_distinct_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_levenshtein_pairs",
-    tags=("dedup", "levenshtein"),
     oracle=f"""
 WITH {{shingles}}, {{jaccard}},
 ver AS (SELECT id_a, id_b FROM j WHERE inter * 100 >= union_sz * 20)

@@ -79,7 +79,6 @@ j AS (
 # ---------------------------------------------------------------------------
 @register(
     "text_token_stats",
-    tags=("text", "tokenize"),
     oracle=f"""
 WITH t AS (SELECT doc_id, n_chars, {_TOKS} AS toks FROM documents)
 SELECT doc_id, n_chars,
@@ -107,7 +106,6 @@ _EN = ", ".join(f"'{w}'" for w in LANG_STOPWORDS["en"])
 
 @register(
     "text_quality",
-    tags=("text", "quality"),
     bench=True,
     oracle=f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents),
@@ -158,7 +156,7 @@ SELECT doc_id, lang, {score_cols}, {case} AS lang_pred FROM sc
 """
 
 
-@register("text_langid", tags=("text", "langid"), oracle=_langid_sql())
+@register("text_langid", oracle=_langid_sql())
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic: per-language stopword hits, argmax with
     deterministic tiebreak (first language in fixed order wins)."""
@@ -168,7 +166,6 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_fingerprints",
-    tags=("text", "fingerprint"),
     oracle=f"""
 WITH t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)
 SELECT doc_id,
@@ -193,7 +190,6 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_exact",
-    tags=("dedup",),
     oracle="""
 SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint,
        min(doc_id) AS canonical_id,
@@ -208,7 +204,6 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_jaccard_pairs",
-    tags=("dedup", "jaccard"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_JACCARD_CTE}
 SELECT id_a, id_b, CAST(inter AS DOUBLE) / union_sz AS jaccard
@@ -293,7 +288,6 @@ j AS (
 
 @register(
     "dedup_minhash_lsh",
-    tags=("dedup", "minhash", "lsh"),
     bench=True,
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_minhash_sig_sql()}, {_minhash_bands_sql()},
@@ -321,7 +315,6 @@ def dedup_minhash_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_signatures",
-    tags=("dedup", "minhash"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_minhash_sig_sql()}
 SELECT * FROM sig
@@ -335,7 +328,6 @@ def dedup_minhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_lsh_bucket_stats",
-    tags=("dedup", "lsh", "observability"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_minhash_sig_sql()}, {_minhash_bands_sql()},
 sizes AS (
@@ -364,7 +356,6 @@ def dedup_lsh_bucket_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash",
-    tags=("dedup", "simhash"),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 h AS (SELECT doc_id, list_transform(toks, t -> {_HASH32.format(x='t')}) AS hs FROM t),
@@ -386,7 +377,6 @@ def dedup_simhash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_simhash_pairs",
-    tags=("dedup", "simhash"),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 h AS (SELECT doc_id, list_transform(toks, t -> {_HASH32.format(x='t')}) AS hs FROM t),
@@ -427,7 +417,6 @@ _QUANT_EMB = "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000
 
 @register(
     "sim_cosine_topk",
-    tags=("similarity", "ann"),
     bench=True,
     oracle=f"""
 WITH e AS (SELECT vec_id, {_QUANT_EMB} AS qe FROM embeddings),
@@ -468,7 +457,6 @@ def _planes_sql() -> str:
 
 @register(
     "sim_ann_lsh_pairs",
-    tags=("similarity", "ann", "lsh"),
     oracle=f"""
 WITH e AS (SELECT vec_id, {_QUANT_EMB} AS qe FROM embeddings),
 n0 AS (
@@ -506,7 +494,6 @@ _COS = (
 
 @register(
     "dedup_embedding_cosine",
-    tags=("dedup", "similarity", "lsh"),
     oracle=f"""
 WITH e AS (SELECT vec_id, {_QUANT_EMB} AS qe FROM embeddings),
 n0 AS (
@@ -548,7 +535,6 @@ def dedup_embedding_cosine_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ivf_topk",
-    tags=("similarity", "ann", "ivf"),
     bench=True,
     oracle=f"""
 WITH e AS (SELECT vec_id, {_QUANT_EMB} AS qe FROM embeddings),
@@ -608,7 +594,6 @@ def sim_ivf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_incremental_batch",
-    tags=("dedup", "minhash", "lsh", "incremental"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_minhash_sig_sql()}, {_minhash_bands_sql()},
 cand AS (
@@ -850,7 +835,6 @@ def _compact_plain_index(s: SparkSession, index_dir: str, bno_cur: int) -> None:
 
 @register(
     "stream_incremental_dedup",
-    tags=("dedup", "streaming", "incremental", "T6"),
     oracle=_STREAM_INC_DEDUP_SQL,
 )
 def stream_incremental_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1042,7 +1026,6 @@ def incremental_dedup_run(
 
 @register(
     "stream_incremental_dedup_bucketed",
-    tags=("dedup", "streaming", "incremental", "bucketing", "T6"),
     oracle=_STREAM_INC_DEDUP_SQL,
 )
 def stream_incremental_dedup_bucketed_q(

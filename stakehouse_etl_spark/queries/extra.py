@@ -26,7 +26,6 @@ MICROS_PER_HOUR = 3_600_000_000
 # ---------------------------------------------------------------------------
 @register(
     "p_predicate_kernel",
-    tags=("P1", "P2", "P3", "P4", "P5", "P6", "P7", "filter"),
     oracle="""
 SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
 FROM lineitem
@@ -60,7 +59,6 @@ def p_predicate_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a8_group_collect",
-    tags=("A8", "agg"),
     oracle="""
 SELECT c_nationkey,
        array_to_string(list_sort(list(c_name)), '|') AS members
@@ -84,7 +82,6 @@ def a8_group_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f10_json_extract",
-    tags=("F10", "scalar"),
     oracle="""
 SELECT event_id,
        CAST(json_extract(props, '$.k') AS BIGINT) AS k,
@@ -106,7 +103,6 @@ def f10_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j4_min_runner_epoch",
-    tags=("J4", "A2", "join"),
     oracle=f"""
 WITH runner AS (
   SELECT user_id, max(epoch_us(ts) // {MICROS_PER_HOUR}) AS last_epoch
@@ -145,7 +141,6 @@ def j4_min_runner_epoch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "pipeline_index_apr",
-    tags=("J3", "W1", "W3", "pipeline"),
     bench=True,
     oracle=f"""
 WITH b AS (
@@ -230,7 +225,6 @@ def pipeline_index_apr(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "src_json_roundtrip",
-    tags=("S", "source", "json"),
     oracle="""
 SELECT event_type, count(*) AS n,
        sum(CAST(round("value" * 100) AS BIGINT)) / 100.0 AS sum_value
@@ -269,7 +263,6 @@ def src_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w1_income_with_withdrawals",
-    tags=("W1", "F9", "window"),
     oracle=f"""
 WITH b AS (
   SELECT user_id, epoch_us(ts) // {MICROS_PER_HOUR} AS epoch, max("value") AS balance
@@ -335,7 +328,6 @@ def w1_income_with_withdrawals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "u2_except_all",
-    tags=("U2", "setop"),
     oracle="""
 SELECT o_custkey FROM orders WHERE o_orderstatus <> 'F'
 EXCEPT ALL
@@ -359,7 +351,6 @@ def u2_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "src_csv_roundtrip",
-    tags=("S", "source", "csv"),
     oracle="""
 SELECT c_mktsegment, count(*) AS n,
        sum(CAST(round(c_acctbal * 100) AS BIGINT)) / 100.0 AS sum_acctbal
@@ -397,7 +388,6 @@ def src_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "skew_salted_join",
-    tags=("skew", "J5"),
     oracle="""
 SELECT o_orderpriority, count(*) AS n,
        sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
@@ -425,7 +415,6 @@ def skew_salted_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "skew_two_stage_agg",
-    tags=("skew", "A7"),
     oracle="""
 SELECT l_returnflag, count(l_orderkey) AS n,
        sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty,
@@ -469,7 +458,6 @@ def skew_two_stage_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "sink_bucketed_join",
-    tags=("K", "sink", "bucketing"),
     oracle="""
 SELECT o_orderpriority, count(*) AS n,
        sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price
@@ -524,7 +512,6 @@ def sink_bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "src_orc_roundtrip",
-    tags=("S", "source", "orc"),
     oracle="""
 SELECT o_orderpriority, count(*) AS n,
        sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS sum_totalprice
@@ -560,7 +547,6 @@ def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q3_shipping_priority",
-    tags=("J2", "W4", "bench"),
     bench=True,
     oracle="""
 SELECT l_orderkey,
@@ -610,7 +596,6 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q5_local_supplier_volume",
-    tags=("J2", "A3", "bench"),
     bench=True,
     oracle="""
 SELECT n_name,
@@ -655,7 +640,6 @@ def tpch_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "tpch_q4_order_priority",
-    tags=("J7", "P4", "bench"),
     bench=True,
     oracle="""
 SELECT o_orderpriority, count(*) AS order_count
@@ -685,7 +669,6 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q16_supplier_cnt",
-    tags=("J6", "A6", "A7"),
     oracle="""
 SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
 FROM part
@@ -715,7 +698,6 @@ def tpch_q16_supplier_cnt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q6_forecast_revenue",
-    tags=("P4", "A3"),
     oracle="""
 SELECT sum(CAST(round(l_extendedprice * l_discount * 10000) AS BIGINT)) / 10000.0
          AS revenue
@@ -744,7 +726,6 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q7_volume_shipping",
-    tags=("J2", "A7"),
     oracle="""
 SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
        CAST(year(l_shipdate) AS BIGINT) AS l_year,
@@ -803,7 +784,6 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q10_returned_items",
-    tags=("J2", "W4"),
     oracle="""
 SELECT c_custkey, c_name,
        sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
@@ -846,7 +826,6 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q14_promo_effect",
-    tags=("A3", "F5"),
     oracle="""
 SELECT 100.0 * (sum(CASE WHEN p_type = 'PROMO'
                     THEN CAST(round(l_extendedprice * (1 - l_discount) * 10000)
@@ -882,7 +861,6 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q19_discounted_revenue",
-    tags=("P3", "P4", "A3"),
     oracle="""
 SELECT sum(CAST(round(l_extendedprice * (1 - l_discount) * 10000) AS BIGINT))
          / 10000.0 AS revenue
@@ -930,7 +908,6 @@ def tpch_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a_rollup_region_nation",
-    tags=("A7", "rollup"),
     oracle="""
 SELECT r_name, n_name, count(*) AS n,
        sum(CAST(round(c_acctbal * 100) AS BIGINT)) / 100.0 AS sum_bal
@@ -963,7 +940,6 @@ def a_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q8_market_share",
-    tags=("J2", "A3", "F5"),
     oracle="""
 WITH base AS (
   SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
@@ -1037,7 +1013,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q13_customer_distribution",
-    tags=("J10", "A5", "A7"),
     oracle="""
 SELECT c_count, count(*) AS custdist FROM (
   SELECT c_custkey, count(o_orderkey) AS c_count
@@ -1072,7 +1047,6 @@ def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFram
 
 @register(
     "tpch_q17_small_quantity_revenue",
-    tags=("J3", "A4"),
     oracle="""
 WITH qc AS (
   SELECT l_partkey, CAST(round(l_quantity * 100) AS BIGINT) AS qty_c,
@@ -1114,7 +1088,6 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
 
 @register(
     "tpch_q22_global_balance_anti",
-    tags=("J6", "A4", "F7"),
     oracle="""
 WITH cc AS (
   SELECT c_custkey, c_nationkey % 10 AS cntrycode,
@@ -1166,7 +1139,6 @@ def tpch_q22_global_balance_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "tpch_q18_large_orders",
-    tags=("A3", "J3", "bench"),
     bench=True,
     oracle="""
 WITH big AS (

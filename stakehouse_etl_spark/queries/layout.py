@@ -61,7 +61,6 @@ _ZY_SPARK = f"CAST({_DAYNUM_SPARK} AS BIGINT) & 65535"
 
 @register(
     "layout_zorder_stats",
-    tags=("layout", "zorder", "clustering"),
     oracle=f"""
 WITH b AS (
   SELECT o_orderkey, CAST({_ZX} AS BIGINT) AS x,
@@ -128,7 +127,6 @@ MONTH30_US = 30 * DAY_US
 
 @register(
     "sink_partitioned_prune",
-    tags=("K", "sink", "partition-pruning"),
     oracle=f"""
 WITH s AS (
   SELECT o_orderpriority,
@@ -208,7 +206,6 @@ VOCAB_K = 400
 
 @register(
     "text_oov_rate",
-    tags=("text", "vocab", "coverage"),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 e AS (SELECT doc_id, unnest(toks) AS tok FROM t),

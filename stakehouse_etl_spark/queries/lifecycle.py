@@ -43,7 +43,6 @@ def _hourly_balances(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f6_ratio_block",
-    tags=("F4", "F5", "F6", "J8", "A5", "scalar"),
     oracle="""
 WITH s AS (
   SELECT c_custkey, c_acctbal,
@@ -106,7 +105,6 @@ def f6_ratio_block(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "o3_ranked_nations",
-    tags=("O1", "O3", "W4", "sort"),
     oracle="""
 WITH s AS (
   SELECT c_nationkey,
@@ -148,7 +146,6 @@ def o3_ranked_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k1_upsert_sink",
-    tags=("K1", "T5", "sink"),
     oracle="""
 SELECT o_orderkey,
        CASE WHEN o_orderkey % 7 = 0 THEN o_totalprice + 1000.0
@@ -188,7 +185,6 @@ def k1_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k2_insert_ignore_sink",
-    tags=("K2", "sink"),
     oracle="""
 SELECT o_orderkey,
        CASE WHEN o_orderkey % 2 = 0 THEN o_totalprice
@@ -223,7 +219,6 @@ def k2_insert_ignore_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k4_json_envelope",
-    tags=("K4", "F7", "F10", "json"),
     oracle="""
 WITH a AS (
   SELECT user_id, count(*) AS n FROM events GROUP BY user_id
@@ -254,7 +249,6 @@ def k4_json_envelope(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "t2_bounded_catchup",
-    tags=("T2", "T1", "T3", "incremental"),
     oracle=f"""
 WITH b AS (
   SELECT user_id, epoch_us(ts) // {MICROS_PER_HOUR} AS epoch, max("value") AS balance
@@ -330,7 +324,6 @@ def t2_bounded_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "t4_backfill_repair",
-    tags=("T4", "incremental"),
     oracle=f"""
 WITH b AS (
   SELECT user_id, epoch_us(ts) // {MICROS_PER_HOUR} AS epoch, max("value") AS balance
@@ -394,7 +387,6 @@ def t4_backfill_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "s1_s2_connector_normalize",
-    tags=("S1", "S2", "S3", "source"),
     oracle="""
 WITH keys AS (
   SELECT DISTINCT c_custkey AS idx,
@@ -519,7 +511,6 @@ def s1_s2_connector_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_reconcile_source",
-    tags=("dq", "S1", "S2", "reconcile"),
     oracle="""
 WITH keys AS (
   SELECT DISTINCT c_custkey AS idx,
@@ -684,7 +675,6 @@ def dq_reconcile_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s6_mev_block_stats",
-    tags=("S6", "source"),
     oracle="""
 SELECT CAST(1700000000 AS BIGINT) AS start_ts,
        CAST(1700086400 AS BIGINT) AS end_ts,
@@ -722,7 +712,6 @@ def s6_mev_block_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s7_pon_eligibility",
-    tags=("S7", "source"),
     oracle="""
 SELECT '0x' || lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS bls_key,
        CAST(CASE WHEN n_nationkey % 3 = 0 THEN 31000000000
@@ -767,7 +756,6 @@ def s7_pon_eligibility_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "s4_subgraph_scan",
-    tags=("S4", "source"),
     oracle="""
 SELECT '0x' || lpad(CAST(n_nationkey AS VARCHAR), 4, '0') AS id,
        CAST(3 + n_nationkey % 2 AS VARCHAR) AS lifecycle_status,

@@ -24,7 +24,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "ml_ab_welch_t",
-    tags=("ml", "stats", "ab-test"),
     oracle="""
 WITH g AS (
   SELECT event_type,
@@ -101,7 +100,6 @@ def ml_ab_welch_t_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_triangle_count",
-    tags=("graph", "motif"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_lsh_jaccard_cte()},
 edges AS (
@@ -154,7 +152,6 @@ def graph_triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w9_percent_of_total",
-    tags=("window", "contribution"),
     oracle="""
 WITH rev AS (
   SELECT r_name, n_name,

@@ -57,7 +57,7 @@ GROUP BY p.tok, e.exact_count
 """
 
 
-@register("a_count_min_sketch", tags=("approx", "sketch", "cms"), oracle=_cms_sql())
+@register("a_count_min_sketch", oracle=_cms_sql())
 def a_count_min_sketch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch (depth 4 × width 256, fixed affine rows over
     the cross-engine md5-prefix hash) of corpus token frequencies,
@@ -120,7 +120,6 @@ def a_count_min_sketch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dq_freshness_lag",
-    tags=("quality", "freshness"),
     oracle="""
 WITH heads AS (
   SELECT event_type, max(epoch_us(ts)) AS head_us, count(*) AS n_events
@@ -162,7 +161,6 @@ def dq_freshness_lag_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_dedup_rate_by_source",
-    tags=("corpus", "dedup", "monitoring"),
     oracle="""
 WITH fp AS (
   SELECT source, doc_id,
@@ -239,7 +237,7 @@ FROM scored GROUP BY 1
 """
 
 
-@register("ml_calibration_bins", tags=("ml", "eval", "calibration"), oracle=_calibration_sql())
+@register("ml_calibration_bins", oracle=_calibration_sql())
 def ml_calibration_bins_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability-diagram counts: bucket the composite quality score
     into 10 fixed-width bins and count how often the 'en' label

@@ -24,7 +24,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "j15_drill_across",
-    tags=("join", "star-schema", "drill-across"),
     oracle="""
 WITH o AS (
   SELECT c_nationkey AS nk,
@@ -102,7 +101,6 @@ def j15_drill_across_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_chi2_drift",
-    tags=("ml", "drift", "stats"),
     oracle="""
 WITH e AS (
   SELECT event_type, epoch_us(ts) AS ts_us FROM events
@@ -163,7 +161,6 @@ def ml_chi2_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "maint_write_audit_publish",
-    tags=("maintenance", "sink", "wap"),
     oracle="""
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)

@@ -28,7 +28,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "dedup_lsh_eval_pr",
-    tags=("dedup", "lsh", "eval"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_minhash_sig_sql()}, {_minhash_bands_sql()},
 cand AS (
@@ -103,7 +102,6 @@ _LSH_EVAL_SAMPLE_TARGET = 5000
 
 @register(
     "dedup_lsh_eval_sampled",
-    tags=("dedup", "lsh", "eval", "sampling"),
     oracle=f"""
 WITH n_t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
 s_t AS (
@@ -245,7 +243,7 @@ FROM agg
 """
 
 
-@register("ml_auc_exact", tags=("ml", "eval", "auc"), oracle=_auc_sql())
+@register("ml_auc_exact", oracle=_auc_sql())
 def ml_auc_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC-AUC of the quality score as an English-detector, via
     the Mann-Whitney rank-sum identity AUC = U / (n+ · n−): one global
@@ -337,7 +335,7 @@ SELECT rule, CAST(n_violations AS BIGINT) AS n_violations FROM (
 """.format(toks="regexp_split_to_array(lower(trim(text)), '\\s+')")
 
 
-@register("corpus_gopher_rules", tags=("corpus", "quality", "rules"), oracle=_gopher_sql())
+@register("corpus_gopher_rules", oracle=_gopher_sql())
 def corpus_gopher_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style quality rule suite as an integer-exact rule
     engine: token-count bounds, mean-word-length bounds (compared

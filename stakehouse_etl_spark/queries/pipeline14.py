@@ -26,7 +26,6 @@ MICROS_PER_HOUR = 3_600_000_000
 
 @register(
     "stream_availablenow_restart",
-    tags=("streaming", "trigger", "checkpoint", "exactly-once"),
     oracle=f"""
 SELECT user_id,
        epoch_us(ts) // {MICROS_PER_HOUR} AS epoch,
@@ -111,7 +110,6 @@ def stream_availablenow_restart_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "a_decimal_exact_sum",
-    tags=("agg", "decimal"),
     oracle="""
 SELECT o_orderstatus,
        CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS VARCHAR)
@@ -147,7 +145,6 @@ def a_decimal_exact_sum_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "j17_null_safe_join",
-    tags=("join", "null-safe"),
     oracle="""
 WITH c AS (
   SELECT c_custkey,

@@ -16,7 +16,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "a_weighted_avg",
-    tags=("agg", "weighted"),
     oracle="""
 SELECT l_returnflag,
        CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)
@@ -51,7 +50,6 @@ def a_weighted_avg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_mom_growth",
-    tags=("timeseries", "growth"),
     oracle="""
 WITH m AS (
   SELECT epoch_us(date_trunc('month', o_orderdate)) AS month_us,

@@ -20,7 +20,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "w1_skew_hotkey",
-    tags=("W1", "skew", "window"),
     bench=True,
     oracle="""
 WITH e AS (
@@ -70,7 +69,6 @@ def w1_skew_hotkey_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "w1_income_partitioned_prune",
-    tags=("W1", "layout", "pruning"),
     bench=True,
     oracle="""
 WITH e AS (
@@ -162,7 +160,6 @@ _URL_TRACKING_SQL = _url_tracking_sql()
 
 @register(
     "text_url_normalize",
-    tags=("text", "url", "dedup"),
     oracle=f"""
 WITH u AS (
   SELECT doc_id,
@@ -251,7 +248,6 @@ def text_url_normalize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_chunk_documents",
-    tags=("corpus", "chunking", "text"),
     oracle="""
 WITH t AS (
   SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
@@ -297,7 +293,6 @@ def corpus_chunk_documents_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bpe_pretoken_stats",
-    tags=("text", "tokenize", "bpe"),
     oracle=r"""
 WITH t AS (
   SELECT doc_id,
@@ -346,7 +341,6 @@ def text_bpe_pretoken_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_winnowing_fingerprints",
-    tags=("text", "fingerprint", "dedup"),
     oracle="""
 WITH t AS (
   SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\\s+') AS toks
@@ -390,7 +384,6 @@ def text_winnowing_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "text_feature_hashing",
-    tags=("text", "ml", "featurize"),
     oracle="""
 WITH t AS (
   SELECT doc_id,

@@ -39,7 +39,6 @@ _PASSAGE_DUP_PCT = 30  # drop docs with >30% inter-doc duplicated passages
 
 @register(
     "corpus_passage_dedup",
-    tags=("corpus", "dedup", "passage"),
     bench=True,
     oracle=f"""
 WITH t AS (
@@ -121,7 +120,6 @@ def corpus_passage_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_canonical_docs",
-    tags=("corpus", "dedup", "graph"),
     oracle=f"""
 WITH RECURSIVE {_SHINGLES_CTE}, {_lsh_jaccard_cte()},
 edges AS (
@@ -187,7 +185,6 @@ def corpus_canonical_docs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_length_bucket_stats",
-    tags=("corpus", "batching", "tokens"),
     oracle=f"""
 WITH t AS (
   SELECT doc_id, CAST(len({_TOKS}) AS BIGINT) AS n_tok FROM documents
@@ -254,7 +251,6 @@ _W_SHIFT = 500
 
 @register(
     "ml_logit_hashed_score",
-    tags=("ml", "inference", "featurize"),
     oracle=f"""
 WITH t AS (
   SELECT doc_id,
@@ -314,7 +310,6 @@ _HAMMING_MAX = 5
 
 @register(
     "mm_hamming_dedup",
-    tags=("multimodal", "dedup", "lsh"),
     oracle=f"""
 WITH b AS (
   SELECT doc_id AS media_id, text, length(text) AS L FROM documents
@@ -441,7 +436,6 @@ _BPE_TOP_K = 20
 
 @register(
     "text_bpe_merge_pairs",
-    tags=("text", "tokenize", "bpe"),
     oracle=rf"""
 WITH t AS (
   SELECT regexp_extract_all(lower(trim(text)), '[a-z]+|[0-9]+|[^a-z0-9\s]+')
@@ -561,7 +555,6 @@ LEFT JOIN comp cp ON cp.doc_id = qf.doc_id
 
 @register(
     "corpus_drop_ledger",
-    tags=("corpus", "dedup", "audit", "graph"),
     oracle=_drop_ledger_sql(),
 )
 def corpus_drop_ledger_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -886,7 +879,6 @@ def _bpe_train_merges(
 
 @register(
     "ml_bpe_train_merges",
-    tags=("ml", "tokenize", "bpe", "iterative"),
     oracle=_bpe_train_sql(3),
 )
 def ml_bpe_train_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -898,7 +890,6 @@ def ml_bpe_train_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_bpe_train_merges_deep",
-    tags=("ml", "tokenize", "bpe", "iterative", "deep"),
     oracle=_bpe_train_sql(8),
 )
 def ml_bpe_train_merges_deep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -944,7 +935,6 @@ FROM hit
 
 @register(
     "sim_ivf_recall_eval",
-    tags=("similarity", "ann", "eval"),
     oracle=_ivf_recall_sql(),
 )
 def sim_ivf_recall_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1041,7 +1031,6 @@ FROM w{n_iters} GROUP BY doc_id
 
 @register(
     "ml_bpe_apply_encode",
-    tags=("ml", "tokenize", "bpe", "iterative"),
     oracle=_bpe_apply_sql(3),
 )
 def ml_bpe_apply_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,7 +1103,6 @@ def ml_bpe_apply_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "inc_join_view_delta",
-    tags=("incremental", "ivm", "join"),
     oracle="""
 SELECT c.c_mktsegment AS segment, o.o_orderpriority AS priority,
        CAST(count(*) AS BIGINT) AS n_orders,
@@ -1174,7 +1162,6 @@ def inc_join_view_delta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k5_snapshot_time_travel",
-    tags=("K1", "sink", "time-travel"),
     oracle="""
 WITH e AS (
   SELECT user_id, epoch_us(ts) AS seq_us,
@@ -1255,7 +1242,6 @@ def k5_snapshot_time_travel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_epoch_shuffle",
-    tags=("corpus", "shuffle", "sampling"),
     oracle="""
 WITH k AS (
   SELECT doc_id, e.epoch,
@@ -1338,7 +1324,6 @@ _N_SHARDS = 8
 
 @register(
     "corpus_shard_assign",
-    tags=("corpus", "sharding", "batching"),
     bench=True,
     oracle=f"""
 WITH t AS (
@@ -1391,7 +1376,6 @@ def corpus_shard_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_snapshot_publish",
-    tags=("streaming", "sink", "time-travel", "T5", "T6"),
     oracle="""
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS n_events,
@@ -1494,7 +1478,6 @@ _PROFILE_COLS = ("o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
 
 @register(
     "dq_column_profile",
-    tags=("dq", "profile"),
     oracle="""
 SELECT 'o_custkey' AS col,
        CAST(count(*) - count(o_custkey) AS BIGINT) AS n_nulls,
@@ -1575,7 +1558,6 @@ _TEMP_BUDGET = 1_000_000
 
 @register(
     "corpus_mix_temperature",
-    tags=("corpus", "mixing", "sampling"),
     oracle=f"""
 WITH t AS (
   SELECT source, CAST(sum(len({_TOKS})) AS BIGINT) AS n_tok
@@ -1699,7 +1681,6 @@ GROUP BY f.query_id
 
 @register(
     "sim_dim_ablation",
-    tags=("similarity", "eval", "matryoshka"),
     oracle=_dim_ablation_sql(),
 )
 def sim_dim_ablation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1765,7 +1746,6 @@ SELECT '{child}.{ck}' AS relation,
 
 @register(
     "dq_join_cardinality_report",
-    tags=("dq", "stats", "join"),
     oracle=_join_card_sql(),
 )
 def dq_join_cardinality_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1857,7 +1837,6 @@ FROM m JOIN j ON j.id_a = m.id_a AND j.id_b = m.id_b
 
 @register(
     "dedup_minhash_estimate_eval",
-    tags=("dedup", "minhash", "eval"),
     oracle=_minhash_estimate_sql(),
 )
 def dedup_minhash_estimate_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -183,7 +183,7 @@ def _mk(sql: str):
 
 
 for _name, _sql in _PORTABLE.items():
-    register(_name, oracle=_sql, tags=("sql", "portable"))(_mk(_sql))
+    register(_name, oracle=_sql)(_mk(_sql))
 
 
 # ---------------------------------------------------------------------------
@@ -237,7 +237,6 @@ FROM d GROUP BY source
 
 @register(
     "corpus_decontaminate_counts",
-    tags=("corpus", "contamination", "dedup"),
     oracle=_decon_sql(),
 )
 def corpus_decontaminate_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,7 +302,6 @@ def corpus_decontaminate_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 @register(
     "ts_weekday_profile",
-    tags=("timeseries", "seasonality", "agg"),
     oracle="""
 WITH e AS (
   SELECT (CAST(floor(epoch_us(ts) / 86400000000) AS BIGINT) + 4) % 7
@@ -343,7 +341,6 @@ def ts_weekday_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_median_exact_global",
-    tags=("A4", "median", "rank"),
     oracle="""
 WITH s AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -401,7 +398,6 @@ def a_median_exact_global_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "u5_symmetric_diff",
-    tags=("U2", "setops"),
     oracle="""
 WITH a AS (SELECT DISTINCT o_custkey AS k FROM orders
            WHERE o_orderstatus = 'O'),

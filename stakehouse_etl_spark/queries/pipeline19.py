@@ -61,7 +61,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id
 
 @register(
     "ts_cusum_drift",
-    tags=("timeseries", "anomaly", "window"),
     oracle=_CUSUM_SQL,
 )
 def ts_cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -149,7 +148,6 @@ def _cusum_state_fn(
 
 @register(
     "stream_cusum_drift",
-    tags=("streaming", "state", "anomaly", "applyInPandasWithState"),
     oracle=_CUSUM_SQL,
 )
 def stream_cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -221,7 +219,6 @@ _IVL_BUCKET_US = 6 * 3_600_000_000  # 6 h grid cell
 
 @register(
     "j19_interval_overlap_pairs",
-    tags=("join", "interval", "timeseries"),
     oracle=f"""
 WITH e AS (
   SELECT user_id, epoch_us(ts) AS ts_us FROM events
@@ -331,7 +328,6 @@ def j19_interval_overlap_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "s1_datasource_scan",
-    tags=("S1", "source", "datasource-v2"),
     oracle="""
 WITH keys AS (SELECT unnest(range(1, 51)) AS idx),
 epochs AS (SELECT unnest(range(100, 105)) AS epoch)
@@ -364,188 +360,10 @@ def s1_datasource_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Income kernel on the NEW stateful API (transformWithStateInPandas)
-# ---------------------------------------------------------------------------
-_TWS_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("earn_c", LongType()),
-        StructField("loss_c", LongType()),
-        StructField("n_steps", LongType()),
-    ]
-)
-
-
-class _IncomeTWSProcessor:
-    """StatefulProcessor for per-key cumulative earnings/losses —
-    the W1 kernel on Spark 4's ``transformWithState`` API (ValueState
-    + RocksDB provider), semantics identical to the
-    ``applyInPandasWithState`` version in streaming/structured.py."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState(
-            "income", "last_c long, earn long, loss long, n long, has long"
-        )
-
-    def handleInputRows(self, key, rows, timerValues):
-        if self._state.exists():
-            last_c, earn, loss, n, has = self._state.get()
-        else:
-            last_c, earn, loss, n, has = 0, 0, 0, 0, 0
-        out = []
-        for pdf in rows:
-            pdf = pdf.sort_values("ts_us")
-            for ts_us, cents in zip(
-                pdf["ts_us"].to_numpy(), pdf["cents"].to_numpy()
-            ):
-                cents = int(cents)
-                if has:
-                    delta = cents - last_c
-                    if delta > 0:
-                        earn += delta
-                    else:
-                        loss -= delta
-                    n += 1
-                last_c, has = cents, 1
-                out.append((key[0], int(ts_us), earn, loss, n))
-        self._state.update((last_c, earn, loss, n, has))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "ts_us", "earn_c", "loss_c", "n_steps"]
-            )
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter([])
-
-    def close(self) -> None:
-        pass
-
-
-# The transformWithState Python runner serializes state over protobuf;
-# the container ships no google.protobuf, so the query registers only
-# when the dependency exists. The operator code and its oracle are
-# complete either way — a deployment with protobuf gets the query;
-# tools/check and `__spark_entry__` callers see it only where it can run.
-try:  # optional dependency: TWS state serialization
-    from google.protobuf import descriptor as _pb_descriptor  # noqa: F401
-
-    HAS_PROTOBUF = True
-except ImportError:
-    HAS_PROTOBUF = False
-
-
-def _register_tws(fn):
-    if HAS_PROTOBUF:
-        return register(
-            "stream_income_tws",
-            tags=("streaming", "state", "W1", "transformWithState"),
-            oracle=_TWS_ORACLE,
-        )(fn)
-    return fn
-
-
-_TWS_ORACLE = """
-WITH v AS (
-  SELECT user_id, epoch_us(ts) AS ts_us,
-         CAST(round("value" * 100) AS BIGINT) AS cents
-  FROM events
-), l AS (
-  SELECT user_id, ts_us, cents - lag(cents) OVER w AS delta,
-         CAST(row_number() OVER w - 1 AS BIGINT) AS n_steps
-  FROM v
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts_us)
-)
-SELECT user_id, ts_us,
-       CAST(coalesce(sum(CASE WHEN delta > 0 THEN delta END) OVER cum, 0)
-            AS BIGINT) AS earn_c,
-       CAST(0 - coalesce(sum(CASE WHEN delta <= 0 THEN delta END) OVER cum, 0)
-            AS BIGINT) AS loss_c,
-       n_steps
-FROM l
-WINDOW cum AS (PARTITION BY user_id ORDER BY ts_us
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-"""
-
-
-@_register_tws
-def stream_income_tws_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The W1 income kernel on Spark 4's NEW arbitrary-state API
-    (``transformWithStateInPandas`` + ValueState + the RocksDB state
-    store this API requires) — the forward path off the deprecated-in
-    -spirit ``applyInPandasWithState``: typed named state, timers,
-    and queryable state all live here. Same three-micro-batch drive
-    and the same stream==batch oracle as ``stream_stateful_income``,
-    so the two APIs are proven value-identical on this engine.
-    """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Build the concrete processor class lazily so importing this
-    # module never requires the streaming machinery.
-    proc_cls = type(
-        "IncomeTWS", (StatefulProcessor,), dict(_IncomeTWSProcessor.__dict__)
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id",
-        "ts",
-        F.round(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    row = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    lo_us, hi_us = row[0].timestamp() * 1e6, row[1].timestamp() * 1e6
-    span = (hi_us - lo_us) / 3
-
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        with tempfile.TemporaryDirectory(
-            prefix="tws_src_", ignore_cleanup_errors=True
-        ) as workdir:
-            src = os.path.join(workdir, "src")
-            cut1, cut2 = int(lo_us + span), int(lo_us + 2 * span)
-            ranges = [(-(1 << 62), cut1), (cut1, cut2), (cut2, (1 << 62))]
-            for i, (lo_cut, hi_cut) in enumerate(ranges):
-                chunk = ev.filter(
-                    (F.unix_micros("ts") >= F.lit(lo_cut))
-                    & (F.unix_micros("ts") < F.lit(hi_cut))
-                ).select("user_id", F.unix_micros("ts").alias("ts_us"), "cents")
-                land_batch(chunk, src, i)
-
-            stream = (
-                spark.readStream.schema("user_id long, ts_us long, cents long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
-            )
-            income = stream.groupBy("user_id").transformWithStateInPandas(
-                proc_cls(),
-                outputStructType=_TWS_OUTPUT_SCHEMA,
-                outputMode="append",
-                timeMode="none",
-            )
-            return collect_stream(income, workdir, "append")
-    finally:
-        if prev_provider:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-# ---------------------------------------------------------------------------
 # S1 incremental head as a custom STREAMING source (offset-tracked)
 # ---------------------------------------------------------------------------
 @register(
     "s1_datasource_stream",
-    tags=("S1", "T1", "streaming", "datasource-v2"),
     oracle="""
 WITH keys AS (SELECT unnest(range(1, 51)) AS idx),
 epochs AS (SELECT unnest(range(100, 105)) AS epoch)
@@ -588,7 +406,6 @@ def s1_datasource_stream_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k6_datasource_writer_roundtrip",
-    tags=("K1", "sink", "datasource-v2"),
     oracle="""
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS n_events,
@@ -644,7 +461,6 @@ def k6_datasource_writer_roundtrip_q(
 # ---------------------------------------------------------------------------
 @register(
     "stream_datasource_e2e",
-    tags=("streaming", "sink", "source", "datasource-v2", "T5"),
     oracle="""
 WITH keys AS (SELECT unnest(range(1, 51)) AS idx),
 epochs AS (SELECT unnest(range(100, 105)) AS epoch)

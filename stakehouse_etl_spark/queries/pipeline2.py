@@ -39,7 +39,6 @@ _PACK_BUCKET = 64  # docs per prefix-sum bucket (scale: ~#docs/64 bucket rows)
 
 @register(
     "corpus_pack_sequences",
-    tags=("corpus", "packing", "window"),
     bench=True,
     oracle=f"""
 WITH t AS (
@@ -114,7 +113,6 @@ SAMPLE_PER_STRATUM = 20
 
 @register(
     "corpus_sample_stratified",
-    tags=("corpus", "sampling"),
     oracle=f"""
 WITH s AS (
   SELECT doc_id, lang,
@@ -156,7 +154,6 @@ _BENCH_IN = ", ".join(f"'{s}'" for s in _BENCH_SOURCES)
 
 @register(
     "text_contamination_overlap",
-    tags=("text", "contamination", "semi-join"),
     oracle=f"""
 WITH t AS (SELECT doc_id, source, {_TOKS} AS toks FROM documents),
 s AS (
@@ -228,7 +225,6 @@ NGRAM_TOP_K = 30
 
 @register(
     "text_ngram_counts",
-    tags=("text", "ngram", "topk"),
     oracle=f"""
 WITH t AS (SELECT {_TOKS} AS toks FROM documents),
 b AS (
@@ -314,7 +310,6 @@ def _kmeans_assign_df(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_kmeans_assign",
-    tags=("ml", "kmeans", "similarity"),
     oracle=f"""
 WITH {_KM_ASSIGN_CTE}
 SELECT vec_id, centroid_id, dist FROM a WHERE rn = 1
@@ -334,7 +329,6 @@ def ml_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_kmeans_update",
-    tags=("ml", "kmeans", "aggregate"),
     oracle=f"""
 WITH {_KM_ASSIGN_CTE},
 asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1),
@@ -378,7 +372,6 @@ def ml_kmeans_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_approx_quantile_bounded",
-    tags=("A4", "approx", "contract"),
     oracle="""
 WITH s AS (
   SELECT o_orderpriority AS priority,
@@ -448,7 +441,6 @@ def a_approx_quantile_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_time_weighted_avg",
-    tags=("timeseries", "window", "A4"),
     oracle="""
 WITH s AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,

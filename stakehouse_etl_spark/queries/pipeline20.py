@@ -154,7 +154,6 @@ def _scaled_assign(emb: DataFrame, n: int, k: int) -> DataFrame:
 
 @register(
     "dedup_semantic_prune",
-    tags=("dedup", "similarity", "kmeans"),
     oracle=f"""
 WITH {_SEM_ASSIGN_CTE},
 asg AS (
@@ -267,7 +266,6 @@ BM25_QUERY_TERMS = ["table", "query", "join"]
 
 @register(
     "text_bm25_topk",
-    tags=("text", "retrieval", "bm25"),
     bench=True,
     oracle=f"""
 WITH tok AS (
@@ -393,7 +391,6 @@ def text_bm25_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_pivot_status_matrix",
-    tags=("A7", "pivot"),
     oracle="""
 SELECT c_mktsegment,
        CAST(count(*) FILTER (WHERE o_orderstatus = 'F') AS BIGINT) AS f_n,
@@ -454,7 +451,6 @@ def a_pivot_status_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "u6_unpivot_long",
-    tags=("U", "unpivot"),
     oracle="""
 WITH wide AS (
   SELECT l_returnflag,
@@ -505,7 +501,6 @@ def u6_unpivot_long_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "inc_distinct_sketch_merge",
-    tags=("approx", "incremental", "sketch"),
     oracle="""
 SELECT event_type,
        CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
@@ -569,7 +564,6 @@ NEG_K = 4
 
 @register(
     "ml_negative_sampling",
-    tags=("ml", "sampling"),
     oracle=f"""
 WITH pool AS (
   SELECT lang, doc_id AS neg_id
@@ -645,7 +639,6 @@ EWMA_TAPS = 8
 
 @register(
     "ts_ewma_dyadic",
-    tags=("timeseries", "smoothing"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,

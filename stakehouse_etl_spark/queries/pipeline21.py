@@ -33,7 +33,6 @@ _HASH64 = "CAST('0x' || substr(md5({x}), 1, 15) AS BIGINT)"
 # ---------------------------------------------------------------------------
 @register(
     "ml_group_corr",
-    tags=("ml", "stats"),
     oracle="""
 WITH m AS (
   SELECT l_returnflag,
@@ -103,7 +102,6 @@ KFOLDS = 5
 
 @register(
     "ml_kfold_assign",
-    tags=("ml", "sampling"),
     oracle=f"""
 SELECT doc_id, lang,
        CAST((row_number() OVER (
@@ -138,7 +136,6 @@ def ml_kfold_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_locf_resample",
-    tags=("timeseries", "resample"),
     oracle="""
 WITH e AS (
   SELECT user_id, epoch_us(ts) AS ts_us, event_id,
@@ -218,7 +215,6 @@ N_BINS = 10
 
 @register(
     "ml_quantile_bin_assign",
-    tags=("ml", "features"),
     oracle=f"""
 WITH r AS (
   SELECT o_orderkey,
@@ -266,7 +262,6 @@ def ml_quantile_bin_assign_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_target_encode_loo",
-    tags=("ml", "features"),
     oracle="""
 WITH g AS (
   SELECT c_mktsegment,
@@ -312,7 +307,6 @@ def ml_target_encode_loo_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w10_topk_with_ties",
-    tags=("W4", "window"),
     oracle="""
 SELECT n_name, c_custkey, cents, CAST(rnk AS BIGINT) AS rnk
 FROM (
@@ -354,7 +348,6 @@ def w10_topk_with_ties_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w11_cume_dist",
-    tags=("window", "stats"),
     oracle="""
 SELECT event_id, event_type, cents,
        cume_dist() OVER (PARTITION BY event_type ORDER BY cents) AS cdf
@@ -390,7 +383,6 @@ def w11_cume_dist_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_snapshot_diff",
-    tags=("dq", "reconcile"),
     oracle="""
 WITH snap_a AS (
   SELECT c_custkey, CAST(round(c_acctbal * 100) AS BIGINT) AS cents
@@ -459,7 +451,6 @@ _DIGEST_MOD = 1_000_000_007
 
 @register(
     "dq_table_diff_digest",
-    tags=("dq", "reconcile"),
     oracle=f"""
 WITH rows_h AS (
   SELECT CAST(o_orderkey % 128 AS BIGINT) AS bucket,

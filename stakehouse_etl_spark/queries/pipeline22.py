@@ -38,7 +38,6 @@ def _events_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_copurchase_pairs",
-    tags=("graph", "join"),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 pr AS (
@@ -93,7 +92,6 @@ def graph_copurchase_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_markov_transitions",
-    tags=("timeseries", "sequence"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
@@ -150,7 +148,6 @@ ATTRIB_HORIZON_US = 24 * 3_600_000_000
 
 @register(
     "ts_attribution_last_touch",
-    tags=("timeseries", "asof", "attribution"),
     oracle=f"""
 WITH e AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
@@ -227,7 +224,6 @@ def ts_attribution_last_touch_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_activity_bitmask",
-    tags=("timeseries", "bitmask"),
     oracle=f"""
 WITH e AS (
   SELECT user_id, epoch_us(ts) // {MICROS_PER_DAY} AS day FROM events
@@ -279,7 +275,6 @@ def ts_activity_bitmask_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_class_weights",
-    tags=("ml", "sampling"),
     oracle="""
 WITH g AS (
   SELECT lang, CAST(count(*) AS BIGINT) AS n FROM documents GROUP BY 1
@@ -334,7 +329,6 @@ def ml_class_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_dedup_within_watermark",
-    tags=("streaming", "dedup"),
     oracle="""
 SELECT DISTINCT CAST(event_id % 1000 AS BIGINT) AS dedup_key,
        CAST(1 AS BIGINT) AS n_emitted

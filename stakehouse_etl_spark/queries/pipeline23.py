@@ -23,7 +23,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "f11_array_kernel",
-    tags=("F", "array"),
     oracle="""
 WITH e AS (
   SELECT vec_id,
@@ -70,7 +69,6 @@ def f11_array_kernel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f13_regexp_extract_numbers",
-    tags=("F7", "regex"),
     oracle="""
 SELECT event_id,
        CAST(len(regexp_extract_all(props, '[0-9]+')) AS BIGINT) AS n_nums,
@@ -109,7 +107,6 @@ def f13_regexp_extract_numbers_q(
 # ---------------------------------------------------------------------------
 @register(
     "a_mode_per_group",
-    tags=("agg", "mode"),
     oracle="""
 WITH c AS (
   SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
@@ -153,7 +150,6 @@ def a_mode_per_group_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_run_length_encode",
-    tags=("timeseries", "islands"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
@@ -211,7 +207,6 @@ def ts_run_length_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_quarantine_split",
-    tags=("dq", "quarantine"),
     oracle="""
 WITH raw AS (
   SELECT event_id,

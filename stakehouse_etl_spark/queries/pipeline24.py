@@ -21,7 +21,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ml_zscore_scale",
-    tags=("ml", "features"),
     oracle="""
 WITH m AS (
   SELECT event_type,
@@ -76,7 +75,6 @@ WINSOR_PCT = 5  # clip at p5 / p95
 
 @register(
     "ml_winsorize_clip",
-    tags=("ml", "features", "robust"),
     oracle=f"""
 WITH e AS (
   SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -157,7 +155,6 @@ SESSION_PAD_US = 1_800_000_000  # ±30 min around each event
 
 @register(
     "ts_interval_coalesce",
-    tags=("timeseries", "intervals"),
     oracle=f"""
 WITH iv AS (
   SELECT user_id,
@@ -240,7 +237,6 @@ def ts_interval_coalesce_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_robust_scale_mad",
-    tags=("ml", "robust"),
     oracle="""
 WITH e AS (
   SELECT event_type, event_id,

@@ -28,7 +28,6 @@ TOPK = 10
 # ---------------------------------------------------------------------------
 @register(
     "inc_topk_merge",
-    tags=("incremental", "topk"),
     oracle=f"""
 SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
        CAST(row_number() OVER (
@@ -84,7 +83,6 @@ def inc_topk_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_degree_distribution",
-    tags=("graph", "stats"),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 e AS (
@@ -139,7 +137,6 @@ TOKEN_BUDGET = 20_000
 
 @register(
     "corpus_token_budget_trim",
-    tags=("corpus", "sampling"),
     oracle=f"""
 WITH d AS (
   SELECT doc_id, n_chars,
@@ -198,7 +195,6 @@ def corpus_token_budget_trim_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_bool_agg_family",
-    tags=("agg", "boolean"),
     oracle="""
 SELECT l_returnflag,
        CAST(count(*) FILTER (WHERE l_quantity >= 25) AS BIGINT)

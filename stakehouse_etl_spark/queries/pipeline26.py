@@ -30,7 +30,6 @@ CHUNK_TOKS = 8
 # ---------------------------------------------------------------------------
 @register(
     "corpus_intradoc_dedup",
-    tags=("corpus", "dedup"),
     oracle=f"""
 WITH t AS (
   SELECT doc_id,
@@ -128,7 +127,6 @@ def intradoc_dedup(docs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_wilson_ci",
-    tags=("ml", "stats", "ci"),
     oracle="""
 WITH g AS (
   SELECT c_mktsegment,
@@ -187,7 +185,6 @@ def ml_wilson_ci_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k7_snapshot_version_diff",
-    tags=("K1", "sink", "time-travel", "dq"),
     oracle="""
 WITH v1 AS (
   SELECT c_custkey AS key, CAST(round(c_acctbal * 100) AS BIGINT) AS cents
@@ -281,7 +278,6 @@ LEADER_K = 10
 
 @register(
     "stream_topk_leaderboard",
-    tags=("streaming", "topk", "W4"),
     oracle=f"""
 SELECT event_id, CAST(round("value" * 100) AS BIGINT) AS cents,
        CAST(row_number() OVER (

@@ -67,7 +67,6 @@ def dpp_month_rollup(
 
 @register(
     "j21_dpp_month_join",
-    tags=("join", "dpp", "layout"),
     oracle="""
 SELECT strftime(o_orderdate, '%Y-%m') AS o_month,
        CAST(count(*) AS BIGINT) AS n_orders,
@@ -109,7 +108,6 @@ def j21_dpp_month_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_rocksdb_state",
-    tags=("streaming", "state-store"),
     oracle=f"""
 SELECT (epoch_us(ts) // {MICROS_PER_HOUR}) * {MICROS_PER_HOUR} AS win_start_us,
        event_type,

@@ -30,7 +30,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "mm_bmp_decode",
-    tags=("multimodal", "codec", "image"),
     oracle="""
 WITH d AS (
   SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents
@@ -66,7 +65,6 @@ def mm_bmp_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm_wav_decode",
-    tags=("multimodal", "codec", "audio"),
     oracle="""
 WITH d AS (
   SELECT doc_id, 50 + doc_id % 32 AS n FROM documents

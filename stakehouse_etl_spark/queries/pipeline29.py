@@ -37,7 +37,6 @@ RESIZE_W, RESIZE_H = 4, 3
 # ---------------------------------------------------------------------------
 @register(
     "mm_bmp_resize_nn",
-    tags=("multimodal", "codec", "resize"),
     oracle=f"""
 WITH d AS (
   SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents
@@ -131,7 +130,6 @@ FRAME_STEP = 2
 
 @register(
     "mm_multiframe_sample",
-    tags=("multimodal", "codec", "video"),
     oracle=f"""
 WITH d AS (
   SELECT doc_id, 3 + doc_id % 4 AS n_frames FROM documents
@@ -255,7 +253,6 @@ K_ANON = 5
 
 @register(
     "dq_k_anonymity",
-    tags=("dq", "privacy"),
     oracle=f"""
 WITH g AS (
   SELECT c_mktsegment, c_nationkey, CAST(count(*) AS BIGINT) AS group_sz

@@ -28,17 +28,17 @@ def _prefix_n_part(sf_dir: str) -> int:
     partitions the collect_list agg's per-task array state grows
     linearly with corpus — executor OOM at sf30 (1.5M docs, r9
     ladder; the r8 k-core class)."""
-    from stakehouse_etl_spark.io.sources import table_num_rows_or
+    from stakehouse_etl_spark.io.sources import table_num_rows
 
-    return max(32, table_num_rows_or(sf_dir, "documents", 0) // 10_000)
+    return max(32, table_num_rows(sf_dir, "documents") // 10_000)
 
 
 def _doc_count_or_none(sf_dir: str) -> int | None:
     """Footer-metadata doc count for the operator's small-corpus gate;
     None (scale-safe behavior) when footers are unavailable."""
-    from stakehouse_etl_spark.io.sources import table_num_rows_or
+    from stakehouse_etl_spark.io.sources import table_num_rows
 
-    n = table_num_rows_or(sf_dir, "documents", 0)
+    n = table_num_rows(sf_dir, "documents")
     return n if n > 0 else None
 
 # ---------------------------------------------------------------------------
@@ -48,7 +48,6 @@ def _doc_count_or_none(sf_dir: str) -> int | None:
 
 @register(
     "dedup_prefix_filter_pairs",
-    tags=("dedup", "jaccard", "prefix-filter"),
     bench=True,
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_JACCARD_CTE}
@@ -106,7 +105,6 @@ PREFIX_DF_CAP = 100
 
 @register(
     "dedup_prefix_filter_pairs_capped",
-    tags=("dedup", "jaccard", "prefix-filter", "capped"),
     bench=True,
     oracle=f"""
 WITH {_SHINGLES_CTE},
@@ -185,7 +183,6 @@ def dedup_prefix_filter_pairs_capped_q(
 
 @register(
     "dedup_containment_pairs",
-    tags=("dedup", "containment"),
     oracle=f"""
 WITH {_SHINGLES_CTE}, {_JACCARD_CTE}
 SELECT id_a, id_b,
@@ -213,7 +210,6 @@ def dedup_containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "inc_cdc_apply",
-    tags=("incremental", "cdc"),
     oracle="""
 WITH log AS (
   SELECT user_id,
@@ -281,7 +277,6 @@ def inc_cdc_apply_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_anomaly_zscore",
-    tags=("timeseries", "anomaly"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -355,7 +350,6 @@ _SAMPLE_K = 100
 
 @register(
     "corpus_sample_weighted",
-    tags=("corpus", "sampling"),
     oracle=f"""
 WITH w AS (
   SELECT doc_id, source, n_chars,

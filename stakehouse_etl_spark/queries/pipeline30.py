@@ -21,7 +21,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "dq_golden_record",
-    tags=("dq", "entity-resolution"),
     oracle="""
 WITH m AS (
   SELECT c_custkey // 3 AS match_key, c_custkey, c_mktsegment,
@@ -93,7 +92,6 @@ SESSION_HALF_US = 900_000_000  # ±15 min activity interval per event
 
 @register(
     "ts_max_concurrency",
-    tags=("timeseries", "intervals", "sweep"),
     oracle=f"""
 WITH iv AS (
   SELECT user_id,
@@ -170,7 +168,6 @@ ACF_LAGS = (1, 2, 3)
 
 @register(
     "ts_autocorr_lags",
-    tags=("timeseries", "stats", "seasonality"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -266,7 +263,6 @@ def ts_autocorr_lags_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_chi2_independence",
-    tags=("ml", "stats"),
     oracle="""
 WITH o AS (
   SELECT c_mktsegment AS seg, o_orderstatus AS st,

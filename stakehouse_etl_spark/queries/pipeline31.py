@@ -25,7 +25,6 @@ HIST_BUCKETS = 16
 # ---------------------------------------------------------------------------
 @register(
     "ts_path_trigrams",
-    tags=("timeseries", "sequence", "paths"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events
@@ -85,7 +84,6 @@ def ts_path_trigrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_trimmed_mean",
-    tags=("agg", "robust"),
     oracle=f"""
 WITH r AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -135,7 +133,6 @@ def a_trimmed_mean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_join_cardinality_estimate",
-    tags=("dq", "optimizer"),
     oracle=f"""
 WITH bounds AS (
   SELECT min(c_custkey) AS lo,
@@ -283,4 +280,4 @@ def _mk31(sql: str):
 
 
 for _name, _sql in _PORTABLE31.items():
-    register(_name, oracle=_sql, tags=("sql", "portable"))(_mk31(_sql))
+    register(_name, oracle=_sql)(_mk31(_sql))

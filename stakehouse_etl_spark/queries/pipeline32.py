@@ -23,7 +23,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "sql_param_binding",
-    tags=("sql", "serving", "security"),
     oracle="""
 SELECT o_orderpriority,
        CAST(count(*) AS BIGINT) AS n,
@@ -65,7 +64,6 @@ def sql_param_binding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "sec_masked_view",
-    tags=("security", "governance"),
     oracle="""
 SELECT c_custkey,
        md5(c_name) AS name_masked,
@@ -104,7 +102,6 @@ def sec_masked_view_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "k8_surrogate_keys",
-    tags=("K", "warehouse", "keys"),
     oracle="""
 SELECT c_custkey AS natural_key,
        CAST(row_number() OVER (ORDER BY c_mktsegment, c_custkey) AS BIGINT)
@@ -161,7 +158,6 @@ def k8_surrogate_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j23_late_dim_inferred",
-    tags=("join", "warehouse", "scd"),
     oracle="""
 WITH dim AS (
   SELECT c_custkey, c_mktsegment FROM customer WHERE c_custkey % 10 <> 0

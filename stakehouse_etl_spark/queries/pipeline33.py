@@ -21,7 +21,6 @@ SEED_MOD = 50  # parts with partkey % 50 == 0 are the seed set
 # ---------------------------------------------------------------------------
 @register(
     "graph_2hop_reach",
-    tags=("graph", "traversal"),
     oracle=f"""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 e AS (
@@ -104,7 +103,6 @@ def graph_2hop_reach_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "w12_dynamic_topk",
-    tags=("window", "W4"),
     oracle="""
 WITH lim AS (
   SELECT DISTINCT c_mktsegment AS seg,

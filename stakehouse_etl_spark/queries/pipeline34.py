@@ -19,7 +19,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ts_calendar_dim_build",
-    tags=("timeseries", "warehouse", "dim"),
     oracle="""
 WITH span AS (
   SELECT min(o_orderdate) AS d0, max(o_orderdate) AS d1 FROM orders
@@ -79,7 +78,6 @@ def ts_calendar_dim_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_fanout_inflation",
-    tags=("dq", "join"),
     oracle="""
 WITH direct AS (
   SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
@@ -144,7 +142,6 @@ def dq_fanout_inflation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "u7_except_all",
-    tags=("U2", "setops"),
     oracle="""
 SELECT c_nationkey AS k FROM customer
 EXCEPT ALL

@@ -66,7 +66,6 @@ g AS (
 # ---------------------------------------------------------------------------
 @register(
     "ml_ks_two_sample",
-    tags=("ml", "stats"),
     oracle=f"""
 WITH {_SEG_CTE},
 c AS (
@@ -137,7 +136,6 @@ def ml_ks_two_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_mannwhitney_u",
-    tags=("ml", "stats"),
     oracle=f"""
 WITH {_SEG_CTE},
 r AS (
@@ -209,7 +207,6 @@ def ml_mannwhitney_u_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_gini_region",
-    tags=("agg", "stats"),
     oracle="""
 WITH c AS (
   SELECT r_name,
@@ -298,7 +295,6 @@ def a_gini_region_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_decision_stump",
-    tags=("ml",),
     oracle="""
 WITH v AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -419,7 +415,6 @@ _BENFORD_CASE = "CASE digit " + " ".join(
 
 @register(
     "dq_benford_digits",
-    tags=("dq", "stats"),
     oracle=f"""
 WITH v AS (
   SELECT CAST(substr(CAST(CAST(round(o_totalprice * 100) AS BIGINT)
@@ -488,7 +483,6 @@ def dq_benford_digits_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_observe_metrics",
-    tags=("dq", "observability"),
     oracle="""
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT)
@@ -554,7 +548,6 @@ def dq_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_jaccard_similarity",
-    tags=("graph", "similarity"),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 deg AS (

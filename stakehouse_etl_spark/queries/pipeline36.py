@@ -44,7 +44,6 @@ def _avg_rank2(df: DataFrame, value: str, out: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_spearman_rho",
-    tags=("ml", "stats"),
     oracle="""
 WITH spend AS (
   SELECT o_custkey,
@@ -147,7 +146,6 @@ def ml_spearman_rho_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f14_variant_extract",
-    tags=("functions", "json"),
     oracle="""
 WITH v AS (
   SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k FROM events
@@ -209,7 +207,6 @@ e AS (
 
 @register(
     "graph_lpa_round",
-    tags=("graph",),
     oracle=f"""
 WITH {_LPA_EDGES},
 s1 AS (
@@ -308,7 +305,6 @@ def graph_lpa_round_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_mase_seasonal_naive",
-    tags=("timeseries", "ml"),
     oracle="""
 WITH span AS (
   SELECT min(o_orderdate) AS d0, max(o_orderdate) AS d1 FROM orders
@@ -405,7 +401,6 @@ def ts_mase_seasonal_naive_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_uniqueness_profile",
-    tags=("dq",),
     oracle="""
 WITH t AS (SELECT CAST(count(*) AS BIGINT) AS n_rows FROM orders),
 u AS (

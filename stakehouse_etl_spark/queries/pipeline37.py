@@ -120,11 +120,9 @@ def _run_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 for _name, _sql in _PORTABLE37.items():
     if _name == "sql_portable_recursive":
-        register(_name, oracle=_sql, tags=("sql", "portable"))(
-            _run_recursive
-        )
+        register(_name, oracle=_sql)(_run_recursive)
     else:
-        register(_name, oracle=_sql, tags=("sql", "portable"))(_mk37(_sql))
+        register(_name, oracle=_sql)(_mk37(_sql))
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +134,6 @@ _STOP_IN = ", ".join(f"'{w}'" for w in _RAKE_STOP)
 
 @register(
     "text_rake_keywords",
-    tags=("text", "nlp"),
     oracle=f"""
 WITH w AS (
   SELECT doc_id,

@@ -23,7 +23,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ml_lift_confidence_rules",
-    tags=("ml", "graph"),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 nb AS (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_baskets FROM li),
@@ -114,7 +113,6 @@ def ml_lift_confidence_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_referential_orphans",
-    tags=("dq",),
     oracle="""
 SELECT 'lineitem->orders' AS fk,
        CAST((SELECT count(*) FROM lineitem) AS BIGINT) AS n_child,
@@ -181,7 +179,6 @@ def dq_referential_orphans_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_simpsons_audit",
-    tags=("ml", "dq", "stats"),
     oracle="""
 WITH base AS (
   SELECT n_name,

@@ -28,7 +28,6 @@ from stakehouse_etl_spark.streaming.staging import land_batch, run_stream
 # ---------------------------------------------------------------------------
 @register(
     "stream_observe_metrics",
-    tags=("streaming", "dq", "observability"),
     oracle="""
 SELECT CAST(count(*) AS BIGINT) AS n_rows,
        CAST(sum(CAST(round("value" * 100) AS BIGINT)) AS BIGINT) AS sum_cents,
@@ -95,7 +94,6 @@ def stream_observe_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_theilsen_slope",
-    tags=("timeseries", "ml", "stats"),
     oracle="""
 WITH span AS (
   SELECT min(o_orderdate) AS dmin, max(o_orderdate) AS dmax FROM orders

@@ -22,7 +22,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "dq_constraint_report",
-    tags=("quality", "audit"),
     oracle="""
 WITH m AS (
   SELECT
@@ -77,7 +76,6 @@ def dq_constraint_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_rolling_distinct_users",
-    tags=("timeseries", "window", "distinct"),
     oracle="""
 WITH e AS (
   SELECT event_id, event_type, user_id, epoch_us(ts) AS ts_us FROM events
@@ -126,7 +124,6 @@ _TOKS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
 @register(
     "text_collocations_pmi",
-    tags=("text", "collocations"),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 bg AS (
@@ -210,7 +207,6 @@ def text_collocations_pmi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_quantize_int8",
-    tags=("similarity", "quantize"),
     oracle="""
 WITH e AS (
   SELECT vec_id, label,
@@ -271,7 +267,6 @@ _TOL_US = 7 * 24 * 3_600_000_000  # 7 days
 
 @register(
     "j12_asof_tolerance",
-    tags=("join", "asof"),
     oracle=f"""
 WITH o AS (
   SELECT o_custkey AS user_id, epoch_us(o_orderdate) AS ts_us,

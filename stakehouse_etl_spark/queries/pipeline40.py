@@ -22,7 +22,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "dedup_snm_pairs",
-    tags=("dedup", "blocking"),
     oracle="""
 WITH d AS (
   SELECT doc_id,
@@ -147,7 +146,6 @@ def dedup_snm_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_hhi_concentration",
-    tags=("agg", "stats"),
     oracle="""
 WITH c AS (
   SELECT n_name, o_custkey,
@@ -231,7 +229,6 @@ def a_hhi_concentration_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dedup_threshold_sweep",
-    tags=("dedup", "observability"),
     oracle="""
 WITH w AS (
   SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws

@@ -46,7 +46,6 @@ e{i + 1} AS (
 
 @register(
     "graph_kcore_peel",
-    tags=("graph",),
     oracle=f"""
 WITH {_KCORE_EDGES},
 {",".join(_peel_cte(i, 2) for i in range(3))},
@@ -94,12 +93,12 @@ def graph_kcore_peel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (footer-metadata row count, zero scan; ~3M pairs per task at
     # any sf) — what a 100 TB deployment does with
     # spark.sql.shuffle.partitions sized from catalog stats.
-    from stakehouse_etl_spark.io.sources import table_num_rows_or
+    from stakehouse_etl_spark.io.sources import table_num_rows
 
-    # Sized-or-default (ADVICE r9): a footerless/missing lineitem
-    # layout degrades to the 32-partition floor instead of crashing
-    # the sizing step before the scan even runs.
-    n_pairs_est = 2 * table_num_rows_or(sf_dir, "lineitem", 0)
+    # A footerless/missing lineitem layout sizes to 0, so the count
+    # degrades to the 32-partition floor instead of crashing the
+    # sizing step before the scan even runs.
+    n_pairs_est = 2 * table_num_rows(sf_dir, "lineitem")
     n_part = max(32, min(4096, n_pairs_est // 3_000_000))
     # The self-join's sort-merge also works per-partition slices that
     # grow with data at a fixed partition count — co-partition both
@@ -159,7 +158,6 @@ def _lang_terms_sql() -> str:
 
 @register(
     "ml_lang_entropy_by_source",
-    tags=("ml", "text", "stats"),
     oracle=f"""
 WITH g AS (
   SELECT source,
@@ -225,7 +223,6 @@ def ml_lang_entropy_by_source_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f15_month_end_clamp",
-    tags=("functions", "calendar"),
     oracle="""
 WITH d AS (SELECT DISTINCT o_orderdate::DATE AS day FROM orders),
 x AS (

@@ -25,7 +25,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "mm_bmp_histogram",
-    tags=("multimodal", "codec", "image"),
     oracle="""
 WITH d AS (
   SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h FROM documents
@@ -81,7 +80,6 @@ def mm_bmp_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "text_stopword_discovery",
-    tags=("text", "nlp"),
     oracle="""
 WITH w AS (
   SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS word
@@ -137,7 +135,6 @@ def text_stopword_discovery_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_weighted_median",
-    tags=("agg", "stats"),
     oracle="""
 WITH v AS (
   SELECT l_returnflag AS rf,

@@ -42,7 +42,6 @@ def _copurchase_directed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_assortativity",
-    tags=("graph", "stats"),
     oracle=f"""
 WITH {_LPA_EDGES},
 deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM e GROUP BY u),
@@ -120,7 +119,6 @@ def graph_assortativity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_modularity",
-    tags=("graph", "stats"),
     oracle=f"""
 WITH {_LPA_EDGES},
 s1 AS (
@@ -235,7 +233,6 @@ def graph_modularity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_cuped_adjustment",
-    tags=("ml", "stats", "experiment"),
     oracle="""
 WITH span AS (
   SELECT (CAST(min(epoch_us(o_orderdate)) AS BIGINT)

@@ -27,7 +27,6 @@ _POWER_C = "15.697759468698177"
 # ---------------------------------------------------------------------------
 @register(
     "ml_hash_bootstrap_means",
-    tags=("ml", "stats", "sampling"),
     oracle=f"""
 WITH x AS (
   SELECT o_orderkey AS id,
@@ -100,7 +99,6 @@ def ml_hash_bootstrap_means_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_mde_sample_size",
-    tags=("ml", "stats", "experiment"),
     oracle=f"""
 WITH x AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) // 1000 AS kc FROM orders
@@ -176,7 +174,6 @@ def ml_mde_sample_size_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "j25_asof_forward",
-    tags=("join", "asof", "window"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type FROM events

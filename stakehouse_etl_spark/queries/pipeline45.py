@@ -23,7 +23,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "w15_pareto_skyline",
-    tags=("window", "preference"),
     oracle="""
 WITH spend AS (
   SELECT o_custkey,
@@ -113,7 +112,6 @@ def w15_pareto_skyline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_label_window_split",
-    tags=("ml", "labels", "timeseries"),
     oracle="""
 WITH span AS (
   SELECT CAST(min(epoch_us(ts)) AS BIGINT) AS t0,
@@ -208,7 +206,6 @@ def ml_label_window_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "dq_overlap_profile",
-    tags=("dq", "reconcile"),
     oracle="""
 WITH a AS (SELECT DISTINCT o_custkey AS k FROM orders),
 b AS (SELECT DISTINCT user_id AS k FROM events),

@@ -22,7 +22,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ts_max_drawdown",
-    tags=("timeseries", "financial", "window"),
     oracle="""
 WITH v AS (
   SELECT user_id, epoch_us(ts) AS ts_us, event_id,
@@ -127,7 +126,6 @@ def _closure_run(spark: SparkSession, sf_dir: str) -> DataFrame:
 register(
     "sql_portable_recursive_closure",
     oracle=_CLOSURE_SQL,
-    tags=("sql", "portable", "graph"),
 )(_closure_run)
 _closure_run.__doc__ = """Recursive ANCESTOR CLOSURE over the custkey
 radix tree (parent = key div 10, ~5 levels) with the subtree spend

@@ -23,7 +23,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ml_shapley_two_feature",
-    tags=("ml", "explainability"),
     oracle="""
 WITH base AS (
   SELECT c_mktsegment AS seg, r_name AS reg,
@@ -138,7 +137,6 @@ def ml_shapley_two_feature_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_hits_2iter",
-    tags=("graph",),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
 h1 AS (SELECT o, CAST(count(*) AS BIGINT) AS h FROM li GROUP BY o),
@@ -235,7 +233,6 @@ _LLR = """
 
 @register(
     "text_keyness_llr",
-    tags=("text", "nlp", "stats"),
     oracle=f"""
 WITH tok AS (
   SELECT lang, unnest(string_split(text, ' ')) AS word FROM documents

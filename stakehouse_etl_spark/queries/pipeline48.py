@@ -24,7 +24,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ml_lorenz_curve_points",
-    tags=("ml", "stats"),
     oracle="""
 WITH spend AS (
   SELECT o_custkey,
@@ -119,7 +118,6 @@ def ml_lorenz_curve_points_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_record_highs",
-    tags=("timeseries", "extremes"),
     oracle="""
 WITH daily AS (
   SELECT o_orderdate::DATE AS day, CAST(count(*) AS BIGINT) AS c
@@ -179,7 +177,6 @@ def ts_record_highs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "f16_null_agg_kernel",
-    tags=("functions", "nulls", "contract"),
     oracle="""
 WITH v AS (
   SELECT CASE WHEN o_orderstatus = 'P' THEN NULL

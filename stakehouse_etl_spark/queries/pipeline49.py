@@ -21,7 +21,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "j29_asof_nearest",
-    tags=("join", "asof", "window"),
     oracle="""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type FROM events
@@ -119,7 +118,6 @@ def j29_asof_nearest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_cohens_kappa",
-    tags=("ml", "eval", "stats"),
     oracle=f"""
 WITH {_langid_pred_sql()},
 n_t AS (

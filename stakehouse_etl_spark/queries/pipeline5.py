@@ -26,7 +26,6 @@ _N_QUERIES = 50
 
 @register(
     "ml_knn_label_precision",
-    tags=("ml", "eval", "similarity"),
     oracle=f"""
 WITH e AS (SELECT vec_id, label, {_QUANT_EMB} AS qe FROM embeddings),
 n AS (SELECT vec_id, label, qe,
@@ -117,7 +116,6 @@ pred AS (SELECT doc_id, lang, {case} AS lang_pred FROM sc)
 
 @register(
     "ml_confusion_langid",
-    tags=("ml", "eval", "text"),
     oracle=f"""
 WITH {_langid_pred_sql()}
 SELECT lang AS actual, lang_pred AS predicted,
@@ -150,7 +148,6 @@ def ml_confusion_langid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "a_grouping_sets",
-    tags=("agg", "grouping-sets"),
     oracle="""
 SELECT r_name, c_mktsegment,
        CAST(grouping(r_name) AS BIGINT) * 2

@@ -20,7 +20,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "j30_null_join_matrix",
-    tags=("join", "nulls", "contract"),
     oracle="""
 WITH l AS (
   SELECT CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS k
@@ -98,7 +97,6 @@ def j30_null_join_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "a_fano_burstiness",
-    tags=("agg", "timeseries", "stats"),
     oracle="""
 WITH daily AS (
   SELECT o_orderdate::DATE AS day, CAST(count(*) AS BIGINT) AS c

@@ -64,7 +64,6 @@ def _idcg_expr() -> str:
 
 @register(
     "ml_ndcg_at_10",
-    tags=("ml", "eval", "similarity"),
     oracle=f"""
 WITH e AS (SELECT vec_id, label, {_QUANT_EMB} AS qe FROM embeddings),
 n AS (SELECT vec_id, label, qe,
@@ -170,7 +169,6 @@ def ml_ndcg_at_10_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "graph_clustering_coeff",
-    tags=("graph", "stats"),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 pr AS (

@@ -20,7 +20,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ts_lead_lag_xcorr",
-    tags=("timeseries", "stats"),
     oracle="""
 WITH base AS (
   SELECT o_orderdate::DATE AS day, c_mktsegment AS seg
@@ -166,7 +165,6 @@ def ts_lead_lag_xcorr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_ratio_delta_se",
-    tags=("ml", "stats", "experiment"),
     oracle="""
 WITH per_cust AS (
   SELECT o_custkey,

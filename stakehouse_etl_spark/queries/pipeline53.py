@@ -25,7 +25,6 @@ _N_QUERIES = 50
 # ---------------------------------------------------------------------------
 @register(
     "ml_pr_curve_at_k",
-    tags=("ml", "eval", "similarity"),
     oracle=f"""
 WITH e AS (SELECT vec_id, label, {_QUANT_EMB} AS qe FROM embeddings),
 n AS (SELECT vec_id, label, qe,
@@ -134,7 +133,6 @@ def ml_pr_curve_at_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "corpus_filter_attribution",
-    tags=("corpus", "dq", "dedup"),
     oracle="""
 WITH f AS (
   SELECT doc_id,

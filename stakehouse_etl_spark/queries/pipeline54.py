@@ -22,7 +22,6 @@ _CENSOR_US = 7 * 86400000000  # 7 days
 
 @register(
     "ml_kaplan_meier",
-    tags=("ml", "stats", "survival"),
     oracle=f"""
 WITH u AS (
   SELECT user_id,

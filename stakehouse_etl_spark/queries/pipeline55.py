@@ -25,7 +25,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "corpus_vocab_coverage_curve",
-    tags=("corpus", "text", "tokenizer"),
     oracle="""
 WITH tok AS (
   SELECT unnest(string_split(text, ' ')) AS word FROM documents
@@ -113,7 +112,6 @@ def corpus_vocab_coverage_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 @register(
     "ts_rfm_segmentation",
-    tags=("timeseries", "analytics", "segmentation"),
     oracle="""
 WITH sp AS (SELECT CAST(max(epoch_us(o_orderdate)) AS BIGINT) AS t_end
             FROM orders),

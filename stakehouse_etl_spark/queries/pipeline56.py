@@ -16,7 +16,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "ml_mutual_info_cells",
-    tags=("ml", "stats"),
     oracle="""
 WITH base AS (
   SELECT c_mktsegment AS seg, r_name AS reg

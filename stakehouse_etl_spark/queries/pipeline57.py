@@ -34,7 +34,6 @@ def _terms_sql() -> str:
 
 @register(
     "ml_kruskal_wallis",
-    tags=("ml", "stats"),
     oracle=f"""
 WITH cv AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents, c_mktsegment AS seg

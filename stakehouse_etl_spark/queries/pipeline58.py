@@ -22,7 +22,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "text_zipf_slope",
-    tags=("text", "corpus", "stats"),
     oracle="""
 WITH tok AS (
   SELECT unnest(string_split(text, ' ')) AS word FROM documents
@@ -111,7 +110,6 @@ def text_zipf_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_interarrival_cv",
-    tags=("timeseries", "stats"),
     oracle="""
 WITH e AS (
   SELECT user_id, epoch_us(ts) AS ts_us, event_id FROM events

@@ -19,7 +19,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "dedup_cluster_size_histogram",
-    tags=("dedup", "observability"),
     oracle="""
 WITH fp AS (
   SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f
@@ -76,7 +75,6 @@ def dedup_cluster_size_histogram_q(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 @register(
     "dq_crossfield_consistency",
-    tags=("dq",),
     oracle="""
 WITH c AS (
   SELECT (n_chars = len(text)) AS len_ok,

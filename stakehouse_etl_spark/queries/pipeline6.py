@@ -29,7 +29,6 @@ _BLOOM_BUCKETS = 4096
 
 @register(
     "j13_bloom_prefilter_join",
-    tags=("join", "bloom", "prefilter"),
     oracle="""
 SELECT o_orderstatus,
        CAST(count(*) AS BIGINT) AS n_orders,
@@ -85,7 +84,6 @@ def j13_bloom_prefilter_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "src_schema_evolution",
-    tags=("source", "schema-evolution"),
     oracle="""
 SELECT CASE WHEN o_orderkey % 2 = 0 THEN NULL ELSE o_orderpriority END
          AS priority,
@@ -143,7 +141,6 @@ def src_schema_evolution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_cdc_apply",
-    tags=("streaming", "cdc", "foreachBatch"),
     oracle="""
 WITH log AS (
   SELECT user_id,

@@ -44,7 +44,6 @@ cells AS (SELECT r, m, CAST(count(*) AS BIGINT) AS w FROM sc GROUP BY r, m)
 
 @register(
     "ml_kendall_tau_b",
-    tags=("ml", "stats"),
     oracle=f"""
 WITH {_RFM_CTE},
 cd AS (

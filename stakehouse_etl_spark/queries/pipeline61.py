@@ -19,7 +19,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ml_diff_in_diff",
-    tags=("ml", "stats", "experiment"),
     oracle="""
 WITH span AS (
   SELECT (CAST(min(epoch_us(o_orderdate)) AS BIGINT)
@@ -124,7 +123,6 @@ def ml_diff_in_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_eb_shrunk_means",
-    tags=("ml", "stats"),
     oracle="""
 WITH v AS (
   SELECT n_name,

@@ -17,7 +17,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "ml_f1_per_class",
-    tags=("ml", "eval"),
     oracle=f"""
 WITH {_langid_pred_sql()},
 cls AS (SELECT DISTINCT lang AS k FROM pred),

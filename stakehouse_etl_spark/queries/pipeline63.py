@@ -25,7 +25,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ts_vwap_monthly",
-    tags=("timeseries", "financial"),
     oracle="""
 WITH v AS (
   SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS BIGINT)
@@ -81,7 +80,6 @@ _CALIPER_KC = 100
 
 @register(
     "ml_caliper_match_att",
-    tags=("ml", "stats", "experiment"),
     oracle=f"""
 WITH per AS (
   SELECT c_custkey AS id,

@@ -21,7 +21,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "graph_adamic_adar",
-    tags=("graph", "ml"),
     oracle="""
 WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
 pr AS (
@@ -123,7 +122,6 @@ def graph_adamic_adar_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_brier_score",
-    tags=("ml", "eval"),
     oracle="""
 WITH v AS (
   SELECT o_orderkey, c_mktsegment AS seg,

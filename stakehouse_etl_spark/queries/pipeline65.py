@@ -19,7 +19,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "a_price_volume_mix",
-    tags=("agg", "financial", "analytics"),
     oracle="""
 WITH span AS (
   SELECT (CAST(min(epoch_us(o_orderdate)) AS BIGINT)
@@ -108,7 +107,6 @@ def a_price_volume_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_workday_adjusted_kpi",
-    tags=("timeseries", "calendar", "analytics"),
     oracle="""
 WITH span AS (
   SELECT min(o_orderdate)::DATE AS d0, max(o_orderdate)::DATE AS d1 FROM orders

@@ -19,7 +19,6 @@ _B = 20
 
 @register(
     "ml_permutation_test",
-    tags=("ml", "stats", "experiment"),
     oracle=f"""
 WITH v AS (
   SELECT o_custkey AS id,

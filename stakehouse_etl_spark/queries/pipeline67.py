@@ -20,7 +20,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ts_ship_lag_sla",
-    tags=("timeseries", "ops"),
     oracle="""
 WITH v AS (
   SELECT CAST((epoch_us(l_shipdate) - epoch_us(o_orderdate))
@@ -85,7 +84,6 @@ def ts_ship_lag_sla_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_psi_stability",
-    tags=("ml", "dq", "monitoring"),
     oracle="""
 WITH span AS (
   SELECT (CAST(min(epoch_us(o_orderdate)) AS BIGINT)

@@ -23,7 +23,6 @@ _K = 100
 # ---------------------------------------------------------------------------
 @register(
     "ml_hill_tail_index",
-    tags=("ml", "stats", "extremes"),
     oracle=f"""
 WITH v AS (
   SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders
@@ -103,7 +102,6 @@ def ml_hill_tail_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ts_seasonal_index_ma",
-    tags=("timeseries", "seasonality"),
     oracle="""
 WITH rev AS (
   SELECT CAST(year(o_orderdate) AS BIGINT) AS y,

@@ -20,7 +20,6 @@ _WEEK_US = 604800000000
 
 @register(
     "ts_growth_accounting",
-    tags=("timeseries", "analytics", "behavioral"),
     oracle=f"""
 WITH uw AS (
   SELECT DISTINCT user_id,

@@ -18,7 +18,6 @@ MICROS_PER_HOUR = 3_600_000_000
 
 @register(
     "u4_intersect_all",
-    tags=("setop", "intersect"),
     oracle="""
 SELECT l_partkey FROM lineitem WHERE l_suppkey % 2 = 0
 INTERSECT ALL
@@ -41,7 +40,6 @@ def u4_intersect_all_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ts_resample_ohlc",
-    tags=("timeseries", "resample"),
     oracle=f"""
 WITH e AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -95,7 +93,6 @@ def ts_resample_ohlc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "inc_agg_merge",
-    tags=("incremental", "ivm"),
     oracle="""
 SELECT user_id,
        CAST(sum(CAST(round("value" * 100) AS BIGINT)) AS BIGINT) AS total_cents,

@@ -21,7 +21,6 @@ from stakehouse_etl_spark.queries.registry import register
 # ---------------------------------------------------------------------------
 @register(
     "ts_forecast_wape_bias",
-    tags=("timeseries", "ml", "eval"),
     oracle="""
 WITH span AS (
   SELECT min(o_orderdate)::DATE AS d0, max(o_orderdate)::DATE AS d1 FROM orders
@@ -108,7 +107,6 @@ def ts_forecast_wape_bias_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "ml_ece_score",
-    tags=("ml", "eval"),
     oracle="""
 WITH v AS (
   SELECT c_mktsegment AS seg,

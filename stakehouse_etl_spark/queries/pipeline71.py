@@ -20,7 +20,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "a_abc_classification",
-    tags=("agg", "analytics", "ops"),
     oracle="""
 WITH rev AS (
   SELECT l_partkey,

@@ -15,7 +15,6 @@ from stakehouse_etl_spark.queries.registry import register
 
 @register(
     "ts_cagr_monthly",
-    tags=("timeseries", "financial"),
     oracle="""
 WITH rev AS (
   SELECT CAST(year(o_orderdate) * 100 + month(o_orderdate) AS BIGINT)

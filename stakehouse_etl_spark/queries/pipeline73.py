@@ -218,7 +218,6 @@ def _merge_islands(occ: DataFrame, k: int = SPAN_K) -> DataFrame:
 
 @register(
     "dedup_span_inventory",
-    tags=("dedup", "text", "spans"),
     bench=True,
     oracle=f"""
 WITH {_TOKS_CTE}, {_GRAMS_CTE},
@@ -387,7 +386,6 @@ def _scrub_tail(t: DataFrame, occ: DataFrame) -> DataFrame:
 
 @register(
     "corpus_span_scrub",
-    tags=("corpus", "dedup", "spans"),
     oracle=f"""
 WITH {_TOKS_CTE}, {_GRAMS_CTE},
 firsts AS (SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY gram),
@@ -450,7 +448,6 @@ def corpus_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_span_incremental",
-    tags=("dedup", "spans", "incremental"),
     oracle=f"""
 WITH {_TOKS_CTE}, {_GRAMS_CTE},
 ci AS (SELECT DISTINCT gram FROM g WHERE doc_id % 2 = 0),

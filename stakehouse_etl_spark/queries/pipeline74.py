@@ -67,7 +67,6 @@ FROM sc
 
 @register(
     "sim_hybrid_rrf_topk",
-    tags=("similarity", "retrieval", "fusion", "rrf"),
     oracle=_hybrid_rrf_sql(),
 )
 def sim_hybrid_rrf_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:

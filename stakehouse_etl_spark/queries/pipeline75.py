@@ -101,7 +101,6 @@ cov{sfx} AS (
 
 @register(
     "dedup_span_recall_eval",
-    tags=("dedup", "spans", "eval"),
     oracle=f"""
 WITH {_TOKS_CTE},
 {_covered_cte_sql(SPAN_K, "5")},
@@ -249,7 +248,6 @@ FROM t LEFT JOIN reb r USING (doc_id)
 
 @register(
     "stream_span_scrub",
-    tags=("dedup", "spans", "streaming", "incremental", "T6"),
     oracle=_STREAM_SPAN_SQL,
 )
 def stream_span_scrub_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -455,7 +453,6 @@ def _compact_gram_index(s, tbl: str, bno0: int, workdir: str) -> None:
 
 @register(
     "stream_span_scrub_bucketed",
-    tags=("dedup", "spans", "streaming", "incremental", "bucketing", "T6"),
     oracle=_STREAM_SPAN_SQL,
 )
 def stream_span_scrub_bucketed_q(

@@ -57,7 +57,6 @@ KEEP_MARGIN_MICRO = 100_000
 
 @register(
     "corpus_lm_perplexity",
-    tags=("corpus", "quality", "lm", "perplexity"),
     oracle=f"""
 WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
 ref AS (SELECT doc_id, toks FROM t WHERE doc_id % 2 = 0),

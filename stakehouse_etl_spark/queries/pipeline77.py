@@ -812,7 +812,6 @@ def _export_ledger(spark: SparkSession, sf_dir: str, stage_cut) -> DataFrame:
 
 @register(
     "pipeline_corpus_export",
-    tags=("pipeline", "corpus", "dedup", "quality", "mixing", "packing"),
     oracle=_export_sql(),
 )
 def pipeline_corpus_export_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -839,7 +838,6 @@ def pipeline_corpus_export_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_corpus_export_landed",
-    tags=("pipeline", "corpus", "dedup", "restart", "landing"),
     oracle=_export_sql(),
 )
 def pipeline_corpus_export_landed_q(

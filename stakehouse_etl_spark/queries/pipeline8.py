@@ -22,7 +22,6 @@ _DAY_US = 86_400_000_000
 
 @register(
     "j14_scd2_pit_join",
-    tags=("join", "scd2", "point-in-time"),
     oracle="""
 WITH s AS (
   SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -144,7 +143,6 @@ def j14_scd2_pit_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_ngram_novelty",
-    tags=("text", "novelty", "dedup"),
     oracle=f"""
 WITH {_SHINGLES_CTE},
 firsts AS (SELECT shingle, min(doc_id) AS first_doc FROM s2 GROUP BY shingle)

@@ -31,7 +31,6 @@ _COMPACTED_FILES = 4
 
 @register(
     "maint_compact_small_files",
-    tags=("maintenance", "compaction"),
     oracle=f"""
 SELECT CAST({_SMALL_FILES} AS BIGINT) AS n_files_before,
        CAST({_COMPACTED_FILES} AS BIGINT) AS n_files_after,
@@ -87,7 +86,6 @@ _HOUR_US = 3_600_000_000
 
 @register(
     "stream_append_eviction",
-    tags=("streaming", "watermark", "append", "late-data"),
     oracle=f"""
 SELECT (epoch_us(ts) // {_HOUR_US}) * {_HOUR_US} AS win_start_us,
        CAST(count(*) AS BIGINT) AS n_events
@@ -203,7 +201,7 @@ FROM e
 """
 
 
-@register("sim_pq_codebook", tags=("similarity", "pq", "quantize"), oracle=_pq_sql())
+@register("sim_pq_codebook", oracle=_pq_sql())
 def sim_pq_codebook_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization: split each 64-dim embedding into 8
     subvectors, assign each to the nearest of 4 fixed codebook

@@ -21,7 +21,7 @@ Float-determinism rules (so the driver's value-hash matches):
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -30,24 +30,22 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 
 @dataclass
 class QueryDef:
-    name: str
     fn: SparkQuery
     oracle: str | None = None
-    tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py headline suite
 
 
+# Keyed by query name, in registration order (the catalog's order).
 QUERIES: dict[str, QueryDef] = {}
 
 
 def register(
     name: str,
     oracle: str | None = None,
-    tags: tuple[str, ...] = (),
     bench: bool = False,
 ) -> Callable[[SparkQuery], SparkQuery]:
     def deco(fn: SparkQuery) -> SparkQuery:
-        QUERIES[name] = QueryDef(name=name, fn=fn, oracle=oracle, tags=tags, bench=bench)
+        QUERIES[name] = QueryDef(fn=fn, oracle=oracle, bench=bench)
         return fn
 
     return deco

@@ -201,7 +201,6 @@ def run_soak_cycles(
 
 @register(
     "pipeline_warehouse_soak",
-    tags=("pipeline", "incremental", "T1", "T2", "T3", "T5", "K1", "J3"),
     oracle=f"""
 WITH b AS (
   SELECT user_id % {N_KEYS} AS user_id,

@@ -38,7 +38,6 @@ MICROS_PER_HOUR = 3_600_000_000
 # ---------------------------------------------------------------------------
 @register(
     "stream_windowed_counts",
-    tags=("streaming", "window", "watermark"),
     oracle=f"""
 SELECT (epoch_us(ts) // {MICROS_PER_HOUR}) * {MICROS_PER_HOUR} AS win_start_us,
        event_type,
@@ -72,7 +71,6 @@ def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_stateful_income",
-    tags=("streaming", "state", "applyInPandasWithState", "W1"),
     oracle="""
 WITH v AS (
   SELECT user_id, epoch_us(ts) AS ts_us,
@@ -140,7 +138,6 @@ def stream_stateful_income(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "inc_income_3runs",
-    tags=("incremental", "T1", "T3", "T5"),
     oracle=f"""
 WITH b AS (
   SELECT user_id, epoch_us(ts) // {MICROS_PER_HOUR} AS epoch, max("value") AS balance
@@ -228,7 +225,6 @@ def inc_income_3runs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "mm_byte_features",
-    tags=("multimodal", "mapInPandas"),
     oracle="""
 WITH b AS (
   SELECT doc_id AS media_id, text,
@@ -256,7 +252,6 @@ def mm_byte_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm_resample",
-    tags=("multimodal", "mapInPandas", "resize"),
     oracle="""
 WITH b AS (
   SELECT doc_id AS media_id,
@@ -284,7 +279,6 @@ def mm_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mm_frame_sample",
-    tags=("multimodal", "mapInPandas", "frames"),
     oracle="""
 WITH starts AS (
   SELECT doc_id AS media_id, text,
@@ -318,7 +312,6 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_sliding_counts",
-    tags=("streaming", "window", "sliding"),
     oracle=f"""
 WITH e AS (
   SELECT epoch_us(ts) AS ts_us, event_type,
@@ -361,7 +354,6 @@ SESSION_GAP_US = 4 * MICROS_PER_HOUR
 
 @register(
     "stream_session_windows",
-    tags=("streaming", "session", "window"),
     oracle=f"""
 WITH e AS (
   SELECT user_id, epoch_us(ts) AS ts_us,
@@ -411,7 +403,6 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_static_enrich",
-    tags=("streaming", "J5", "join"),
     oracle="""
 SELECT c_mktsegment AS segment,
        CAST(count(*) AS BIGINT) AS n_events,
@@ -457,7 +448,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_stream_join",
-    tags=("streaming", "join", "watermark"),
     oracle=f"""
 SELECT a.user_id,
        epoch_us(a.ts) AS click_ts_us,
@@ -524,7 +514,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_dedup_exact",
-    tags=("streaming", "dedup", "state"),
     oracle="""
 SELECT DISTINCT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
          AS fingerprint
@@ -574,7 +563,6 @@ def stream_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_upsert_foreachbatch",
-    tags=("streaming", "K1", "T5", "sink"),
     oracle=f"""
 SELECT user_id, epoch_us(ts) // {MICROS_PER_HOUR} AS epoch,
        max("value") AS balance
@@ -645,7 +633,6 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "stream_funnel_stages",
-    tags=("streaming", "state", "funnel", "applyInPandasWithState"),
     oracle="""
 WITH s AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events

@@ -37,7 +37,6 @@ def _ps_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q2_min_cost_supplier",
-    tags=("J1", "J2", "A2", "bench"),
     oracle="""
 WITH ps AS (
   SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
@@ -108,7 +107,6 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q9_product_profit",
-    tags=("J2", "A3", "F7"),
     oracle="""
 SELECT n_name AS supp_nation, CAST(year(o_orderdate) AS BIGINT) AS o_year,
        sum(CAST(round((l_extendedprice * (1 - l_discount)
@@ -158,7 +156,6 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q11_important_stock",
-    tags=("A3", "J5", "P5"),
     oracle="""
 WITH ps AS (
   SELECT l_partkey AS p_key,
@@ -211,7 +208,6 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q12_shipmode_priority",
-    tags=("A3", "F5", "P4"),
     oracle="""
 SELECT l_linestatus AS shipmode,
        CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -254,7 +250,6 @@ def tpch_q12_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q15_top_supplier",
-    tags=("A1", "J5", "bench"),
     oracle="""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
@@ -304,7 +299,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q20_part_promotion",
-    tags=("J7", "A3", "F7"),
     oracle="""
 WITH shipped AS (
   SELECT l_partkey, l_suppkey,
@@ -365,7 +359,6 @@ def tpch_q20_part_promotion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @register(
     "tpch_q21_waiting_supplier",
-    tags=("J6", "J7", "A5"),
     oracle="""
 WITH l AS (
   SELECT l_orderkey, l_suppkey, l_returnflag

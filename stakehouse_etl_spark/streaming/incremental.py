@@ -110,13 +110,15 @@ def incremental_income_run(
     """
     state = sinks.read_existing(spark, state_path)
 
-    head = coupled_high_water_mark(
-        *([balances] + ([withdrawals] if withdrawals is not None else [])), time=time
-    )
-    if head is None:
-        return balances.limit(0)
-
-    work = balances.filter(F.col(time) <= head)
+    # T1 clamp at the withdrawals head. Every balances row is at or
+    # below the balances head, so this equals the clamp at
+    # min(balances head, withdrawals head) without a job over balances.
+    work = balances
+    if withdrawals is not None:
+        head = coupled_high_water_mark(withdrawals, time=time)
+        if head is None:
+            return balances.limit(0)
+        work = work.filter(F.col(time) <= head)
     if max_epochs_per_run is not None and state is not None:
         # T2: clamp each key's slice to max_epochs_per_run beyond its seed.
         work = work.join(state.select(key, "seed_epoch"), on=key, how="left").filter(
@@ -135,25 +137,26 @@ def incremental_income_run(
     )
 
     income = income.cache()
-    if income.limit(1).count() == 0:
-        income.unpersist()
-        return income
+    try:
+        if income.limit(1).count() == 0:
+            return income
 
-    _write_income(spark, income, income_path, key, time, epochs_per_bucket)
+        _write_income(spark, income, income_path, key, time, epochs_per_bucket)
 
-    # Advance runner state to the last computed row per key (carrying
-    # forward untouched keys' state unchanged).
-    new_state = (
-        income.groupBy(key)
-        .agg(
-            F.max(time).alias("seed_epoch"),
-            F.max_by("earnings", time).alias("seed_earnings"),
-            F.max_by("losses", time).alias("seed_losses"),
-            F.max_by("epochs_since_active", time).alias("seed_epochs_since_active"),
+        # Advance runner state to the last computed row per key (carrying
+        # forward untouched keys' state unchanged).
+        new_state = (
+            income.groupBy(key)
+            .agg(
+                F.max(time).alias("seed_epoch"),
+                F.max_by("earnings", time).alias("seed_earnings"),
+                F.max_by("losses", time).alias("seed_losses"),
+                F.max_by("epochs_since_active", time).alias("seed_epochs_since_active"),
+            )
         )
-    )
-    write_upsert(spark, new_state, state_path, keys=[key])
-    income.unpersist()
+        write_upsert(spark, new_state, state_path, keys=[key])
+    finally:
+        income.unpersist()
     return income
 
 

@@ -46,7 +46,6 @@ def _record(names: list[str], regressed: list[str]) -> dict:
             }
             for n in regressed
         },
-        "watch": {n: {"runs": [WORST] * bench.WATCH_RUNS} for n in bench.WATCH},
         "loadavg_start": [WORST] * 3,
         "loadavg_end": [WORST] * 3,
     }

@@ -17,7 +17,12 @@ Spark-free static scan of the repository's ``.py`` and ``.sh`` files:
 - every parameter with a non-string default of a package function that
   some call names is passed by some call, and every ``SPARK_GRAFT_*``
   variable the package reads is named outside the package;
-- every top-level import of a package module is read by that module.
+- every top-level import of a package module is read by that module;
+- every ``QueryDef`` field is read off a registered query outside the
+  registry;
+- no package ``try`` catches ``ImportError``: an arm that runs only
+  where an optional dependency is installed is an arm this environment
+  can never run.
 
 A reference is a Python identifier or attribute, an imported name, or
 a string constant equal to the name (``getattr`` / patch lookups and
@@ -28,9 +33,12 @@ files count by word.
 from __future__ import annotations
 
 import ast
+import dataclasses
 import functools
 import re
 from pathlib import Path
+
+from stakehouse_etl_spark.queries.registry import QueryDef
 
 ROOT = Path(__file__).resolve().parents[1]
 PKG = ROOT / "stakehouse_etl_spark"
@@ -291,3 +299,85 @@ def test_every_module_import_is_read():
                     if bound not in loaded:
                         unread.append(f"{path.relative_to(ROOT)}:{bound}")
     assert unread == [], "imported, never read:\n" + "\n".join(unread)
+
+
+def _querydef_reads(tree: ast.AST) -> set[str]:
+    """Attributes one module reads off a ``QueryDef``: ``QUERIES[...].f``,
+    or ``v.f`` where ``v`` is bound from ``QUERIES[...]``,
+    ``QUERIES.values()`` or the value of ``QUERIES.items()``. An
+    ``import QUERIES as x`` alias counts as ``QUERIES``."""
+    aliases = {"QUERIES"} | {
+        a.asname
+        for node in ast.walk(tree)
+        if isinstance(node, ast.ImportFrom)
+        for a in node.names
+        if a.name == "QUERIES" and a.asname
+    }
+
+    def is_entry(n: ast.expr) -> bool:
+        return (
+            isinstance(n, ast.Subscript)
+            and isinstance(n.value, ast.Name)
+            and n.value.id in aliases
+        )
+
+    bound: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.For, ast.comprehension)):
+            it, target = node.iter, node.target
+            if not (
+                isinstance(it, ast.Call)
+                and isinstance(it.func, ast.Attribute)
+                and isinstance(it.func.value, ast.Name)
+                and it.func.value.id in aliases
+            ):
+                continue
+            if it.func.attr == "items" and isinstance(target, ast.Tuple):
+                target = target.elts[-1]
+            elif it.func.attr != "values":
+                continue
+            if isinstance(target, ast.Name):
+                bound.add(target.id)
+        elif isinstance(node, ast.Assign) and is_entry(node.value):
+            bound |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+    return {
+        node.attr
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Attribute)
+        and isinstance(node.ctx, ast.Load)
+        and (
+            is_entry(node.value)
+            or (isinstance(node.value, ast.Name) and node.value.id in bound)
+        )
+    }
+
+
+def test_every_querydef_field_is_read():
+    """A registry field nothing reads is a value every registration
+    sets for no one: the ``QUERIES`` key already carries the name."""
+    read: set[str] = set()
+    for path in _repo_files(".py"):
+        if path != PKG / "queries" / "registry.py":
+            read |= _querydef_reads(ast.parse(path.read_text(), filename=str(path)))
+    unread = sorted(f.name for f in dataclasses.fields(QueryDef) if f.name not in read)
+    assert unread == [], "QueryDef fields read nowhere: " + ", ".join(unread)
+
+
+def test_no_optional_import_gate():
+    """Every module the package imports is installed where it runs: a
+    ``try`` that catches ``ImportError`` / ``ModuleNotFoundError``
+    selects an arm one of the two environments can never execute."""
+    gates = []
+    for path in sorted(PKG.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.Try, ast.TryStar)) and any(
+                h.type is not None
+                and any(
+                    isinstance(n, ast.Name)
+                    and n.id in ("ImportError", "ModuleNotFoundError")
+                    for n in ast.walk(h.type)
+                )
+                for h in node.handlers
+            ):
+                gates.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert gates == [], "optional-import gates:\n" + "\n".join(gates)

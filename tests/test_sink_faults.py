@@ -114,6 +114,23 @@ def test_income_run_over_unreadable_state_raises(spark, tmp_path):
     assert (_digest(state_path), _digest(income_path)) == before
 
 
+def test_income_run_over_unreadable_income_raises_and_releases_its_cache(spark, tmp_path):
+    """The income write fails after the run has cached its income rows:
+    the run must still release that cache."""
+    state_path, income_path = str(tmp_path / "state"), str(tmp_path / "income")
+    balances = spark.createDataFrame(
+        [(k, e, 32.0 + e + i / 10) for i, k in enumerate("abc") for e in (1, 2, 3)],
+        "bls_key string, epoch long, balance double",
+    )
+    incremental_income_run(spark, balances.filter("epoch <= 2"), state_path, income_path)
+    _truncate_data_files(income_path)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(Exception):
+        incremental_income_run(spark, balances, state_path, income_path)
+    assert persistent().size() == before
+
+
 def test_cdc_after_deleting_every_row_starts_afresh(spark, tmp_path):
     path = str(tmp_path / "t")
     cdc = dict(keys=["k"], seq_cols=["seq"], partition_cols=["pb"])

@@ -319,23 +319,3 @@ def test_stream_funnel_final_rows_equal_batch_funnel(spark, sf_dir):
         prev = per_user.get(r["user_id"], 0)
         assert r["funnel_stage"] >= prev
         per_user[r["user_id"]] = r["funnel_stage"]
-
-
-def test_tws_income_gated_on_protobuf(spark, sf_dir):
-    """transformWithStateInPandas needs google.protobuf for its state
-    runner; the query registers only where the dependency exists and
-    must then equal the batch oracle (the applyInPandasWithState twin
-    covers the semantics in this container)."""
-    import pytest
-
-    from stakehouse_etl_spark.queries.catalog import QUERIES
-    from stakehouse_etl_spark.queries.pipeline19 import (
-        HAS_PROTOBUF,
-        stream_income_tws_q,
-    )
-
-    assert ("stream_income_tws" in QUERIES) == HAS_PROTOBUF
-    if not HAS_PROTOBUF:
-        pytest.skip("google.protobuf not installed — TWS runner unavailable")
-    out = stream_income_tws_q(spark, sf_dir)
-    assert out.count() > 0

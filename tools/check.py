@@ -6,6 +6,14 @@ oracle on the same parquet, and compares row count + column set +
 floats, the max absolute deviation — the driver hashes values, so the
 target is EXACT equality, not tolerance.
 
+Every query's pandas frame also goes through the driver's own
+canonicalization first: columns sorted by name, then a raw
+``sort_values`` over all columns with no type coercion. ``normalize``
+stringifies object columns before sorting, so an unsortable cell (an
+array, say) passes the value comparison yet fails the driver; the raw
+sort's ``TypeError`` (or, for a lone array column, ``ValueError``) is
+reported as a failure here.
+
 Usage: python tools/check.py [sf_dir] [query ...]
 """
 
@@ -108,6 +116,13 @@ def main() -> int:
             failures += 1
             continue
         t_spark = time.time() - t0
+        try:
+            raw = spark_pd.reindex(sorted(spark_pd.columns), axis=1)
+            raw.sort_values(by=list(raw.columns), kind="mergesort")
+        except (TypeError, ValueError) as e:
+            print(f"FAIL {name}: driver canonicalization: {e}")
+            failures += 1
+            continue
         if q.oracle is None:
             print(f"ok?  {name}: rows={len(spark_pd)} (no oracle, rows-only) [{t_spark:.1f}s]")
             continue

@@ -12,14 +12,8 @@ cd "$(dirname "$0")/.."
 echo "== 1/15 unit + property tests =="
 python -m pytest tests/ -q
 
-echo "== 2/15 oracle gate, sf0.01 (the driver's rung) =="
+echo "== 2/15 oracle gate + driver canonicalization, sf0.01 (the driver's rung) =="
 python tools/check.py /root/testdata/sf0.01
-
-echo "== 2b/15 driver-canonicalizer simulation, FULL catalog at sf0.001 =="
-python tools/driver_canon_sim.py /root/testdata/sf0.001
-
-echo "== 2c/15 driver-canonicalizer simulation on the rotation sample, sf0.01 =="
-python tools/driver_canon_sim.py --priority /root/testdata/sf0.01
 
 echo "== 3/15 bench (sf0.1 headline suite) =="
 python bench.py
