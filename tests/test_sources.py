@@ -57,3 +57,11 @@ def test_num_rows_is_zero_without_footers(tmp_path):
     assert table_num_rows(str(tmp_path), "t") == 0
     shutil.rmtree(d)
     assert table_num_rows(str(tmp_path), "t") == 0
+
+
+def test_num_rows_or_degrades_not_crashes(tmp_path):
+    # Sizing call sites take the count as-is: a missing table degrades
+    # to 0 instead of crashing the query, a present one sizes exactly.
+    assert table_num_rows(str(tmp_path), "missing") == 0
+    _write_chunk(str(tmp_path / "t.parquet"), 7)
+    assert table_num_rows(str(tmp_path), "t") == 7
